@@ -19,6 +19,9 @@ semantically equivalent:
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -39,10 +42,11 @@ class Query:
     sql: str | None  # DuckDB-runnable oracle; None → rows-only check
     headline: bool = False  # included in bench.py
     streaming: bool = False  # runs a Structured Streaming job internally
-    priority: bool = False  # surfaced first to the driver's capped verify window
-    since: int = 0  # driver round the query was registered in (staleness clock
-    #                 for queries that have no CORRECTNESS row yet — a new
-    #                 query gets the same staleness grace as a green one)
+    #: Driver round the current implementation landed in. Registration
+    #: sets it, and a change to the query's Spark function or oracle SQL
+    #: bumps it to the latest CORRECTNESS round + 1, so the query leads
+    #: ``verify_order`` until the driver checks the new implementation.
+    since: int = 0
 
 
 REGISTRY: dict[str, Query] = {}
@@ -53,431 +57,73 @@ def query(
     sql: str | None = None,
     headline: bool = False,
     streaming: bool = False,
-    priority: bool = False,
     since: int = 0,
 ):
     def deco(fn):
-        REGISTRY[name] = Query(name, fn, sql, headline, streaming, priority, since)
+        REGISTRY[name] = Query(name, fn, sql, headline, streaming, since)
         return fn
 
     return deco
 
 
-#: Per-round verify rotation. The driver's correctness gate checks
-#: only the first ~50 entries of ``queries()``; this set names the
-#: queries that MUST get a fresh CORRECTNESS row this round, chosen by
-#: the rotation discipline (tests/test_registry_order.py pins it
-#: mechanically):
-#:   1. every query red / hash-failed / errored in the latest round,
-#:   2. every query whose implementation changed since its last
-#:      driver-green row,
-#:   3. the staleness tail — anything last verified ≥3 rounds ago
-#:      (never-verified queries tick from their ``since`` round; the
-#:      round-6 window still clears the 16 r3-greens that the OLD
-#:      2-round rule flagged — that rule was relaxed to 3 rounds in
-#:      round 6 because a 2-round cadence needs |catalog|/3 ≈ 56
-#:      slots per round, more than the 50-row window: structurally
-#:      infeasible at 166 queries, see tests/test_registry_order.py).
-#: Round 6 is a verification round (VERDICT r5 item 1): no red rows to
-#: re-run (r5 was 49/50 green + 1 rows-only-by-design), so the window
-#: = the 16 mandatory r3-green stale queries + 34 of the 60
-#: never-driver-checked round-5 registrations, prioritized
-#: headline-benched first, then the iterative/eval harnesses whose
-#: chained-CTE oracles are the most fragile mirrors (VERDICT item 5),
-#: then the TPC-H batch, then IO-merge/multimodal/text. Catalog
-#: growth is frozen until the never-checked backlog fits the window
-#: (test_registry_order.py::test_catalog_growth_frozen_while_backlog).
-#:
-#: Round 7 drained the never-checked backlog; rounds 8-9 ran the
-#: steady-state cadence (oldest-third of the catalog per round).
-#:
-#: ROUND 10 WINDOW. No red rows in r9 (49/50 green + 1
-#: rows-only-by-design). Mandatory: the 23 rows whose last driver
-#: check is r6 (<= latest(9) - 3 — exactly the ledger written at
-#: round-9 planning). Fill: the 24 alphabetically-first of the 46
-#: oldest (r7) greens — including enrich_broadcast_lookup, whose r9
-#: bench reading is driver-flagged and needs a fresh row next to the
-#: in-session 3-run audit (BASELINE.md). 47 named here; the balance
-#: of the 50-row window belongs to whatever ``priority=True`` /
-#: ``since=10`` registrations exist at round end — slack goes UNUSED
-#: if fewer land (round 9's mistake was ledgering promised
-#: registrations as fact; this comment makes no existence claim —
-#: count what is registered, not what is planned). Catalog note:
-#: round 10 retired three redundant queries (percentiles_by_segment,
-#: tumbling_hourly_counts, merge_upsert_events — each subsumed by a
-#: stronger sibling with the same oracle semantics), keeping the
-#: catalog inside the 4-round revisit arithmetic while the txlog
-#: features register their queries.
-#: ROUND 11 WINDOW. No red rows in r10 (50/50 green). Mandatory: the
-#: 22 rows whose last driver check is r7 (<= latest(10) - 3 — exactly
-#: the ledger written at round-10 planning). Fill: 26 slots — the 25
-#: alphabetically-first of the 49 live r8 greens plus
-#: ``top_terms_per_lang`` (implementation changed in-round: the
-#: linear single-pass tf/df rewrite must earn a driver row on the
-#: round it lands, so it displaces the 26th fill row). 48 named here;
-#: the
-#: remaining 2 window slots are reserved for ``priority=True``
-#: registrations/changed implementations landing this round — slack
-#: goes UNUSED if fewer land (count what is registered, not what is
-#: planned).
-#: ROUND 12 WINDOW. No red rows in r11 (50/50 green). Mandatory: the
-#: 24 rows whose last driver check is r8 (<= latest(11) - 3 — exactly
-#: the ledger written at round-11 planning; 10 of them are real
-#: streaming runs, the window's slowest rows). Fill: strictly
-#: oldest-first, no discretionary picks (the r11 forward-feasibility
-#: simulator demanded it): the 24 alphabetically-first of the 46 live
-#: r9 greens (48 r9 greens minus ann_recall_eval and
-#: minhash_banding_eval, retired this round — see below). 48 named
-#: here; the remaining 2 window slots went to the two
-#: ``priority=True`` round-12 registrations that LANDED:
-#: ``txlog_update_rename_cdf_events`` (E174, the rename→DML→feed
-#: lifecycle) and ``avro_roundtrip_agg`` (the hand-rolled OCF
-#: source/sink) — window = 48 + 2 = exactly the 50-row cap.
-#: LATE-ROUND AMENDMENT: a third feature landed in-round — generated
-#: columns (E175 ``txlog_generated_partition_events``), which must be
-#: verified on its landing round (the r11 ``top_terms_per_lang``
-#: precedent: a brand-new implementation earns its driver row the
-#: round it lands). Its priority slot displaces the alphabetically
-#: LAST r9 fill row (``hierarchy_depths_documents`` — the same
-#: displacement rule r11 applied to its 26th fill row), which moves
-#: to the round-13 mandatory ledger below. Window stays exactly 50.
-#: E175's registration is paired with a FOURTH round-12 retirement
-#: (promo_revenue_by_brand — its oracle semantics carried verbatim by
-#: q14_promo_revenue_ratio, see queries_extra.py), so the catalog
-#: closes the round at 169 with one slot of cadence slack, not at the
-#: 170 ceiling.
-#: SECOND LATE-ROUND AMENDMENT: a fourth feature cluster landed
-#: in-round — REORG APPLY (PURGE) + per-file bloom-filter indexes
-#: (E176 ``txlog_reorg_purge_events``, gating both verbs in one
-#: lifecycle row). Same displacement rule: its priority slot takes
-#: the now-alphabetically-last r9 fill row
-#: (``hard_negatives_embeddings`` → round-13 mandatory ledger below),
-#: and its registration is paired with a FIFTH retirement
-#: (asof_tolerance_last_click — the asof OPERATOR is gated by the
-#: frozen-floor headline asof_last_click; the tolerance delta is a
-#: post-join projection, pinned against brute force in
-#: tests/test_properties_events.py). Catalog stays at 169, window
-#: stays exactly 50.
-#: THIRD LATE-ROUND AMENDMENT: a fifth feature landed in-round —
-#: GENERATED ALWAYS AS IDENTITY columns (E177
-#: ``txlog_identity_merge_events``, gating assignment uniqueness,
-#: matched-key id preservation through MERGE, and the above-hwm
-#: fresh-draw guarantee as oracle-predictable counts). Its priority
-#: slot needs NO displacement: the paired SIXTH retirement
-#: (txlog_snapshot_read_orders — the plain snapshot read is the
-#: terminal step of every other txlog driver row incl. E177 itself;
-#: see queries_txlog.py) was a rule-mandatory ROTATION member, so the
-#: window arithmetic nets to 45 rotation + 5 priority = exactly 50.
-#: Catalog stays at 169.
-#: Catalog note: round 12 retired three redundant eval-harness rows
-#: whose arithmetic is carried by driver-gated siblings —
-#: ann_recall_eval (recall reduction lives on in ivf_recall_eval; the
-#: LSH bucketing under test is gated by similarity_lsh_embeddings),
-#: minhash_banding_eval (candidate generator gated by
-#: dedup_minhash_documents, exact-Jaccard truth by
-#: ngram_jaccard_pairs), and centroid_classifier_eval (centroid
-#: arithmetic gated by embedding_centroids_by_label, broadcast-argmin
-#: assignment by semantic_dedup_embeddings) — buying the slack the
-#: r11 verdict demanded before any round-12 feature registers a row
-#: (167 + new regs must stay ≤ 0.85 × 50 × 4 = 170, target ≤ 168).
-#:
-#: ROUND 13 WINDOW. No red rows in r12 (48/50 hash-green + the 2
-#: designed rows-only sketches). The r12 verdict's first item is
-#: structural: the round-14 forward simulation projected 70
-#: rule-mandatory rows (24 r9-stale + all 46 untouched r10 greens)
-#: against the 50-row window, because the r10/r11 cohorts (46/49
-#: rows) expire in consecutive rounds. The fix has two parts.
-#: (a) TEN evidence-preserving retirements (the E38/E123/E140/E156
-#: pattern: decorator removed, function + pytest pins kept, SURVEY §2
-#: row updated), each with its named carrier:
-#:   r9-stale, verify-or-retire — intersect_active_nations (distinct
-#:   set-op plan gated by set_except_nations on the same tables +
-#:   semi_anti_customers' leftsemi/leftanti physical shape),
-#:   running_total_orders (ordered partitioned windows gated by
-#:   window_rank_per_group, RANGE-frame running state by
-#:   rolling_7d_active_users, cents-exact sums by q1_pricing_summary),
-#:   length_histogram_documents (fixed-width bucket histogram is the
-#:   §2 binned_agg core, green every round; the log-bucket +
-#:   window-over-buckets shape on documents is vocab_zipf_histogram);
-#:   r10 — quota_sample_per_source (grouped_topk operator gated by
-#:   top_k_orders; sampling family by sample_stratified / weighted /
-#:   mixture rows), readability_scores_documents (pure-expression
-#:   regex-count scoring gated by text_stats_documents +
-#:   text_quality_by_lang), benford_first_digit_orders
-#:   (observed-vs-expected distribution arithmetic gated by
-#:   chisq_event_value_independence; tiny-key map-side-combined counts
-#:   by q1), event_type_runs (gaps-and-islands two-window island id
-#:   gated by sessionize_events), interarrival_stats_users (lag-gap
-#:   deltas gated by sessionize_events + debounce_events; moment sums
-#:   by column_stats_lineitem), rare_token_quality_documents
-#:   (df-threshold + broadcast join-back doc scoring gated by
-#:   vocab_oov_rate_documents — same machinery, opposite threshold
-#:   direction — and keywords_per_document);
-#:   r11 — ntile_customer_quartiles (two_phase_rank + ntile_from_rank
-#:   gated by rfm_segmentation_customers, which runs THREE rank
-#:   passes and is r13-mandatory; the no-full-sort plan pin in
-#:   tests/test_plans.py keeps running on the undecorated function).
-#: Catalog: 169 − 10 = 159 before this round's registrations
-#: (steady-state demand 39.75 slots/round, 20% slack).
-#: (b) The window itself: 21 mandatory r9 survivors + 3
-#: changed-implementation rows (txlog_merge_read_events — the
-#: merge_upsert all-NULL-bounds emptiness fix, ADVICE r12 high;
-#: txlog_restore_read_orders — the RESTORE identity-hwm log walk,
-#: ADVICE r12 low; multimodal_decode_shapes — real JPEG decode behind
-#: the pluggable decoder, VERDICT item 5) + the 24 alphabetically-
-#: first of the 39 remaining live r10 greens (txlog_restore_read_
-#: orders is the 25th r10 row, already in as changed-impl;
-#: enrich_broadcast_lookup rides the fill window next to its drift
-#: audit, VERDICT item 6) = 48 named below. The remaining 2 slots
-#: belong to the two planned priority=True round-13 registrations
-#: (txlog_ivm_refresh_orders — VERDICT item 3; a SQL-front-door
-#: INSERT OVERWRITE lifecycle row — VERDICT item 4) IF they land;
-#: slack goes unused otherwise (count what is registered). Forward
-#: check: live r10 rows left outside this window = 15 → round-14
-#: mandatory ≈ 15, far under the cap.
-#: LATE-ROUND AMENDMENT: a third feature landed in-round — the SQL
-#: front door's CREATE TABLE AS SELECT / CREATE OR REPLACE TABLE
-#: (E180 ``txlog_ctas_replace_orders``, gating creation-from-query,
-#: the atomic schema-CHANGING replacement via overwriteSchema, and
-#: schema-correct time travel of the replaced generation). Per the
-#: r11/r12 displacement precedent a landed feature earns its driver
-#: row on its landing round: its priority slot displaces the
-#: alphabetically LAST r10 fill row (``q14_promo_revenue_ratio`` —
-#: moves to the round-14 mandatory ledger below). Window stays
-#: exactly 50 = 47 rotation + 3 priority.
-#:
-#: ROUND 14 WINDOW. No red rows in r13 (50/50 hash-green — the first
-#: all-green window with no rows-only entries). The r13 verdict's
-#: first item is structural: the landed CORRECTNESS_r13 makes the
-#: round-14 rule-mandatory set 63 queries (16 last-green r10 + 47
-#: last-green r11) against the 50-row window — infeasible no matter
-#: how the window is planned (both rotation watchdogs failed on the
-#: closing state). The fix, per the verdict: FOURTEEN
-#: evidence-preserving retirements from the r11 cohort (the
-#: E38/E47/E55/E56 pattern — decorator removed, function + pytest
-#: pins kept, SURVEY §2 row updated), each with named carriers:
-#:   approx_percentiles_by_segment (rows-only by design, zero hash
-#:   evidence lost; exact path gated by percentiles_by_segment_
-#:   scalable, sketch accuracy pinned in tests/test_extra.py),
-#:   inverted_index_documents (tokenize→df/tf stats gated by
-#:   bm25_topk_documents + top_terms_per_lang; bounded-postings rank
-#:   cut by top_k_orders),
-#:   mixture_resample_documents (content-hash sampling gate by
-#:   sample_stratified_documents + train_val_test_split_documents;
-#:   copy-count explode pinned in tests/test_sampling.py),
-#:   multimodal_byte_features (the Arrow mapInPandas plumbing gated
-#:   by the STRONGER decode rows multimodal_decode_shapes /
-#:   multimodal_phash_dedup / multimodal_resize_thumbnails),
-#:   quantile_normalize_events + trimmed_mean_by_type (both ride the
-#:   E77 two-phase rank gated by percentiles_by_segment_scalable +
-#:   rfm_segmentation_customers; finishes pinned in pytest),
-#:   quantize_embeddings_int8 (narrow array projection gated by
-#:   pca_power_iteration_embeddings + hard_negatives_embeddings;
-#:   rounding arithmetic pinned in tests/test_similarity.py),
-#:   revenue_share_of_region (4-table exact join revenue by
-#:   q5_local_supplier_volume; broadcast-totals ratio finish by
-#:   chisq_event_value_independence),
-#:   rolling_hourly_user_counts (numeric RANGE frame gated by
-#:   rolling_7d_active_users; hour bucketing by hourly_peaks_events),
-#:   rollup_revenue (ROLLUP = grouping-sets sugar over the same
-#:   Expand + hash agg gated by grouping_sets_revenue — the
-#:   cube_order_stats argument from round 11),
-#:   skew_report_lineitem (generator unpivot + two-level counts by
-#:   column_stats_lineitem + distinct_users_per_type; the salting
-#:   remedy by skew_salted_event_counts),
-#:   tfidf_doc_similarity_pairs (shingle pair self-join by
-#:   ngram_jaccard_pairs; df broadcast by bm25/vocab_oov; salted
-#:   top-k by top_k_orders),
-#:   txlog_dv_cdf_partitioned_events (dv by txlog_dv_delete_read_
-#:   events, cdf by txlog_update_rename_cdf_events + txlog_cdf_
-#:   stream_events, partitioning by txlog_generated_partition_events;
-#:   the interaction legs pinned in tests/test_txlog.py — also the
-#:   catalog's 3rd-most-expensive row),
-#:   zorder_key_events (Morton layout consumer gated by txlog_time_
-#:   travel_orders' compact(layout_key) lifecycle, in this window;
-#:   interleave arithmetic pinned in tests/test_properties_events.py
-#:   + tests/test_txlog.py).
-#: Catalog: 162 − 14 = 148 (steady-state demand 37/round, 26% slack
-#: under the 0.85×50 ceiling).
-#: FORWARD SMOOTHING (same round, after the window landed): the r16
-#: projection was exactly 50 (the whole r13 cohort) — feasible but
-#: zero slack for changed implementations. THREE more retirements
-#: from the r12 cohort cut the r15 mandatory set to 45, and the 5
-#: freed r15 slots should pull r13-cohort rows forward so r16 lands
-#: ≈45 too:
-#:   zscore_outliers_events (the algebraized DECIMAL z-score gate is
-#:   driver-gated verbatim by seasonal_anomaly_events — same
-#:   (n·v−S)² > k²(n·SS−S²) integer algebra, same broadcast-stats
-#:   second pass; moments by column_stats_lineitem, robust outliers
-#:   by mad_outliers_events),
-#:   source_similarity_minhash (shingle_hashes32 + the (a·h+b) mod p
-#:   family gated by the headline dedup_minhash_documents; the
-#:   per-source MIN reduction is associative algebra on a
-#:   |sources|-row frame),
-#:   full_outer_nation_presence (aggregate-then-full-outer +
-#:   zero-fill gated by corpus_diff_documents at doc_id grain and
-#:   streaming_attribution_outer for the stream-stream form).
-#: Catalog closes at 145 (demand 36.25/round, 28% slack).
-#: The window itself: the 16 rule-mandatory r10 rows (front-loaded —
-#: both the 3-round rule and the hard ceiling demand them) + ALL 33
-#: surviving r11 rows (so the r11 cohort zeroes out and round 15's
-#: mandatory set is exactly the live r12 rows (48 at window-planning
-#: time; 45 after the same-round forward-smoothing retirements below)
-#: — the forward
-#: simulator passes with 2 slots of slack) + 1 changed-implementation
-#: row: txlog_time_travel_orders (r12-green, rerouted through the SQL
-#: front door's VERSION AS OF grammar this round — a landed feature
-#: earns its driver row on its landing round). The NOT NULL lifecycle
-#: evidence (r13 verdict item 3) rides txlog_dv_delete_read_events,
-#: already mandatory here — no extra slot. Round-15 plan ledger: the
-#: live r12 rows (45 post-smoothing; includes the two oldest real
-#: streaming runs,
-#: streaming_dedup_events + streaming_attribution_outer — the r13
-#: verdict's item-7 cadence ask lands there by construction); round
-#: 16's projected set is the 50 r13 rows, exactly at cap — round-15
-#: planning should retire 2-4 more from the r12/r13 cohorts to buy
-#: changed-implementation slack.
-#:
-#: ROUND 15 WINDOW. No red rows in r14 (50/50 hash-green, zero err).
-#: The rotation debt is cleared (r14 verdict: "routine maintenance")
-#: — the mandatory set is exactly the 45 live r12-cohort rows
-#: (recomputed from CORRECTNESS_r01..r14; the two designed rows-only
-#: sketches approx_distinct_users_per_type + similarity_topk_
-#: pandas_udf are among them and get their rows-only rows). The 5
-#: free slots pull r13-cohort rows FORWARD (r14 verdict item 1:
-#: smooth round-16 to ≤45 mandatory), chosen so every one doubles as
-#: changed-implementation coverage for this round's code motion:
-#:   txlog_restore_read_orders — REROUTED (r14 verdict item 2): the
-#:   restored state is now read through a SQL `CREATE TABLE ...
-#:   SHALLOW CLONE ... VERSION AS OF` target — the clone read path's
-#:   (absPath resolution, reader-feature gate) first driver row;
-#:   txlog_insert_overwrite_orders + txlog_ctas_replace_orders —
-#:   their INSERT/CTAS runners now time-travel-rewrite the query
-#:   BODY (advisor r14: `INSERT INTO t SELECT ... FROM s VERSION AS
-#:   OF n` used to die in Catalyst);
-#:   txlog_merge_read_events — merge/append sit on the schema-subset
-#:   gate made case-insensitive this round (advisor r14);
-#:   scan_prune_filter — cheap S2/S4 pushdown evidence refresh.
-#: Forward check: after r15 verifies these 50, round-16's mandatory
-#: set is the 45 remaining r13-cohort rows — 5 slots of slack.
-#: Catalog stays at 145 (r14 verdict item 6: ± evidence-replacing
-#: swaps only; demand 36.25/round, 28% slack).
-#: ROUND 16 WINDOW (optimization round 2). No red rows in r15 (48/50
-#: hash-green + the 2 designed rows-only sketches). The r15 verdict's
-#: item 1 is the window's first constraint: 12-15 queries whose
-#: implementations changed in the r15 optimization commits landed
-#: AFTER the r15 window froze and have no driver row on the new code —
-#: this window must lead with them. The second constraint is this
-#: round's own code motion: the txlog read-path rework (log-schema
-#: reads engine-wide + the fused dv detection) changes the
-#: implementation of EVERY TxTable-backed query, so all 15 of those
-#: earn rows here too. Composition:
-#:   - 21 changed-implementation rows OUTSIDE the r13 cohort: the 7
-#:     r15-debt rows last green r14 (bm25_topk, semantic_dedup,
-#:     geo_aggregate, q1, ngram_jaccard, txlog_cdf_stream,
-#:     streaming_cdc_merge), the 12 further TxTable rows changed by
-#:     this round's txlog rework (compact_small_files + 11 txlog_*),
-#:     and 2 rows touched by this round's planned optimizations
-#:     (funnel_conversion_events — scale-conditional materialization,
-#:     VERDICT item 6; similarity_ivf_embeddings — the bounded
-#:     _centroid_array, VERDICT item 5).
-#:   - 29 r13-cohort rows (of 45): the 10 that are themselves
-#:     changed-implementation (the 8 r15-debt cohort rows + this
-#:     round's rfm_segmentation + copurchase targets) + the 17
-#:     alphabetically-first of the untouched remainder.
-#: LATE-ROUND AMENDMENT (the r12 displacement precedent): the
-#: duplicate-scan sweep surfaced two more changed implementations —
-#: q15_top_supplier and skyline_orders (scale-conditional
-#: materialization of their two-consumer aggregate frames). A changed
-#: implementation earns its driver row on its landing round, so they
-#: displace the two alphabetically-LAST r13 fill rows
-#: (jsonl_roundtrip_agg, mmr_rerank_embeddings → the round-17
-#: mandatory ledger). Window stays exactly 50.
-#: The 18 deferred r13 rows (multimodal_* ×4, pagerank, pivot,
-#: q5/q10/q12/q13/q17, quality_percentile_filter, retention_cohorts,
-#: seasonal_anomaly, trend_slope, vocab_oov, jsonl_roundtrip_agg,
-#: mmr_rerank_embeddings) are NOT rule-mandatory at r16 planning
-#: (age 3 at latest=15; the 3-round rule bites at latest−3 = 12) and
-#: become exactly round 17's mandatory set — 18 rows, far under the
-#: cap, so the forward simulation passes. Round 17 planning MUST lead
-#: with them (the rotation watchdogs will demand it the moment
-#: CORRECTNESS_r16 lands).
-ROTATION: set[str] = {
-    # -- r15-debt changed implementations outside the r13 cohort
-    #    (VERDICT r15 item 1) --
-    "bm25_topk_documents",
-    "geo_aggregate_lineitem",
-    "ngram_jaccard_pairs",
-    "q1_pricing_summary",
-    "semantic_dedup_embeddings",
-    "streaming_cdc_merge_events",
-    "txlog_cdf_stream_events",
-    # -- TxTable rows changed by this round's txlog read-path rework
-    #    (log-schema reads + fused dv detection) --
-    "compact_small_files",
-    "txlog_changes_events",
-    "txlog_ctas_replace_orders",
-    "txlog_dv_delete_read_events",
-    "txlog_generated_partition_events",
-    "txlog_identity_merge_events",
-    "txlog_insert_overwrite_orders",
-    "txlog_merge_read_events",
-    "txlog_reorg_purge_events",
-    "txlog_restore_read_orders",
-    "txlog_time_travel_orders",
-    "txlog_update_rename_cdf_events",
-    # -- rows touched by this round's planned optimizations --
-    "funnel_conversion_events",
-    "q15_top_supplier",
-    "similarity_ivf_embeddings",
-    "skyline_orders",
-    # -- r13-cohort rows that are themselves changed implementations --
-    "binned_agg_max_2d",
-    "copurchase_part_pairs",
-    "ivf_recall_eval",
-    "keywords_per_document",
-    "levenshtein_near_pairs",
-    "lm_bigram_score_documents",
-    "mad_outliers_events",
-    "pca_power_iteration_embeddings",
-    "rfm_segmentation_customers",
-    "txlog_ivm_refresh_orders",
-    # -- r13-cohort fill, alphabetically-first of the untouched
-    #    remainder (the rest defer to round 17's mandatory set) --
-    "checksum_orders_table",
-    "chisq_event_value_independence",
-    "collate_union_all",
-    "column_stats_lineitem",
-    "data_quality_checks",
-    "distinct_users_per_type",
-    "enrich_broadcast_lookup",
-    "event_diversity_users",
-    "geo_radius_join_lineitem",
-    "grouping_sets_revenue",
-    "hard_negatives_embeddings",
-    "hierarchy_depths_documents",
-    "hourly_peaks_events",
-    "impute_group_median_events",
-    "incremental_agg_merge_orders",
-    "interval_coverage_users",
-    "json_extract_events",
-}
+#: Directory holding the driver's ``CORRECTNESS_r<N>.json`` files (the
+#: repository root, one level above this package).
+HISTORY_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def effective_priority(q: Query) -> bool:
-    """True iff the query must sit inside the driver's capped verify
-    window this round: rotated in (ROTATION) or flagged at
-    registration (``priority=True`` — convenience for brand-new
-    queries added mid-round)."""
-    return q.priority or q.name in ROTATION
+def correctness_history() -> dict[str, dict[int, dict]]:
+    """``{query: {round: row}}`` from every ``CORRECTNESS_r<N>.json``
+    in ``HISTORY_DIR``."""
+    hist: dict[str, dict[int, dict]] = {}
+    for path in glob.glob(os.path.join(HISTORY_DIR, "CORRECTNESS_r*.json")):
+        rnd = int(os.path.basename(path)[len("CORRECTNESS_r") : -len(".json")])
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                hist.setdefault(name, {})[rnd] = row
+    return hist
+
+
+def row_failed(row: dict) -> bool:
+    """A driver row that is red, hash-failed or errored. ``no_oracle``
+    (the rows-only marker of a query without SQL) is not a failure."""
+    return (
+        row.get("err") not in (None, "no_oracle")
+        or row.get("rows_match") is False
+        or row.get("hash_match") is False
+    )
+
+
+def verify_order(registry: dict[str, Query], history: dict[str, dict[int, dict]]) -> list[str]:
+    """The names of ``registry`` in driver-verify order, computed from
+    the CORRECTNESS ``history``. The driver checks only a capped prefix
+    of ``queries()``, so the queries that most need a fresh row lead:
+
+    1. queries red, hash-failed or errored in the latest round;
+    2. queries with no row on their current implementation (no row at
+       a round ≥ ``Query.since``), oldest ``since`` first;
+    3. everything else, oldest last-verified round first.
+
+    Ties break by name, so the order is a deterministic permutation.
+    Filling the window oldest-first keeps every query inside the
+    3-round verify cadence whenever the catalog fits it."""
+    latest = max((r for rows in history.values() for r in rows), default=0)
+
+    def key(q: Query) -> tuple[int, int, str]:
+        rows = history.get(q.name, {})
+        if latest in rows and row_failed(rows[latest]):
+            return (0, latest, q.name)
+        current = [r for r in rows if r >= q.since]
+        if not current:
+            return (1, q.since, q.name)
+        return (2, max(current), q.name)
+
+    return [q.name for q in sorted(registry.values(), key=key)]
 
 
 def ordered_registry() -> dict[str, Query]:
-    """The catalog in driver-verify order: this round's ROTATION (+
-    any ``priority=True`` registrations) first, stable within each
-    class; long-green queries take the tail."""
-    items = sorted(REGISTRY.items(), key=lambda kv: not effective_priority(kv[1]))
-    return dict(items)
+    """The catalog in driver-verify order (``verify_order`` over the
+    committed CORRECTNESS history, read on each call)."""
+    return {name: REGISTRY[name] for name in verify_order(REGISTRY, correctness_history())}
 
 
 #: 1 h funnel step shared by the batch funnel (E82), the streaming

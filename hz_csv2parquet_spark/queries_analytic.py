@@ -9,7 +9,7 @@ and a TPC-H Q19-shaped disjunctive-predicate join (OR-of-ANDs that
 still pushes to the scans).
 
 Every query pairs the Spark plan with a construction-mirrored DuckDB
-oracle; driver verification is scheduled by the ROTATION set in
+oracle; driver verification is scheduled by ``verify_order`` in
 queries.py (tests/test_registry_order.py pins the discipline).
 """
 

@@ -257,7 +257,6 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY s_nationkey
     """,
     since=5,
-    priority=False,  # r11-verified post-rewrite; rotated out of round 12
 )
 def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECTIVE small-file compaction (round 11, VERDICT r10 #3) —

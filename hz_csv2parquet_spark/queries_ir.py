@@ -1141,16 +1141,6 @@ def column_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 
-def _z_sql_interleave(a: str, b: str, bits: int = 16) -> str:
-    """DuckDB mirror of the bit-interleave: z = Σ_i ((a>>i & 1) <<
-    (2i+1)) | ((b>>i & 1) << 2i)."""
-    parts = []
-    for i in range(bits):
-        parts.append(f"((({a} >> {i}) & 1) << {2 * i + 1})")
-        parts.append(f"((({b} >> {i}) & 1) << {2 * i})")
-    return " | ".join(parts)
-
-
 # RETIRED (round 14, the r13-verdict cadence re-plan): the Morton
 # key is a pure narrow integer expression whose production consumer —
 # the txlog layout rewrite ``TxTable.compact(layout_key=...)`` — is

@@ -464,26 +464,6 @@ _MIX_WEIGHTS = {"src0": 2.5, "src1": 0.25, "src2": 1.5, "src3": 0.0}
 _MIX_DEFAULT = 1.0
 
 
-def _sql_mixture_counts() -> str:
-    """CASE expressions mirroring operators.sampling.mixture_resample:
-    integer floor + integer u32 threshold per stratum, same literals
-    both engines (computed once here, in Python)."""
-    floors = " ".join(
-        f"WHEN '{v}' THEN {int(w)}" for v, w in sorted(_MIX_WEIGHTS.items())
-    )
-    fthrs = " ".join(
-        f"WHEN '{v}' THEN {int((w - int(w)) * 2**32)}"
-        for v, w in sorted(_MIX_WEIGHTS.items())
-    )
-    u32 = _sql_u32("CAST(doc_id AS VARCHAR)", _MIX_SEED)
-    return (
-        f"CASE source {floors} ELSE {int(_MIX_DEFAULT)} END"
-        f" + CASE WHEN CAST({u32} AS BIGINT) < "
-        f"CASE source {fthrs} ELSE {int((_MIX_DEFAULT - int(_MIX_DEFAULT)) * 2**32)} END"
-        f" THEN 1 ELSE 0 END"
-    )
-
-
 # RETIRED (round 14, the r13-verdict cadence re-plan): the
 # deterministic content-hash gate that decides every copy is the
 # machinery ``sample_stratified_documents`` and
@@ -1069,40 +1049,6 @@ def vocab_oov_rate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 # pairwise source similarity via per-source MinHash signatures (E90)
 # =====================================================================
-
-
-def _sql_source_similarity(num_hashes: int = 16) -> str:
-    from .operators.dedup import MINHASH_P, _mh_coeffs
-
-    mins = []
-    for i in range(num_hashes):
-        a, b = _mh_coeffs(i)
-        mins.append(
-            f"MIN(list_min(list_transform(h32, h -> ({a} * h + {b}) % {MINHASH_P})))"
-            f" AS m{i}"
-        )
-    agree = " + ".join(
-        f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(num_hashes)
-    )
-    mins_sql = ",\n             ".join(mins)
-    return f"""
-    WITH sh32 AS (
-      SELECT source,
-             list_transform({_sql_shingles("text")}, x ->
-               CAST(CAST(concat('0x', substring(md5(x), 1, 8)) AS UBIGINT) AS BIGINT))
-               AS h32
-      FROM documents
-    ),
-    sig AS (
-      SELECT source,
-             {mins_sql}
-      FROM sh32 GROUP BY source
-    )
-    SELECT a.source AS source_a, b.source AS source_b,
-           CAST({agree} AS BIGINT) AS n_agree,
-           CAST({agree} AS DOUBLE) / {num_hashes}.0 AS sim_est
-    FROM sig a JOIN sig b ON a.source < b.source
-    """
 
 
 # RETIRED (round 14, forward smoothing for the r16 window): the

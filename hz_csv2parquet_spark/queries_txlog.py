@@ -86,7 +86,6 @@ def txlog_snapshot_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "txlog_time_travel_orders",
-    priority=False,  # r8-verified; rotated out of the round-9 window
     since=8,
     sql="""
     SELECT o_orderstatus,
@@ -143,7 +142,6 @@ def txlog_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "txlog_merge_read_events",
-    priority=False,  # r8-verified; rotated out of the round-9 window
     since=8,
     sql="""
     WITH base AS (
@@ -198,7 +196,6 @@ def txlog_merge_read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "txlog_changes_events",
-    priority=False,  # r8-verified; rotated out of the round-9 window
     since=8,
     sql="""
     WITH base AS (
@@ -260,7 +257,6 @@ def txlog_changes_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "txlog_cdf_stream_events",
-    priority=False,  # verified r10 (CORRECTNESS_r10: green); rotated out
     since=10,
     streaming=True,
     sql="""
@@ -344,7 +340,6 @@ def txlog_cdf_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "txlog_restore_read_orders",
-    priority=False,  # verified r10 (CORRECTNESS_r10: green); rotated out
     since=10,
     sql="""
     SELECT o_orderstatus,
@@ -416,7 +411,6 @@ def txlog_restore_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "txlog_dv_delete_read_events",
-    priority=False,  # verified r10; rotated back in for round 14 (+ NOT NULL legs)
     since=10,
     sql="""
     WITH base AS (
@@ -919,7 +913,6 @@ def txlog_identity_merge_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "txlog_ivm_refresh_orders",
-    priority=False,  # r13-green (first driver row landed round 13)
     since=13,
     sql="""
     WITH base AS (
@@ -996,7 +989,6 @@ def txlog_ivm_refresh_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "txlog_insert_overwrite_orders",
-    priority=False,  # r13-green (first driver row landed round 13)
     since=13,
     sql="""
     WITH head AS (
@@ -1069,7 +1061,6 @@ def txlog_insert_overwrite_orders(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "txlog_ctas_replace_orders",
-    priority=False,  # r13-green (first driver row landed round 13)
     since=13,
     sql="""
     WITH head AS (

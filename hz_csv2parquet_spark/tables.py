@@ -309,9 +309,3 @@ def memo_checkpoint(build, slot: str, key: str) -> DataFrame:
     _evict(slot)
     _MEMO[slot] = (key, build().localCheckpoint())
     return _MEMO[slot][1]
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for spark.sql use)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -26,11 +26,6 @@ def main() -> int:
     from hz_csv2parquet_spark.session import get_spark
     from hz_csv2parquet_spark.tables import memo_clear
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from importlib import import_module
-
-    bench = import_module("bench") if False else None  # no reuse; inline quiesce
-
     spark = get_spark(app="hz_time_solo")
 
     def quiesce():

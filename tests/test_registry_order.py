@@ -1,227 +1,303 @@
 """The driver's correctness gate verifies only a capped prefix (50)
-of the ``queries()`` dict. These tests pin the rotation discipline
-mechanically, driven by the committed CORRECTNESS_r*.json history:
+of the ``queries()`` dict, in the order ``verify_order`` computes from
+the committed CORRECTNESS_r*.json history. These tests pin the verify
+discipline on that real history and on small synthetic ones:
 
-1. every query red / hash-failed in the LATEST round is re-verified,
-2. nothing goes more than 2 rounds without a fresh driver row,
-3. the explicit ROTATION set fits (with its window) inside the cap,
-4. the reordering is a permutation with a clean priority prefix.
+1. every query red / hash-failed / errored in the LATEST round leads,
+2. a query with no row on its current implementation comes next,
+3. then oldest-verified first, so nothing goes more than 3 rounds
+   without a fresh driver row, this round or in simulated later ones,
+4. the order is a deterministic permutation whose mandatory set is a
+   prefix that fits the window.
 
-When a new round's CORRECTNESS file lands, (1) and (2) recompute —
-a stale ROTATION set fails HERE, before the driver wastes a round."""
+When a new round's CORRECTNESS file lands, every check recomputes."""
 
 from __future__ import annotations
 
-import glob
-import json
 import os
+import random
+import subprocess
+import sys
+import textwrap
 
+import __spark_entry__
 from hz_csv2parquet_spark.queries import (
     REGISTRY,
-    ROTATION,
-    effective_priority,
+    Query,
+    correctness_history,
     ordered_registry,
+    row_failed,
+    verify_order,
 )
 
 DRIVER_WINDOW = 50
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-
-def _history():
-    """{query: {round: row}} from every committed CORRECTNESS file."""
-    hist: dict[str, dict[int, dict]] = {}
-    for f in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        r = int(os.path.basename(f).split("_r")[1].split(".")[0])
-        for name, row in json.load(open(f)).items():
-            hist.setdefault(name, {})[r] = row
-    return hist
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
 
 
-def _window():
-    return list(ordered_registry())[:DRIVER_WINDOW]
+def _q(name: str, since: int = 0) -> Query:
+    return Query(name, fn=None, sql=None, since=since)
+
+
+#: A 9-query catalog over rounds 1-5 with a 6-row window: two latest-round
+#: failures, a rows-only ``no_oracle`` row (not a failure), a changed and
+#: a never-verified implementation, and green rows of every age.
+SYNTH_REGISTRY = {
+    q.name: q
+    for q in [
+        _q("a_failed"),
+        _q("b_errored"),
+        _q("c_changed", since=6),
+        _q("d_no_oracle"),
+        _q("e_old"),
+        _q("f_old"),
+        _q("g_mid"),
+        _q("h_fresh"),
+        _q("i_new", since=4),
+    ]
+}
+SYNTH_HISTORY = {
+    "a_failed": {3: GREEN, 5: {**GREEN, "hash_match": False}},
+    "b_errored": {5: {**GREEN, "err": "AnalysisException"}},
+    "c_changed": {5: GREEN},
+    "d_no_oracle": {5: {**GREEN, "hash_match": None, "err": "no_oracle"}},
+    "e_old": {1: GREEN, 2: GREEN},
+    "f_old": {2: GREEN},
+    "g_mid": {3: GREEN},
+    "h_fresh": {4: GREEN},
+    "retired": {1: GREEN},  # a history row for a query no longer registered
+}
+SYNTH_WINDOW = 6
+SYNTH_ORDER = [
+    "a_failed",
+    "b_errored",
+    "i_new",
+    "c_changed",
+    "e_old",
+    "f_old",
+    "g_mid",
+    "h_fresh",
+    "d_no_oracle",
+]
+
+
+def _cases():
+    """(registry, history, window) for the real catalog and the synthetic one."""
+    return [
+        (REGISTRY, correctness_history(), DRIVER_WINDOW),
+        (SYNTH_REGISTRY, SYNTH_HISTORY, SYNTH_WINDOW),
+    ]
+
+
+def _latest(hist) -> int:
+    return max((r for rounds in hist.values() for r in rounds), default=0)
+
+
+def _window(registry, hist, size) -> set[str]:
+    return set(verify_order(registry, hist)[:size])
+
+
+def _failed_latest(registry, hist) -> set[str]:
+    latest = _latest(hist)
+    return {
+        name
+        for name, rounds in hist.items()
+        if name in registry and latest in rounds and row_failed(rounds[latest])
+    }
+
+
+def _mandatory(registry, hist) -> set[str]:
+    """Queries the next driver round must verify: latest-round failures,
+    implementations without a row since they landed, and the 3-round
+    staleness tail."""
+    latest = _latest(hist)
+    return (
+        _failed_latest(registry, hist)
+        | {n for n, q in registry.items() if not any(r >= q.since for r in hist.get(n, {}))}
+        | {n for n in registry if n in hist and max(hist[n]) <= latest - 3}
+    )
+
+
+def _ages(registry, hist) -> dict[str, int]:
+    """Rounds since each query's current implementation was last verified
+    (never-verified ones tick from ``since``)."""
+    latest = _latest(hist)
+    return {
+        n: latest - max([r for r in hist.get(n, {}) if r >= q.since] or [q.since])
+        for n, q in registry.items()
+    }
+
+
+def test_verify_order_on_a_synthetic_history():
+    """Failures lead, then implementations with no row since ``since``
+    (oldest ``since`` first), then oldest-verified first, ties by name."""
+    assert verify_order(SYNTH_REGISTRY, SYNTH_HISTORY) == SYNTH_ORDER
+    # with no history every query is unverified: ordered by since, then name
+    assert verify_order(SYNTH_REGISTRY, {}) == sorted(
+        SYNTH_REGISTRY, key=lambda n: (SYNTH_REGISTRY[n].since, n)
+    )
 
 
 def test_latest_round_failures_are_rotated_in():
-    hist = _history()
-    if not hist:
-        return
-    latest = max(r for rounds in hist.values() for r in rounds)
-    window = set(_window())
-    failed = {
-        name
-        for name, rounds in hist.items()
-        if latest in rounds
-        and name in REGISTRY
-        and (
-            # crashed queries count as failures too — only the
-            # benign rows-only marker is exempt
-            rounds[latest].get("err") not in (None, "no_oracle")
-            or rounds[latest].get("rows_match") is False
-            or rounds[latest].get("hash_match") is False
-        )
-    }
-    missing = failed - window
-    assert not missing, f"round-{latest} failures outside driver window: {missing}"
+    for registry, hist, size in _cases():
+        failed = _failed_latest(registry, hist)
+        missing = failed - _window(registry, hist, size)
+        assert not missing, f"round-{_latest(hist)} failures outside the window: {missing}"
+    assert _failed_latest(SYNTH_REGISTRY, SYNTH_HISTORY) == {"a_failed", "b_errored"}
 
 
 def test_no_query_goes_three_rounds_unverified():
-    """Verify-cadence forcing rule. The threshold is 3 rounds (not
-    the 2 used through round 5): a K-round rule implies every query
-    needs a window slot every K+1 rounds, i.e. |catalog|/(K+1) slots
-    per round — at 166 queries K=2 demands 55.3 > the 50-slot
-    window (structurally infeasible; rounds 1-5 only passed because
-    the catalog was still growing), while K=3 demands 41.5, leaving
-    ~8 slots/round of slack for re-verifying failures and changed
-    implementations. Never-verified queries tick from their
-    registration round (Query.since)."""
-    hist = _history()
-    if not hist:
-        return
-    latest = max(r for rounds in hist.values() for r in rounds)
-    window = set(_window())
-    stale = {
-        name
-        for name in REGISTRY
-        if name in hist and max(hist[name]) <= latest - 3
-    } | {
-        name
-        for name in REGISTRY
-        if name not in hist and REGISTRY[name].since <= latest - 3
-    }
-    missing = stale - window
-    assert not missing, (
-        f"queries ≥3 rounds unverified but outside the driver window: {missing}"
-    )
+    """Verify-cadence forcing rule. The threshold is 3 rounds: a K-round
+    rule needs a window slot for every query every K+1 rounds, i.e.
+    |catalog|/(K+1) slots per round. K=2 at 166 queries demanded 55.3,
+    more than the 50-slot window; K=3 leaves slack for re-verifying
+    failures and changed implementations. Never-verified queries tick
+    from ``Query.since``."""
+    for registry, hist, size in _cases():
+        latest = _latest(hist)
+        stale = {n for n in registry if n in hist and max(hist[n]) <= latest - 3} | {
+            n for n in registry if n not in hist and registry[n].since <= latest - 3
+        }
+        missing = stale - _window(registry, hist, size)
+        assert not missing, f"queries ≥3 rounds unverified but outside the window: {missing}"
+    assert {"e_old", "f_old"} <= _mandatory(SYNTH_REGISTRY, SYNTH_HISTORY)
 
 
-def test_rotation_set_names_real_queries_and_fits_the_window():
-    unknown = ROTATION - set(REGISTRY)
-    assert not unknown, f"ROTATION names unknown queries: {unknown}"
-    n_priority = sum(1 for q in REGISTRY.values() if effective_priority(q))
-    assert n_priority <= DRIVER_WINDOW, (
-        f"{n_priority} priority queries exceed the {DRIVER_WINDOW}-row verify cap"
-    )
-    missing = ROTATION - set(_window())
-    assert not missing, f"ROTATION queries outside driver window: {missing}"
+def test_mandatory_set_fits_the_window_as_a_prefix():
+    """Everything the next round must verify sorts ahead of everything
+    it may skip, and all of it fits the window."""
+    for registry, hist, size in _cases():
+        order = verify_order(registry, hist)
+        mandatory = _mandatory(registry, hist)
+        assert len(mandatory) <= size, (
+            f"{len(mandatory)} mandatory queries exceed the {size}-row verify cap"
+        )
+        assert set(order[: len(mandatory)]) == mandatory, (
+            f"mandatory queries outside the prefix: {mandatory - set(order[: len(mandatory)])}"
+        )
 
 
 def test_catalog_growth_frozen_while_backlog_exceeds_window():
-    """VERDICT r5 item 2: 60 never-driver-checked queries is two full
-    rounds of window budget — while a backlog persists, new ``@query``
-    registrations are capped at the window slack left after the
-    backlog is scheduled.
-
-    Backlog = never-driver-checked (the rule's original target) plus
-    the rule-MANDATORY stale tail (last row ≤ latest−3). Through
-    round 7 this test used "≥2 rounds stale" instead of the mandatory
-    tail, which was the right brake while dozens of registrations had
-    never been checked; at the round-8 steady state (never-checked =
-    0, every query cycling on the ≤3-round cadence) that definition
-    counts ~2/3 of a healthy catalog as backlog and would freeze
-    growth forever. The cadence-mandatory definition preserves the
-    intent — no growth while verification debt exists — without
-    penalizing the debt-free steady state (whose real capacity bound
-    is test_catalog_size_fits_the_verify_cadence)."""
-    hist = _history()
-    if not hist:
-        return
-    latest = max(r for rounds in hist.values() for r in rounds)
-    backlog = {
-        name
-        for name in REGISTRY
-        if (name in hist and max(hist[name]) <= latest - 3)
-        or (name not in hist and REGISTRY[name].since <= latest)
-    }
-    slack = max(0, DRIVER_WINDOW - len(backlog))
-    new = {name for name in REGISTRY if REGISTRY[name].since > latest}
-    assert len(new) <= slack, (
-        f"{len(new)} new registrations ({sorted(new)}) but only {slack} window "
-        f"slots remain after the {len(backlog)}-query verification backlog — "
-        "freeze catalog growth until driver coverage catches up"
-    )
+    """While a verification backlog persists, new or changed
+    implementations (``since`` past the latest round) are capped at the
+    window slack left after the backlog is scheduled. Backlog = queries
+    with no row on an implementation that landed by the latest round,
+    plus the 3-round staleness tail."""
+    for registry, hist, size in _cases():
+        latest = _latest(hist)
+        backlog = {
+            n
+            for n, q in registry.items()
+            if (n in hist and max(hist[n]) <= latest - 3)
+            or (q.since <= latest and not any(r >= q.since for r in hist.get(n, {})))
+        }
+        slack = max(0, size - len(backlog))
+        new = {n for n, q in registry.items() if q.since > latest}
+        assert len(new) <= slack, (
+            f"{len(new)} new implementations ({sorted(new)}) but only {slack} window "
+            f"slots remain after the {len(backlog)}-query verification backlog — "
+            "freeze catalog changes until driver coverage catches up"
+        )
 
 
 def test_hard_staleness_ceiling():
-    """VERDICT r5 item 6: no catalog query's latest driver row (or,
-    for never-verified queries, registration round) may be more than
-    3 rounds old. The 3-round rule above forces age-3 queries INTO
-    the window; this one catches the failure mode where a query
-    keeps getting deferred round after round and the window never
-    actually covers it. Feasible at the steady state: a 50-slot
-    window revisits all 166 queries within ⌈166/50⌉ = 4 rounds, so
-    round-robin keeps every age ≤ 3 at planning time."""
-    hist = _history()
-    if not hist:
-        return
-    latest = max(r for rounds in hist.values() for r in rounds)
-    over_ceiling = {
-        name
-        for name in REGISTRY
-        if (name in hist and max(hist[name]) < latest - 3)
-        or (name not in hist and REGISTRY[name].since < latest - 3)
-    }
-    assert not over_ceiling, (
-        f"queries >3 rounds without a driver CORRECTNESS row: {over_ceiling}"
-    )
+    """No query's latest driver row (or, for never-verified queries,
+    ``since``) is more than 3 rounds old. The 3-round rule forces age-3
+    queries into the window; this catches a query the driver kept
+    deferring anyway."""
+    for registry, hist, _ in _cases():
+        latest = _latest(hist)
+        over_ceiling = {
+            n
+            for n in registry
+            if (n in hist and max(hist[n]) < latest - 3)
+            or (n not in hist and registry[n].since < latest - 3)
+        }
+        assert not over_ceiling, (
+            f"queries >3 rounds without a driver CORRECTNESS row: {over_ceiling}"
+        )
 
 
 def test_catalog_size_fits_the_verify_cadence():
-    """Feasibility invariant behind the 3-round rule: a catalog of N
-    queries on a 50-slot window needs N/4 ≤ 50 steady-state slots
-    (every query revisited within 4 rounds), and real rounds also
-    spend slots on failures and changed implementations — keep ≥15%
-    slack. At N=166 the demand is 41.5 (17% slack). A catalog that
-    grows past ~170 breaks the cadence arithmetic no matter how the
-    ROTATION is chosen — shrink the catalog or raise the window
-    before registering more queries."""
-    demand = len(REGISTRY) / 4
-    assert demand <= 0.85 * DRIVER_WINDOW, (
-        f"{len(REGISTRY)} queries need {demand:.1f} steady-state verify slots "
-        f"per round; the {DRIVER_WINDOW}-row window leaves too little slack"
-    )
+    """A catalog of N queries on a W-slot window needs N/4 ≤ W
+    steady-state slots (every query revisited within 4 rounds); real
+    rounds also spend slots on failures and changed implementations,
+    so keep ≥15% slack. Shrink the catalog or raise the window before
+    registering past that."""
+    for registry, _, size in _cases():
+        demand = len(registry) / 4
+        assert demand <= 0.85 * size, (
+            f"{len(registry)} queries need {demand:.1f} steady-state verify slots "
+            f"per round; the {size}-row window leaves too little slack"
+        )
+
+
+def _verify_window(registry, hist, size) -> dict:
+    """The history after a driver round that verifies the window green."""
+    nxt = _latest(hist) + 1
+    out = {n: dict(rounds) for n, rounds in hist.items()}
+    for n in verify_order(registry, hist)[:size]:
+        out.setdefault(n, {})[nxt] = GREEN
+    return out
 
 
 def test_next_round_window_is_feasible():
-    """VERDICT r10 item 7: don't just satisfy THIS round's window —
-    simulate the next one. Assume the driver verifies exactly the
-    current 50-row window at round latest+1; then round latest+2's
-    rule-mandatory set is every query whose last row would be
-    ≤ (latest+1) − 3. If that set alone exceeds the window, the
-    cadence is already structurally broken one round out (a growth
-    spurt or a mis-chosen ROTATION can do this while the current
-    round still passes)."""
-    hist = _history()
-    if not hist:
-        return
-    latest = max(r for rounds in hist.values() for r in rounds)
-    window = set(_window())
-    # project each query's last-verified round after the next driver run
-    projected = {
-        name: (latest + 1 if name in window else max(hist[name]))
-        for name in REGISTRY
-        if name in hist
-    }
-    projected.update(
-        {
-            name: (latest + 1 if name in window else REGISTRY[name].since)
-            for name in REGISTRY
-            if name not in hist
-        }
-    )
-    next_mandatory = {n for n, r in projected.items() if r <= (latest + 1) - 3}
-    assert len(next_mandatory) <= DRIVER_WINDOW, (
-        f"round-{latest + 2} would be infeasible: {len(next_mandatory)} "
-        f"rule-mandatory queries > {DRIVER_WINDOW}-row window"
-    )
+    """Don't just satisfy this round's window — simulate the next one:
+    the driver verifies exactly the current window at round latest+1,
+    then round latest+2's mandatory set must still fit."""
+    for registry, hist, size in _cases():
+        projected = _verify_window(registry, hist, size)
+        mandatory = _mandatory(registry, projected)
+        assert len(mandatory) <= size, (
+            f"round-{_latest(hist) + 2} would be infeasible: {len(mandatory)} "
+            f"mandatory queries > {size}-row window"
+        )
+
+
+def test_forward_simulation_keeps_the_cadence():
+    """Five further driver rounds that each verify the window green: every
+    round's mandatory set fits, and no query ages past 3 rounds."""
+    for registry, hist, size in _cases():
+        for _ in range(5):
+            mandatory = _mandatory(registry, hist)
+            assert len(mandatory) <= size, (
+                f"round {_latest(hist) + 1}: {len(mandatory)} mandatory > {size}"
+            )
+            oldest = max(_ages(registry, hist).values())
+            assert oldest <= 3, f"round {_latest(hist) + 1}: a query aged {oldest} rounds"
+            hist = _verify_window(registry, hist, size)
 
 
 def test_ordering_is_a_permutation_of_the_registry():
-    assert set(ordered_registry()) == set(REGISTRY)
-    assert len(ordered_registry()) == len(REGISTRY)
+    for registry, hist, _ in _cases():
+        order = verify_order(registry, hist)
+        assert sorted(order) == sorted(registry)
+        # deterministic: independent of registration order
+        names = list(registry)
+        random.Random(0).shuffle(names)
+        assert verify_order({n: registry[n] for n in names}, hist) == order
+    assert list(ordered_registry()) == verify_order(REGISTRY, correctness_history())
+    assert list(__spark_entry__.queries()) == list(ordered_registry())
 
 
-def test_priority_block_is_a_stable_prefix():
-    names = list(ordered_registry())
-    flags = [effective_priority(ordered_registry()[n]) for n in names]
-    # all priority entries precede all non-priority entries
-    assert flags == sorted(flags, reverse=True)
+def test_history_is_read_on_call_not_at_import():
+    """Importing the catalog opens no CORRECTNESS file; ordering does."""
+    probe = textwrap.dedent(
+        """
+        import sys
+        opened = []
+        sys.addaudithook(
+            lambda ev, args: ev == "open" and "CORRECTNESS_r" in str(args[0])
+            and opened.append(args[0])
+        )
+        from hz_csv2parquet_spark import queries
+        print(len(opened))
+        queries.ordered_registry()
+        print(len(opened))
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=REPO, capture_output=True, text=True, check=True
+    ).stdout.split()
+    assert out[0] == "0" and int(out[1]) > 0, out

@@ -223,6 +223,15 @@ def test_funnel_state_commutative_across_out_of_order_batches(spark, tmp_path):
         tmp_path / "b.parquet",
         [(2, B + H + H // 2, 7, "view"), (3, B + 2 * H + H // 2, 7, "purchase")],
     )
+    # the file source orders pickup by modification time: pin a
+    # strictly older mtime on the click file so it is batch 1 (a
+    # same-tick tie can stream b first and flip the asserted emissions)
+    import os as _os
+    import time as _time
+
+    now = _time.time()
+    _os.utime(tmp_path / "a.parquet", (now - 10, now - 10))
+    _os.utime(tmp_path / "b.parquet", (now, now))
     events = stream_events(
         spark, str(tmp_path), glob="*.parquet", options={"maxFilesPerTrigger": 1}
     )
@@ -264,7 +273,9 @@ def test_cdc_merge_independent_of_batch_split(spark, tmp_path):
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     import glob as _glob
     import os as _os
+    import time as _time
 
+    now = _time.time()
     for i, batch in enumerate(rows):
         stage = tmp_path / f"stage{i}"
         spark.createDataFrame(
@@ -275,7 +286,9 @@ def test_cdc_merge_independent_of_batch_split(spark, tmp_path):
         )
         # flatten: the file-source stream lists plain files under src
         part = _glob.glob(str(stage / "part-*.parquet"))[0]
-        _os.replace(part, str(src / f"f{i}.parquet"))
+        dest = src / f"f{i}.parquet"
+        _os.replace(part, str(dest))
+        _os.utime(dest, (now - 30 + 10 * i,) * 2)  # pin batch order
 
     stream = (
         spark.readStream.schema(schema)
