@@ -164,18 +164,27 @@ def test_no_query_goes_three_rounds_unverified():
     assert {"e_old", "f_old"} <= _mandatory(SYNTH_REGISTRY, SYNTH_HISTORY)
 
 
-def test_mandatory_set_fits_the_window_as_a_prefix():
-    """Everything the next round must verify sorts ahead of everything
-    it may skip, and all of it fits the window."""
+def test_rotation_set_names_real_queries_and_fits_the_window():
+    """Everything the next round must verify is a registered query, and
+    all of it fits the window."""
     for registry, hist, size in _cases():
-        order = verify_order(registry, hist)
         mandatory = _mandatory(registry, hist)
+        assert mandatory <= set(registry), f"unknown queries: {mandatory - set(registry)}"
         assert len(mandatory) <= size, (
             f"{len(mandatory)} mandatory queries exceed the {size}-row verify cap"
         )
+
+
+def test_priority_block_is_a_stable_prefix():
+    """Everything the next round must verify sorts ahead of everything
+    it may skip, and the order is the same on every call."""
+    for registry, hist, _ in _cases():
+        order = verify_order(registry, hist)
+        mandatory = _mandatory(registry, hist)
         assert set(order[: len(mandatory)]) == mandatory, (
             f"mandatory queries outside the prefix: {mandatory - set(order[: len(mandatory)])}"
         )
+        assert verify_order(registry, hist) == order
 
 
 def test_catalog_growth_frozen_while_backlog_exceeds_window():
