@@ -38,11 +38,17 @@ derived data: last-writer-wins via atomic rename, and a missing or
 stale checkpoint only costs speed, never correctness.
 
 Concurrency: a commit is the CREATE of the next version file with
-O_EXCL (open mode ``x``) — exactly one writer wins a version;
-losers get :class:`CommitConflictError` and retry on a fresh
-snapshot (optimistic concurrency, the Delta protocol's put-if-absent
-primitive; on S3-like stores this maps to a conditional put / DynamoDB
-mutex, same contract).
+O_EXCL (open mode ``x``) — exactly one writer wins a version and a
+loser gets :class:`CommitConflictError` (optimistic concurrency, the
+Delta protocol's put-if-absent primitive; on S3-like stores this maps
+to a conditional put / DynamoDB mutex, same contract). A lost race
+is rebased by ONE rule, :meth:`TxTable._rebase_commit`: replay the
+head; a ``txn`` twin in it means the batch already landed (no-op); a
+CREATE never rebases (conflict); otherwise the verb revalidates its
+staged actions against the head or raises (blind appends keep them,
+DML and rewrites check their read set); retry with bounded, jittered
+backoff. Verbs with no revalidation rule (overwrite, evolve_schema,
+column DDL, restore, fsck) commit once and surface the conflict.
 
 Write path: data files are produced by Spark (``df.write.parquet``
 into a staging dir), then registered in the log with per-file
@@ -59,6 +65,7 @@ import functools
 import glob
 import json
 import os
+import random
 import re
 import shutil
 import time
@@ -2071,15 +2078,15 @@ class TxTable:
                 base_v, state = first
                 first = None
             else:
-                if txn is not None and txn[1] in self.committed_txns(txn[0]):
-                    return None  # replayed batch: the twin's commit won
                 base_v = self.version()
                 # pin the replay at base_v: a commit landing between
                 # version() and replay would otherwise feed a NEWER
                 # hwm than the version we commit against — id
                 # collision, not conflict. Pinned, any interleaver
-                # forces O_EXCL failure.
+                # (a twin included) forces O_EXCL failure.
                 state = self._replay_state(as_of=base_v)
+                if txn is not None and txn[1] in state["txns"].get(txn[0], set()):
+                    return None  # replayed batch: the twin's commit won
                 self._check_writer_features(state)
             out = self._pin_identity_frame(
                 self._assign_identity(df, state["identity"]), state
@@ -2179,12 +2186,10 @@ class TxTable:
         *read* the snapshot (merge, compact) still surface it, because
         their staged rewrite may be stale.
 
-        The rebase loop is bounded (64 attempts, jittered backoff
-        growing to ~50 ms) rather than spin-forever: system-wide
-        progress is guaranteed (every lost race means someone ELSE
-        committed) but an unbounded hot loop lets one caller starve
-        indefinitely under sustained contention; past the cap the
-        conflict surfaces and the caller owns the policy."""
+        The rebase is :meth:`_rebase_commit` with nothing to
+        revalidate: bounded (64 attempts, jittered backoff growing to
+        ~50 ms) rather than spin-forever; past the cap the conflict
+        surfaces and the caller owns the policy."""
         base_v = self.version()
         state = self._replay_state(as_of=base_v)
         self._check_writer_features(state)
@@ -2205,17 +2210,51 @@ class TxTable:
 
     _REBASE_ATTEMPTS = 64
 
-    def _rebase_commit(self, actions: list[dict], operation: str | None = None) -> int:
-        """Commit read-nothing actions against the moving head,
-        rebasing on version conflicts with capped jittered backoff."""
-        import random
-
+    def _rebase_commit(
+        self,
+        actions: list[dict],
+        operation: str | None = None,
+        *,
+        base: int | None = None,
+        txn: tuple[str, int] | None = None,
+        revalidate: Callable[[list[dict], dict], list[dict]] | None = None,
+    ) -> int | None:
+        """The one commit-and-rebase loop: commit ``actions`` against
+        ``base`` (default: the current head). On a lost version race,
+        replay the head; a ``txn`` twin in it → None (the batch
+        landed); ``base == -1`` → raise (a CREATE never rebases onto
+        another writer's table); else ``revalidate(actions, head)``
+        returns the actions to re-commit on the head or raises
+        :class:`CommitConflictError` (no callback: read-nothing
+        actions rebase unchanged); jittered backoff, retry. Bounded
+        at ``_REBASE_ATTEMPTS`` commits — an unbounded hot loop lets
+        one caller starve under sustained contention; the last
+        conflict surfaces. Callers capture ``base`` BEFORE the replay
+        their actions and twin check came from, so anything landing
+        after it forces an O_EXCL conflict here."""
+        if base is None:
+            base = self.version()
         for attempt in range(self._REBASE_ATTEMPTS):
             try:
-                return self._commit(actions, self.version(), operation=operation)
+                return self._commit(actions, base, operation=operation)
             except CommitConflictError:
-                if attempt == self._REBASE_ATTEMPTS - 1:
+                # capture the head version FIRST and validate exactly
+                # that snapshot: a commit landing after the check must
+                # fail the NEXT _commit and be re-validated here, never
+                # slip between check and commit (TOCTOU — a delete
+                # racing in that window would have its rows
+                # resurrected by a stale rewrite)
+                head_v = self.version()
+                head = None
+                if txn is not None or revalidate is not None:
+                    head = self._replay_state(as_of=head_v)
+                if txn is not None and txn[1] in head["txns"].get(txn[0], set()):
+                    return None  # a twin replay of this batch won
+                if base < 0 or attempt == self._REBASE_ATTEMPTS - 1:
                     raise
+                if revalidate is not None:
+                    actions = revalidate(actions, head)
+                base = head_v
                 time.sleep(random.uniform(0, min(0.001 * (attempt + 1), 0.05)))
 
     def committed_txns(self, app_id: str) -> set[int]:
@@ -2608,18 +2647,11 @@ class TxTable:
         self._enforce_constraints(df, state)
         actions = self._stage(df, mapping=state.get("columnMapping"))
         actions.append({"txn": {"appId": app_id, "batchId": batch_id}})
-        import random
-
-        for attempt in range(self._REBASE_ATTEMPTS):
-            base = self.version()
-            if batch_id in self.committed_txns(app_id):
-                return None  # twin won the race; staged files are vacuum-able orphans
-            try:
-                return self._commit(actions, base, operation="STREAMING-APPEND")
-            except CommitConflictError:
-                if attempt == self._REBASE_ATTEMPTS - 1:
-                    raise
-                time.sleep(random.uniform(0, min(0.001 * (attempt + 1), 0.05)))
+        # a twin winning the race makes this a None no-op; the staged
+        # files are vacuum-able orphans
+        return self._rebase_commit(
+            actions, "STREAMING-APPEND", base=base_v, txn=(app_id, batch_id)
+        )
 
     def foreach_batch_writer(self, app_id: str):
         """``writeStream.foreachBatch(t.foreach_batch_writer("job"))``
@@ -3689,13 +3721,14 @@ class TxTable:
         the retry policy."""
         keys = [key] if isinstance(key, str) else list(key)
         prune_col = keys[0]
-        if txn is not None and txn[1] in self.committed_txns(txn[0]):
-            return None
         # generated columns materialize on the update batch up front
         # (before bounds/dup checks — the merge key may itself be a
         # generated column the writer omits); this replay is metadata-
         # only and does not supersede the per-attempt one below
-        gstate = self._replay_state()
+        gbase = self.version()
+        gstate = self._replay_state(as_of=gbase)
+        if txn is not None and txn[1] in gstate["txns"].get(txn[0], set()):
+            return None
         self._check_writer_features(gstate)
         if gstate.get("identity"):
             bad = sorted(set(gstate["identity"]) & set(updates.columns))
@@ -3751,23 +3784,13 @@ class TxTable:
             # every batch — matching append_batch, which always stamps.
             if txn is None:
                 return self.version()
-            import random
-
-            for attempt in range(self._REBASE_ATTEMPTS):
-                base = self.version()
-                if txn[1] in self.committed_txns(txn[0]):
-                    return None
-                try:
-                    # marker-only commit rebases like a blind append
-                    return self._commit(
-                        [{"txn": {"appId": txn[0], "batchId": txn[1]}}],
-                        base,
-                        operation="MERGE",
-                    )
-                except CommitConflictError:
-                    if attempt == self._REBASE_ATTEMPTS - 1:
-                        raise
-                    time.sleep(random.uniform(0, min(0.001 * (attempt + 1), 0.05)))
+            # marker-only commit rebases like a blind append
+            return self._rebase_commit(
+                [{"txn": {"appId": txn[0], "batchId": txn[1]}}],
+                "MERGE",
+                base=gbase,
+                txn=txn,
+            )
         if resolve is None and bounds.nn_rows != bounds.nn_keys:
             # computed in the bounds aggregate above — only
             # non-NULL-keyed duplicates are a caller error
@@ -3776,14 +3799,14 @@ class TxTable:
                 "deduplicate first or pass a resolve function"
             )
         for attempt in range(retries + 1):
-            if attempt and txn is not None and txn[1] in self.committed_txns(txn[0]):
-                return None  # the winner of the lost race was our twin
             base = self.version()
             # ONE replay per attempt feeds pruning, the rewrite read,
             # partition layout, schema union, and the property
             # resolution (the log, not the constructor flag, decides
             # whether this commit stages cdc sidecars — advisor r10)
             state = self._replay_state()
+            if txn is not None and txn[1] in state["txns"].get(txn[0], set()):
+                return None  # a twin of this batch committed first
             if bounds.lo is None:
                 # non-empty batch, all-NULL prune key: NULL can never
                 # equality-match an existing row, so no file needs a
@@ -3896,27 +3919,27 @@ class TxTable:
                 actions.append({"meta": meta})
             if txn is not None:
                 actions.append({"txn": {"appId": txn[0], "batchId": txn[1]}})
+            # Stats-validated rebase (round 11): if every interleaved
+            # commit was a pure blind append whose files' logged
+            # ``prune_col`` ranges are DISJOINT from the update
+            # batch's key bounds, the staged rewrite is still exactly
+            # right — the new files provably contain no matching
+            # keys, and nothing the merge read moved. Re-commit the
+            # same actions on the head instead of re-running (or
+            # failing) the whole transaction. Overlapping or
+            # stats-less new files, or any touched read file, still
+            # mean a genuine re-merge.
             try:
-                return self._commit(actions, base, operation="MERGE")
-            except CommitConflictError:
-                if txn is not None and txn[1] in self.committed_txns(txn[0]):
-                    return None  # a twin replay of this very batch won
-                # Stats-validated rebase (round 11): if every
-                # interleaved commit was a pure blind append whose
-                # files' logged ``prune_col`` ranges are DISJOINT
-                # from the update batch's key bounds, the staged
-                # rewrite is still exactly right — the new files
-                # provably contain no matching keys, and nothing the
-                # merge read moved. Re-commit the same actions on the
-                # head instead of re-running (or failing) the whole
-                # transaction. Overlapping or stats-less new files,
-                # or any touched read file, still mean a genuine
-                # re-merge.
-                v = self._rebase_if_disjoint_appends(
-                    actions, state, prune_col, bounds.lo, bounds.hi, "MERGE"
+                return self._rebase_commit(
+                    actions,
+                    "MERGE",
+                    base=base,
+                    txn=txn,
+                    revalidate=lambda acts, head: self._only_disjoint_appends(
+                        acts, head, state, prune_col, bounds.lo, bounds.hi
+                    ),
                 )
-                if v is not None:
-                    return v
+            except CommitConflictError:
                 if attempt == retries:
                     raise  # genuine conflict: caller must re-merge on a fresh snapshot
 
@@ -3953,59 +3976,42 @@ class TxTable:
             for rel in state["adds"]
         )
 
-    def _rebase_if_disjoint_appends(
-        self,
-        actions: list[dict],
-        state: dict,
-        prune_col: str,
-        lo,
-        hi,
-        operation: str,
-    ) -> int | None:
-        """Commit ``actions`` against the moving head iff the read
-        set stayed intact and every interleaved new file's logged
-        ``prune_col`` stats range is disjoint from ``[lo, hi]`` (a
-        file without stats is conservatively overlapping). Returns
-        the committed version, or None when the conflict is genuine
-        and the caller must re-run."""
-        import random
-
-        for attempt in range(self._REBASE_ATTEMPTS):
-            head_v = self.version()
-            head = self._replay_state(as_of=head_v)
-            # MERGE draws fresh ids on identity tables — a moved hwm
-            # means a possible collision, so the rebase must not land
-            if not self._read_set_intact(
-                state, head, identity_sensitive=bool(state.get("identity"))
-            ):
-                return None
-            # stats keys are physical; read_set_intact guarantees the
-            # head mapping matches the staged state's
-            phys_col = _cm_map(state.get("columnMapping")).get(prune_col, prune_col)
-            for rel in head["adds"]:
-                if rel in state["adds"]:
-                    continue
-                stats = (head["adds"][rel].get("stats") or {}).get(phys_col)
-                try:
-                    disjoint = (
-                        stats is not None
-                        and stats[0] is not None
-                        and stats[1] is not None
-                        and (hi < stats[0] or lo > stats[1])
-                    )
-                except TypeError:
-                    # incomparable stat kinds (e.g. string stats vs a
-                    # numeric key after a type change): conservatively
-                    # overlapping — same rule as pruned_files
-                    disjoint = False
-                if not disjoint:
-                    return None  # possible matching keys in the new file
+    def _only_disjoint_appends(
+        self, actions: list[dict], head: dict, state: dict, prune_col: str, lo, hi
+    ) -> list[dict]:
+        """MERGE's rebase check: keep ``actions`` iff the read set
+        stayed intact at ``head`` and every interleaved new file's
+        logged ``prune_col`` stats range is disjoint from ``[lo, hi]``
+        (a file without stats is conservatively overlapping);
+        otherwise the conflict is genuine and the merge must re-run."""
+        # MERGE draws fresh ids on identity tables — a moved hwm
+        # means a possible collision, so the rebase must not land
+        if not self._read_set_intact(
+            state, head, identity_sensitive=bool(state.get("identity"))
+        ):
+            raise CommitConflictError("a concurrent commit touched the merge's reads")
+        # stats keys are physical; read_set_intact guarantees the
+        # head mapping matches the staged state's
+        phys_col = _cm_map(state.get("columnMapping")).get(prune_col, prune_col)
+        for rel in head["adds"]:
+            if rel in state["adds"]:
+                continue
+            stats = (head["adds"][rel].get("stats") or {}).get(phys_col)
             try:
-                return self._commit(actions, head_v, operation=operation)
-            except CommitConflictError:
-                if attempt == self._REBASE_ATTEMPTS - 1:
-                    return None
-                time.sleep(random.uniform(0, min(0.001 * (attempt + 1), 0.05)))
+                disjoint = (
+                    stats is not None
+                    and stats[0] is not None
+                    and stats[1] is not None
+                    and (hi < stats[0] or lo > stats[1])
+                )
+            except TypeError:
+                # incomparable stat kinds (e.g. string stats vs a
+                # numeric key after a type change): conservatively
+                # overlapping — same rule as pruned_files
+                disjoint = False
+            if not disjoint:  # possible matching keys in the new file
+                raise CommitConflictError(f"a concurrent append may hold keys in [{lo}, {hi}]")
+        return actions
 
     def delete_where(
         self,
@@ -4054,11 +4060,11 @@ class TxTable:
         vector) or moved schema/properties/features still surfaces
         :class:`CommitConflictError` — that rewrite is genuinely
         stale, and the caller owns the retry policy."""
-        if txn is not None and txn[1] in self.committed_txns(txn[0]):
-            return None
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         base = self.version()
         state = self._replay_state()
+        if txn is not None and txn[1] in state["txns"].get(txn[0], set()):
+            return None
         self._check_writer_features(state)
         # the LOG decides the delete mode and cdc staging — another
         # writer (the CLI, a bare TxTable(path)) must honor the
@@ -4134,41 +4140,36 @@ class TxTable:
         serializability at O(new files) cost, one notch stronger than
         Delta's WriteSerializable default, which lets
         concurrently-appended matching rows escape."""
-        import random
+        def revalidate(actions: list[dict], head: dict) -> list[dict]:
+            nonlocal state
+            if not self._read_set_intact(state, head):
+                raise CommitConflictError(
+                    f"a concurrent commit touched files this {operation} read"
+                )
+            new_rels = [r for r in head["adds"] if r not in state["adds"]]
+            if new_rels:
+                new_touched = self._detect_matches(
+                    [_data_file(self.path, r, head["adds"].get(r)) for r in new_rels],
+                    head,
+                    pred,
+                    pred_sql,
+                )
+                if new_touched:
+                    ext = build_actions(new_touched, head)
+                    if any("meta" in a for a in actions):
+                        # the readerFeatures meta is already
+                        # staged once in this commit
+                        ext = [a for a in ext if "meta" not in a]
+                    marker = [a for a in actions if "txn" in a]
+                    actions = [a for a in actions if "txn" not in a]
+                    actions.extend(ext)
+                    actions.extend(marker)
+            state = head
+            return actions
 
-        for attempt in range(self._REBASE_ATTEMPTS):
-            try:
-                return self._commit(actions, base, operation=operation)
-            except CommitConflictError:
-                head_v = self.version()
-                head = self._replay_state(as_of=head_v)
-                if txn is not None and txn[1] in head["txns"].get(txn[0], set()):
-                    return None  # a twin replay of this batch won
-                if (
-                    not self._read_set_intact(state, head)
-                    or attempt == self._REBASE_ATTEMPTS - 1
-                ):
-                    raise
-                new_rels = [r for r in head["adds"] if r not in state["adds"]]
-                if new_rels:
-                    new_touched = self._detect_matches(
-                        [_data_file(self.path, r, head["adds"].get(r)) for r in new_rels],
-                        head,
-                        pred,
-                        pred_sql,
-                    )
-                    if new_touched:
-                        ext = build_actions(new_touched, head)
-                        if any("meta" in a for a in actions):
-                            # the readerFeatures meta is already
-                            # staged once in this commit
-                            ext = [a for a in ext if "meta" not in a]
-                        marker = [a for a in actions if "txn" in a]
-                        actions = [a for a in actions if "txn" not in a]
-                        actions.extend(ext)
-                        actions.extend(marker)
-                state, base = head, head_v
-                time.sleep(random.uniform(0, min(0.001 * (attempt + 1), 0.05)))
+        return self._rebase_commit(
+            actions, operation, base=base, txn=txn, revalidate=revalidate
+        )
 
     def _prune_candidates(
         self, files: list[str], state: dict, pred_sql: str | None
@@ -4348,11 +4349,11 @@ class TxTable:
         DELETE). Returns like :meth:`delete_where`."""
         from pyspark.sql.types import StructType
 
-        if txn is not None and txn[1] in self.committed_txns(txn[0]):
-            return None
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         base = self.version()
         state = self._replay_state()
+        if txn is not None and txn[1] in state["txns"].get(txn[0], set()):
+            return None
         self._check_writer_features(state)
         schema = StructType.fromJson(json.loads(state["schema"]))
         unknown = set(assignments) - {f.name for f in schema.fields}
@@ -5019,31 +5020,18 @@ class TxTable:
         (delete, merge, another compaction, a new vector) makes the
         staged rewrite stale: surface the conflict, the caller
         re-runs on a fresh snapshot."""
-        import random
+        def revalidate(actions: list[dict], head: dict) -> list[dict]:
+            if any(
+                rel not in head["adds"]
+                or _norm_action(head["adds"][rel]) != _norm_action(state["adds"][rel])
+                for rel in scope
+            ):
+                raise CommitConflictError(
+                    f"a concurrent commit touched files this {operation} rewrites"
+                )
+            return actions
 
-        for attempt in range(self._REBASE_ATTEMPTS):
-            try:
-                return self._commit(actions, base, operation=operation)
-            except CommitConflictError:
-                # capture the head version FIRST and validate exactly
-                # that snapshot: a commit landing after the staleness
-                # check must fail the NEXT _commit and be re-validated
-                # here, never slip between check and commit (TOCTOU —
-                # a delete racing in that window would have its rows
-                # resurrected by the stale rewrite)
-                head_v = self.version()
-                head = self._replay_state(as_of=head_v)
-                stale = [
-                    rel
-                    for rel in scope
-                    if rel not in head["adds"]
-                    or _norm_action(head["adds"][rel]) != _norm_action(state["adds"][rel])
-                ]
-                if stale or attempt == self._REBASE_ATTEMPTS - 1:
-                    raise
-                base = head_v
-                time.sleep(random.uniform(0, min(0.001 * (attempt + 1), 0.05)))
-        raise AssertionError("unreachable")  # loop always returns or raises
+        return self._rebase_commit(actions, operation, base=base, revalidate=revalidate)
 
     def reorg_purge(self, where: str | None = None) -> int:
         """REORG TABLE ... APPLY (PURGE): rewrite exactly the files

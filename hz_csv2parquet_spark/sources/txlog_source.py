@@ -1707,19 +1707,17 @@ class _TxLogBatchWriter(_StagedParquetWriteMixin, DataSourceArrowWriter):
         if bad:
             raise ValueError(f"partition columns not in the written schema: {bad}")
 
-    def _evolution_actions(self, t) -> list[dict]:
-        """The evolve_schema-equivalent meta action for a mergeSchema
-        write, REVALIDATED against the now-current log: construction
-        time chose the union schema (and, for a mapped table, fresh
-        physical ids the executors staged parquet under) — if a
-        racing commit moved the schema or the mapping since, those
-        choices may collide, so surface a conflict instead of
-        committing a stale evolution."""
-        if self.evolve_meta is None:
-            return []
+    def _evolution_actions(self, actions: list[dict], state: dict) -> list[dict]:
+        """``actions`` plus the evolve_schema-equivalent meta action
+        for a mergeSchema write, REVALIDATED against ``state`` (the
+        log at the commit's base, then at each rebase head):
+        construction time chose the union schema (and, for a mapped
+        table, fresh physical ids the executors staged parquet
+        under) — if a racing commit moved the schema or the mapping
+        since, those choices may collide, so surface a conflict
+        instead of committing a stale evolution."""
         from .txlog import CommitConflictError
 
-        state = t._replay_state()
         if state.get("schema") != self._evolve_base["schema"]:
             raise CommitConflictError(
                 f"schema of {self.path} changed during a mergeSchema write"
@@ -1732,40 +1730,33 @@ class _TxLogBatchWriter(_StagedParquetWriteMixin, DataSourceArrowWriter):
                     f"column mapping of {self.path} changed during a "
                     "mergeSchema write"
                 )
-        return [{"meta": self.evolve_meta}]
+        return [a for a in actions if "meta" not in a] + [{"meta": self.evolve_meta}]
 
     def commit(self, messages) -> None:
         t = self._table()
         actions = self._adds(messages)
-        new_table = t.version() < 0
-        if new_table:
+        # capture the base version FIRST and replay exactly that
+        # snapshot: a commit landing between replay and commit must
+        # surface as a conflict (or a revalidated rebase), never be
+        # silently left out of what this commit checked
+        base = t.version()
+        if base < 0:
+            # a create never rebases: losing version 0 to another
+            # creator surfaces as a conflict instead of overwriting
+            # the winner's schema and properties
             actions.append({"meta": self._create_meta()})
+            t._rebase_commit(actions, "WRITE-APPEND", base=base)
         elif not self.overwrite:
-            # mergeSchema evolution folds into the SAME append commit;
-            # revalidation makes blind rebase unsafe, so run the
-            # bounded explicit loop below instead of _rebase_commit
-            evo = self._evolution_actions(t)
-            if evo:
-                from .txlog import CommitConflictError
-
-                actions += evo
-                for attempt in range(t._REBASE_ATTEMPTS):
-                    base = t.version()
-                    try:
-                        t._commit(actions, base, operation="WRITE-APPEND")
-                        return
-                    except CommitConflictError:
-                        if attempt == t._REBASE_ATTEMPTS - 1:
-                            raise
-                        # re-run the staleness checks against the
-                        # racing commit before retrying
-                        actions = actions[:-1] + self._evolution_actions(t)
-        if self.overwrite and not new_table:
-            # capture the base version FIRST and replay exactly that
-            # snapshot: a commit landing between replay and commit must
-            # surface as a conflict, not survive the overwrite with its
-            # files silently left out of the remove set
-            base = t.version()
+            revalidate = None
+            if self.evolve_meta is not None:
+                # mergeSchema evolution folds into the SAME append
+                # commit and is re-checked against every rebase head
+                revalidate = self._evolution_actions
+                actions = revalidate(actions, t._replay_state(as_of=base))
+            t._rebase_commit(
+                actions, "WRITE-APPEND", base=base, revalidate=revalidate
+            )
+        else:
             state = t._replay_state(as_of=base)
             for rel in state["adds"]:
                 actions.append({"remove": {"path": rel}})
@@ -1795,8 +1786,6 @@ class _TxLogBatchWriter(_StagedParquetWriteMixin, DataSourceArrowWriter):
             # version race means that snapshot is stale — surface the
             # conflict (single attempt), matching merge/compact
             t._commit(actions, base, operation="WRITE-OVERWRITE")
-        else:
-            t._rebase_commit(actions, operation="WRITE-APPEND")
 
     def abort(self, messages) -> None:
         super().abort(messages)
@@ -1836,36 +1825,27 @@ class _TxLogStreamWriter(_StagedParquetWriteMixin, DataSourceStreamArrowWriter):
         if bad:
             raise ValueError(f"partition columns not in the streamed schema: {bad}")
 
-    def _committed(self, t) -> set:
-        # a brand-new table has no log yet — nothing committed
-        return t.committed_txns(self.app_id) if t.version() >= 0 else set()
-
     def commit(self, messages, batchId: int) -> None:
         t = self._table()
-        if batchId in self._committed(t):
+        actions = self._adds(messages)
+        # capture the base version FIRST: a twin landing after the
+        # replay below fails the O_EXCL commit and is caught by the
+        # rebase's own twin check instead of double-committing
+        base = t.version()
+        if base < 0:
+            # a brand-new table has no log yet — nothing committed;
+            # the create conflicts rather than rebases if another
+            # writer takes version 0 first
+            actions.append({"meta": self._create_meta()})
+        elif batchId in t._replay_state(as_of=base)["txns"].get(self.app_id, set()):
             # replayed batch: drop the freshly staged duplicates and
             # keep the original commit — exactly-once
             self.abort(messages, batchId)
             return
-        actions = self._adds(messages)
-        if t.version() < 0:
-            actions.append({"meta": self._create_meta()})
         actions.append({"txn": {"appId": self.app_id, "batchId": batchId}})
-        # append_batch's bounded rebase with the twin check: if a
-        # replayed twin of this very batch wins a version race, drop
-        # out instead of double-committing
-        from .txlog import CommitConflictError
-
-        for attempt in range(t._REBASE_ATTEMPTS):
-            base = t.version()
-            if batchId in self._committed(t):
-                self.abort(messages, batchId)
-                return
-            try:
-                t._commit(actions, base, operation="STREAMING-SINK")
-                return
-            except CommitConflictError:
-                if attempt == t._REBASE_ATTEMPTS - 1:
-                    raise
-
-
+        v = t._rebase_commit(
+            actions, "STREAMING-SINK", base=base, txn=(self.app_id, batchId)
+        )
+        if v is None:
+            # a replayed twin of this very batch won a version race
+            self.abort(messages, batchId)

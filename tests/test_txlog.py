@@ -18,6 +18,7 @@ from hz_csv2parquet_spark.sources.txlog import (
     TxTable,
     _version_file,
 )
+from tests.test_txlog_source import _staged_message
 
 
 def _mk(spark, tmp_path, n=100, files=4):
@@ -898,11 +899,51 @@ def test_vacuum_sweeps_leaked_tmp_and_survives_races(spark, tmp_path):
     assert t.snapshot().count() == 10
 
 
-def test_append_rebase_is_bounded(spark, tmp_path, monkeypatch):
-    """ADVICE r7: the blind-append rebase loop is capped — under
-    pathological permanent conflict it surfaces CommitConflictError
-    instead of spinning forever."""
-    t = _mk(spark, tmp_path, n=10, files=1)
+def _merge_schema_write(spark, t):
+    from hz_csv2parquet_spark.sources.txlog_source import _TxLogBatchWriter
+
+    wide = spark.createDataFrame([(1, 1, 1.0)], "k long, v long, w double").schema
+    w = _TxLogBatchWriter(t.path, wide, {"mergeSchema": "true"}, overwrite=False)
+    return lambda: w.commit([_staged_message(t.path, {"k": [99], "v": [99], "w": [1.0]})])
+
+
+def _stream_sink(spark, t):
+    from hz_csv2parquet_spark.sources.txlog_source import _TxLogStreamWriter
+
+    w = _TxLogStreamWriter(t.path, t.snapshot().schema, {})
+    return lambda: w.commit([_staged_message(t.path, {"k": [99], "v": [99]})], 0)
+
+
+def _row(spark):
+    return spark.createDataFrame([(99, 99)], "k long, v long")
+
+
+#: every caller of the rebase loop: (spark, table) -> the call to bound
+_REBASING_CALLERS = {
+    "append": lambda spark, t: lambda: t.append(_row(spark)),
+    "append_batch": lambda spark, t: lambda: t.append_batch(_row(spark), "app", 0),
+    "merge_disjoint_rebase": lambda spark, t: lambda: t.merge_upsert(_row(spark), "k"),
+    "delete_where": lambda spark, t: lambda: t.delete_where("k = 3"),
+    "update_where": lambda spark, t: lambda: t.update_where("k = 3", {"v": "v + 1"}),
+    "compact": lambda spark, t: lambda: t.compact(target_files=1),
+    "merge_schema_write": _merge_schema_write,
+    "stream_sink": _stream_sink,
+}
+
+
+@pytest.mark.parametrize("caller", sorted(_REBASING_CALLERS))
+def test_append_rebase_is_bounded(spark, tmp_path, monkeypatch, caller):
+    """ADVICE r7: the rebase loop is capped — under pathological
+    permanent conflict every rebasing verb surfaces
+    CommitConflictError after exactly ``_REBASE_ATTEMPTS`` commits,
+    with one backoff sleep between each, instead of spinning."""
+    import time
+    import types
+
+    from hz_csv2parquet_spark.sources import txlog as txlog_mod
+
+    t = _mk(spark, tmp_path, n=20, files=4)
+    call = _REBASING_CALLERS[caller](spark, t)
     monkeypatch.setattr(TxTable, "_REBASE_ATTEMPTS", 3)
     calls = {"n": 0}
 
@@ -910,10 +951,50 @@ def test_append_rebase_is_bounded(spark, tmp_path, monkeypatch):
         calls["n"] += 1
         raise CommitConflictError("permanent")
 
+    sleeps: list = []
     monkeypatch.setattr(TxTable, "_commit", always_conflict)
+    monkeypatch.setattr(
+        txlog_mod, "time", types.SimpleNamespace(time=time.time, sleep=sleeps.append)
+    )
     with pytest.raises(CommitConflictError):
-        t.append(spark.createDataFrame([(99, 99)], "k long, v long"))
+        call()
     assert calls["n"] == 3
+    assert len(sleeps) == 2
+
+
+def test_rebase_loop_has_one_home():
+    """Tooling guard: the attempt bound and the jittered backoff live
+    only in ``TxTable._rebase_commit`` — a hand-rolled copy of the
+    commit-retry loop anywhere in the txlog modules fails here."""
+    import ast
+
+    from hz_csv2parquet_spark.sources import txlog, txlog_source
+
+    def hits(node) -> int:
+        return sum(
+            isinstance(n, ast.Attribute)
+            and (
+                n.attr == "_REBASE_ATTEMPTS"
+                or (
+                    n.attr == "uniform"
+                    and isinstance(n.value, ast.Name)
+                    and n.value.id == "random"
+                )
+            )
+            for n in ast.walk(node)
+        )
+
+    for mod in (txlog, txlog_source):
+        tree = ast.parse(open(mod.__file__).read())
+        homes = {
+            fn.name: hits(fn)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and hits(fn)
+        }
+        expected = {"_rebase_commit": 3} if mod is txlog else {}
+        # the bound is read twice and the backoff drawn once, all
+        # inside the helper — and nowhere outside a function either
+        assert homes == expected and hits(tree) == sum(expected.values()), homes
 
 
 def test_changes_blind_append_is_pure_inserts(spark, tmp_path):

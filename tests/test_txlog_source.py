@@ -1192,3 +1192,132 @@ def test_null_count_skipping_is_null_and_is_not_null(spark, tmp_path):
     assert df.filter("v IS NULL").count() == 15
     assert df.filter("v IS NOT NULL").count() == 15
     assert df.filter("v IS NOT NULL AND v >= 200").count() == 5
+
+
+def _staged_message(path: str, rows: dict):
+    """A parquet part staged under the table the way a writer task
+    stages one, as the commit message its driver sees."""
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hz_csv2parquet_spark.sources.txlog_source import _WriteMessage
+
+    rel = f"data-stream/part-{uuid.uuid4().hex}.parquet"
+    os.makedirs(os.path.join(path, "data-stream"), exist_ok=True)
+    table = pa.table(rows)
+    pq.write_table(table, os.path.join(path, rel))
+    return _WriteMessage([{"path": rel, "rows": table.num_rows, "stats": {}}])
+
+
+def _racing_commit(monkeypatch, race):
+    """Patch ``TxTable._commit`` so ``race()`` runs once, inside the
+    first commit, before that commit creates its version file — the
+    racer wins the version the caller was about to take."""
+    real_commit = TxTable._commit
+    fired = {"n": 0}
+
+    def racing_commit(self, actions, expected_version, operation=None):
+        if fired["n"] == 0:
+            fired["n"] += 1
+            race()
+        return real_commit(self, actions, expected_version, operation=operation)
+
+    monkeypatch.setattr(TxTable, "_commit", racing_commit)
+    return fired
+
+
+def _writer_commit(kind, path, schema):
+    from hz_csv2parquet_spark.sources.txlog_source import (
+        _TxLogBatchWriter,
+        _TxLogStreamWriter,
+    )
+
+    msg = _staged_message(path, {"k": [1], "v": [2]})
+    if kind == "batch_writer":
+        w = _TxLogBatchWriter(path, schema, {}, overwrite=False)
+        return msg, lambda: w.commit([msg])
+    w = _TxLogStreamWriter(path, schema, {})
+    return msg, lambda: w.commit([msg], 0)
+
+
+@pytest.mark.parametrize("kind", ["batch_writer", "stream_sink"])
+def test_writer_create_race_conflicts_instead_of_rebasing(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A writer auto-creating a table must not rebase its CREATE onto
+    a table another writer created first: that would re-commit the
+    loser's schema and properties at version 1, silently replacing
+    the winner's. The loser surfaces CommitConflictError and the
+    winner's table is intact."""
+    import json as _json
+
+    from hz_csv2parquet_spark.sources.txlog import CommitConflictError
+
+    path = str(tmp_path / "tbl")
+    _, commit = _writer_commit(kind, path, spark.range(1).selectExpr(
+        "id AS k", "id AS v"
+    ).schema)
+    winner = TxTable(spark, path, change_data=True)
+    fired = _racing_commit(monkeypatch, lambda: winner.create(spark.range(3)))
+    with pytest.raises(CommitConflictError):
+        commit()
+    assert fired["n"] == 1
+    assert winner.version() == 0
+    state = winner._replay_state()
+    assert [f["name"] for f in _json.loads(state["schema"])["fields"]] == ["id"]
+    assert state["properties"]["changeDataFeed"] is True
+    assert sorted(r.id for r in winner.snapshot().collect()) == [0, 1, 2]
+
+
+def test_stream_sink_twin_race_aborts_and_commits_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """The sink's exactly-once race: a replayed twin of the same
+    (appId, batchId) wins the version between the sink's duplicate
+    check and its commit. The loser finds the marker on the head,
+    commits nothing and deletes its staged files."""
+    import os
+
+    t = _mk(spark, tmp_path, n=4, files=1)
+    twin = TxTable(spark, t.path)
+    msg, commit = _writer_commit("stream_sink", t.path, t.snapshot().schema)
+    staged = os.path.join(t.path, msg.files[0]["path"])
+    fired = _racing_commit(
+        monkeypatch,
+        lambda: twin._rebase_commit(
+            [{"txn": {"appId": "hz_txlog_sink", "batchId": 0}}], "STREAMING-SINK"
+        ),
+    )
+    commit()
+    assert fired["n"] == 1
+    assert t.version() == 1  # only the twin's marker commit
+    assert t.committed_txns("hz_txlog_sink") == {0}
+    assert not os.path.exists(staged)
+    assert sorted(r.k for r in t.snapshot().collect()) == [0, 1, 2, 3]
+
+
+def test_merge_schema_write_conflicts_with_racing_evolve_schema(
+    spark, tmp_path, monkeypatch
+):
+    """A mergeSchema append chose its union schema at writer
+    construction; a racing evolve_schema that moves the schema first
+    makes that choice stale, so the rebase raises instead of
+    committing the stale evolution over the racer's schema."""
+    from hz_csv2parquet_spark.sources.txlog import CommitConflictError
+    from hz_csv2parquet_spark.sources.txlog_source import _TxLogBatchWriter
+
+    t = _mk(spark, tmp_path, n=4, files=1)
+    wide = spark.createDataFrame([(1, 2, 1.5)], "k long, v long, w double")
+    w = _TxLogBatchWriter(t.path, wide.schema, {"mergeSchema": "true"}, overwrite=False)
+    msg = _staged_message(t.path, {"k": [1], "v": [2], "w": [1.5]})
+    racer = spark.createDataFrame([(9, 9, "x")], "k long, v long, note string")
+    fired = _racing_commit(monkeypatch, lambda: t.evolve_schema(racer))
+    with pytest.raises(CommitConflictError, match="mergeSchema"):
+        w.commit([msg])
+    assert fired["n"] == 1
+    assert t.version() == 1  # only the racer's evolution landed
+    assert t.snapshot().columns == ["k", "v", "note"]
+    assert t.snapshot().count() == 5
