@@ -136,9 +136,8 @@ def _shingle_frame(df: DataFrame, id_col: str, text_col: str, shingle_n: int) ->
     single-slot memo (tables.memo_persist): the signature table is
     read by both sides of the bucket self-join and by the verify join
     — at scale this is the materialized signature table every LSH
-    dedup pipeline writes once and reuses. Repeated runs over the
-    same corpus reuse one cached frame; switching corpora unpersists
-    the previous one."""
+    dedup pipeline writes once and reuses. Each call re-persists the
+    frame and unpersists the previous call's."""
     from ..tables import memo_persist
 
     sh = spread(df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))).select(
@@ -361,18 +360,13 @@ def simhash_near_pairs(
     hamming.
 
     The signature frame is memo-checkpointed (tables.memo_checkpoint,
-    same single-slot design as the MinHash signature table):
-    signatures are an artifact computed once per corpus and reused by
-    the band join's two sides and repeated runs, and the lineage
-    truncation keeps per-query re-analysis of the 65-expression
-    aggregate out of the hot path."""
+    same single-slot design as the MinHash signature table): each call
+    computes the signatures once for the band join's two sides, and
+    the lineage truncation keeps per-query re-analysis of the
+    65-expression aggregate out of the hot path."""
     from ..tables import memo_checkpoint
 
-    sig = memo_checkpoint(
-        lambda: simhash64_frame(df, id_col, text_col),
-        "simhash_signatures",
-        f"{df.semanticHash()}|{id_col}|{text_col}",
-    )
+    sig = memo_checkpoint(simhash64_frame(df, id_col, text_col), "simhash_signatures")
     bands = [
         F.floor(F.col("__s0") / F.lit(65536)).cast("long"),
         (F.col("__s0") % F.lit(65536)).cast("long"),

@@ -37,8 +37,8 @@ Scale analysis (the reason this survives 100 TB):
   analysis cost stays bounded on adversarial long-diameter graphs
   (pinned by the path-graph test in tests/test_dedup.py).
 - The final labels frame is routed through the single-slot memo
-  (tables.memo_persist): repeated invocations in one session reuse or
-  evict-and-release it instead of each leaking a cached table.
+  (tables.memo_persist): each invocation evicts and releases the
+  previous one's instead of leaking a cached table.
 """
 
 from __future__ import annotations
@@ -129,14 +129,10 @@ def connected_components(
             break
         prev_sum = s
     sym.unpersist()
-    # hand ownership to the single-slot memo: a later invocation (or a
-    # different graph) evicts and releases this frame instead of it
-    # leaking for the session's life. On a slot hit (identical graph
-    # re-run) the memo returns the older cached frame — release ours.
-    out = memo_persist(labels, "cc_labels")
-    if out is not labels:
-        labels.unpersist()
-    return out
+    # hand ownership to the single-slot memo: a later invocation
+    # evicts and releases this frame instead of it leaking for the
+    # session's life
+    return memo_persist(labels, "cc_labels")
 
 
 def dup_clusters(

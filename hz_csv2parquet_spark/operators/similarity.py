@@ -243,65 +243,57 @@ def kmeans_centroids(
     both engines (inner-join semantics)."""
     from ..tables import memo_checkpoint
 
-    def _train() -> DataFrame:
-        sample = (
-            corpus.filter((F.col(id_col) % train_mod) == 0) if train_mod > 1 else corpus
-        )
-        cents = corpus.filter(F.col(id_col) < k).select(
-            F.col(id_col).cast("long").alias("cell"), F.col(vec_col).alias("__kv")
-        )
-        # the M-step's no-explode shape needs the (fixed) vector
-        # width: either declared by the caller — then asserted per row
-        # via checked_dim, so a wrong declaration fails loudly instead
-        # of computing truncated means — or probed with one bounded
-        # 1-row collect. IVF vectors are fixed-dim by construction
-        # (ragged input would already break the banded-LSH assertion).
-        d = dim if dim is not None else len(corpus.select(vec_col).head()[0])
-        s = sample.select(
-            F.col(id_col).alias("__vid"),
-            (checked_dim(F.col(vec_col), d) if dim is not None else F.col(vec_col)).alias(
-                "__v"
-            ),
-        )
-        for _ in range(iters):
-            # E-step as a row-local fold over the collected centroid
-            # array (same winner as the old (cos DESC, cell) window —
-            # see _nearest_cell): the old per-iteration shuffle+sort
-            # of |sample|·K scored rows is gone; assignment is a
-            # projection behind a 1-row broadcast.
-            assigned = s.join(F.broadcast(_centroid_array(cents))).select(
-                _nearest_cell(F.col("__v"), F.col("__cents"))["cell"].alias("cell"),
-                "__v",
-            )
-            # M-step: element-wise mean as ``dim`` per-position DECIMAL
-            # sums in ONE partial-aggregable groupBy — replaces the old
-            # posexplode → groupBy(cell, pos) → collect_list/sort_array
-            # re-assembly (two shuffles of |sample|·dim exploded rows).
-            # DECIMAL addition is exact and order-independent, so the
-            # sums — and the double division by the cell count — are
-            # bit-identical to the exploded form the oracle replays.
-            # Emitted as ONE parsed expression: the Column-composed
-            # form costs dim × ~7 py4j round trips per iteration
-            # (~3 s of pure driver time at dim 64 — the same trap
-            # banded_lsh_bucket documents).
-            mus = ", ".join(
-                "CAST(sum(CAST(CAST(element_at(__v, {i}) AS DOUBLE)"
-                " AS DECIMAL(38,10))) AS DOUBLE) / CAST(count(1) AS DOUBLE)".format(i=i)
-                for i in range(1, d + 1)
-            )
-            cents = assigned.groupBy("cell").agg(F.expr(f"array({mus})").alias("__kv"))
-        return cents
-
-    # thunk/key memo: training stays one lazy plan WITHIN a call (each
-    # operator executes once — no diamonds inside the loop), while
-    # repeated calls (bench warm-up + timed runs, IVF assign + semantic
-    # dedup in one session) reuse the k-row checkpointed quantizer
-    # instead of re-training per consumer.
-    cents = memo_checkpoint(
-        _train,
-        "kmeans_centroids",
-        f"{corpus.semanticHash()}|{id_col}|{vec_col}|{k}|{iters}|{train_mod}|{dim}",
+    sample = (
+        corpus.filter((F.col(id_col) % train_mod) == 0) if train_mod > 1 else corpus
     )
+    cents = corpus.filter(F.col(id_col) < k).select(
+        F.col(id_col).cast("long").alias("cell"), F.col(vec_col).alias("__kv")
+    )
+    # the M-step's no-explode shape needs the (fixed) vector
+    # width: either declared by the caller — then asserted per row
+    # via checked_dim, so a wrong declaration fails loudly instead
+    # of computing truncated means — or probed with one bounded
+    # 1-row collect. IVF vectors are fixed-dim by construction
+    # (ragged input would already break the banded-LSH assertion).
+    d = dim if dim is not None else len(corpus.select(vec_col).head()[0])
+    s = sample.select(
+        F.col(id_col).alias("__vid"),
+        (checked_dim(F.col(vec_col), d) if dim is not None else F.col(vec_col)).alias(
+            "__v"
+        ),
+    )
+    for _ in range(iters):
+        # E-step as a row-local fold over the collected centroid
+        # array (same winner as the old (cos DESC, cell) window —
+        # see _nearest_cell): the old per-iteration shuffle+sort
+        # of |sample|·K scored rows is gone; assignment is a
+        # projection behind a 1-row broadcast.
+        assigned = s.join(F.broadcast(_centroid_array(cents))).select(
+            _nearest_cell(F.col("__v"), F.col("__cents"))["cell"].alias("cell"),
+            "__v",
+        )
+        # M-step: element-wise mean as ``dim`` per-position DECIMAL
+        # sums in ONE partial-aggregable groupBy — replaces the old
+        # posexplode → groupBy(cell, pos) → collect_list/sort_array
+        # re-assembly (two shuffles of |sample|·dim exploded rows).
+        # DECIMAL addition is exact and order-independent, so the
+        # sums — and the double division by the cell count — are
+        # bit-identical to the exploded form the oracle replays.
+        # Emitted as ONE parsed expression: the Column-composed
+        # form costs dim × ~7 py4j round trips per iteration
+        # (~3 s of pure driver time at dim 64 — the same trap
+        # banded_lsh_bucket documents).
+        mus = ", ".join(
+            "CAST(sum(CAST(CAST(element_at(__v, {i}) AS DOUBLE)"
+            " AS DECIMAL(38,10))) AS DOUBLE) / CAST(count(1) AS DOUBLE)".format(i=i)
+            for i in range(1, d + 1)
+        )
+        cents = assigned.groupBy("cell").agg(F.expr(f"array({mus})").alias("__kv"))
+    # training stays one lazy plan (each operator executes once — no
+    # diamonds inside the loop); the checkpoint materializes the k-row
+    # quantizer once, so every consumer in this call reads k rows
+    # instead of re-running the training plan.
+    cents = memo_checkpoint(cents, "kmeans_centroids")
     return cents.select("cell", F.col("__kv").alias(vec_col))
 
 
@@ -390,12 +382,9 @@ def ivf_topk(
     compares a query against vectors outside probed cells — the
     inverted-file structure IS the shuffle key. Output: query_id,
     neighbor_id, cosine, rn."""
-    from ..tables import memo_persist
-
-    cents = memo_persist(
-        kmeans_centroids(corpus, id_col, vec_col, n_centroids, iters, train_mod, dim),
-        "ivf_centroids",
-    )
+    # a projection of the k-row checkpointed quantizer: persisting it
+    # again would only copy k rows
+    cents = kmeans_centroids(corpus, id_col, vec_col, n_centroids, iters, train_mod, dim)
     # keep_vec: the assignment aggregate carries each vector next to
     # its cell, so no corpus-by-id re-join is needed to build the
     # inverted file — one shuffle join of the full corpus removed
@@ -512,18 +501,16 @@ def embedding_near_pairs(
         F.col(id_col).alias("__id"), checked_dim(F.col(vec_col), dim).alias("__v")
     )
 
-    # memoize + lineage-truncate the banded keys via the thunk/key memo
-    # (NOT memo_persist): the bucket projection carries
+    # lineage-truncate the banded keys via the checkpoint memo (NOT
+    # memo_persist): the bucket projection carries
     # tables × planes × dim md5-derived hyperplane terms, so even
-    # ANALYZING the frame (semanticHash, per-leg resolution in the
-    # self-join below) costs seconds per call — the same trap the
-    # SimHash signature table documents at tables.memo_checkpoint. The
-    # key derives from the input plan + parameters; the expression tree
-    # is only built on a miss, the self-join's two legs read the
-    # checkpointed blocks (the signature-table parquet write is the
-    # durable form at cluster scale).
-    def _build() -> DataFrame:
-        return base.select(
+    # ANALYZING the frame (per-leg resolution in the self-join below)
+    # costs seconds per call — the same trap the SimHash signature
+    # table documents at tables.memo_checkpoint. The self-join's two
+    # legs read the checkpointed blocks (the signature-table parquet
+    # write is the durable form at cluster scale).
+    banded = memo_checkpoint(
+        base.select(
             "__id",
             F.explode(
                 F.array(
@@ -536,12 +523,8 @@ def embedding_near_pairs(
                     ]
                 )
             ).alias("b"),
-        ).select("__id", "b.tbl", "b.bkt")
-
-    banded = memo_checkpoint(
-        _build,
+        ).select("__id", "b.tbl", "b.bkt"),
         "embnear_banded",
-        f"{corpus.semanticHash()}|{id_col}|{vec_col}|{dim}|{planes}|{tables}",
     )
     l, r = banded.alias("l"), banded.alias("r")
     cand = (

@@ -33,7 +33,6 @@ def skyline_2d(
     lo: Column | int,
     hi: Column | int,
     n_buckets: int = 64,
-    memo_slot: str = "skyline_bd",
 ) -> DataFrame:
     """Rows of ``pts`` not strictly dominated in (``d_col``,
     ``p_col``): no other row has BOTH a larger d and a larger p.
@@ -46,16 +45,11 @@ def skyline_2d(
     suffix max and the within-bucket window, and DataFrame plans
     share no common subtrees — unmaterialized, each consumer re-runs
     the corpus-scale groupBy (3 scans of the input per run where 2 is
-    the shape's floor). Materializing it is SCALE-CONDITIONAL (round
-    16, measured): an unconditional persist read 0.86 → 1.24 s solo
-    at sf0.1 — the cached frame pins the full shuffle partitioning
-    (tasks 17 → 238, AQE can no longer coalesce the tiny aggregate)
-    while the recompute is a cheap pruned concurrent scan — so the
-    local default recomputes, and ``spark.hz.materializeSharedFrames=
-    true`` (the cluster switch, where the re-run is a full corpus
-    pass) restores the boundary under ``memo_slot``. Identical rows
-    either way."""
-    from ..tables import memo_persist_at_scale
+    the shape's floor). It is still not persisted: round 16 measured
+    a persist at 0.86 → 1.24 s solo at sf0.1 — the cached frame pins
+    the full shuffle partitioning (tasks 17 → 238, AQE can no longer
+    coalesce the tiny aggregate) while the recompute is a cheap
+    pruned concurrent scan."""
     lo = F.lit(lo) if isinstance(lo, int) else lo
     hi = F.lit(hi) if isinstance(hi, int) else hi
     b = pts.withColumn(
@@ -68,10 +62,7 @@ def skyline_2d(
         ).cast("int"),
     )
     # per-(bucket, d) max p — the grain the greater-side scan runs on
-    bd = memo_persist_at_scale(
-        b.groupBy("__bkt", d_col).agg(F.max(p_col).alias("__p_at_d")),
-        memo_slot,
-    )
+    bd = b.groupBy("__bkt", d_col).agg(F.max(p_col).alias("__p_at_d"))
     # strictly-greater-bucket suffix max (tiny frame)
     per_b = bd.groupBy("__bkt").agg(F.max("__p_at_d").alias("__p_max"))
     w_suffix = (

@@ -274,6 +274,7 @@ _STEP_MS = FUNNEL_STEP_MS  # 1 h between funnel steps (shared with E89 + oracles
     UNION ALL
     SELECT 'purchase_1h', CAST((SELECT COUNT(*) FROM s3) AS BIGINT)
     """,
+    since=17,
 )
 def funnel_conversion_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch conversion funnel: users who viewed; whose FIRST
@@ -287,22 +288,16 @@ def funnel_conversion_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream.
 
     The twice-consumed stage frames (fv feeds the click join AND its
-    own count; s2 the purchase join AND its count) recompute under
-    the local default — three sub-0.5 s scalar counts over tiny
-    user-grain aggregates, adjudicated round 15 as not worth a
-    serializing persist on local[32] — and materialize under
-    ``spark.hz.materializeSharedFrames=true``, where each recompute
-    would be a corpus-scale aggregation chain (round 16, VERDICT
-    item 6; identical results either way)."""
-    from .tables import memo_persist_at_scale
-
+    own count; s2 the purchase join AND its count) are not persisted:
+    they are three sub-0.5 s scalar counts over tiny user-grain
+    aggregates, and round 15 measured a persist as a loss on local[32]
+    (it serializes materialize-then-consume)."""
     ev = table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     ms = lambda c: F.unix_millis(F.col(c))  # noqa: E731 — integer-exact epoch ms
-    fv = memo_persist_at_scale(
+    fv = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
-        .agg(F.min("ts").alias("vts")),
-        "funnel_fv",
+        .agg(F.min("ts").alias("vts"))
     )
     fc = (
         ev.filter(F.col("event_type") == "click")
@@ -311,9 +306,7 @@ def funnel_conversion_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("cts"), F.min("vts").alias("vts"))
     )
-    s2 = memo_persist_at_scale(
-        fc.filter(ms("cts") - ms("vts") <= _STEP_MS), "funnel_s2"
-    )
+    s2 = fc.filter(ms("cts") - ms("vts") <= _STEP_MS)
     fp = (
         ev.filter(F.col("event_type") == "purchase")
         .join(s2.select("user_id", "cts"), "user_id")
@@ -633,7 +626,7 @@ def hierarchy_depths_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT 1 FROM pts b WHERE b.d > a.d AND b.p > a.p
     )
     """,
-    since=5,
+    since=17,
 )
 def skyline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D skyline (Pareto frontier): orders not strictly dominated

@@ -585,7 +585,7 @@ def _pagerank_sql() -> str:
     """
 
 
-@query("pagerank_event_types", sql=_pagerank_sql(), since=5, headline=True)
+@query("pagerank_event_types", sql=_pagerank_sql(), since=17, headline=True)
 def pagerank_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (5 power iterations, damping 0.85) over the event-type
     transition graph mined from per-user consecutive events — the
@@ -602,45 +602,36 @@ def pagerank_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .tables import memo_checkpoint
 
-    def build_edges() -> DataFrame:
-        ev = table(spark, sf_dir, "events").select(
-            "user_id", "event_type", F.unix_millis("ts").alias("ms"), "event_id"
+    ev = table(spark, sf_dir, "events").select(
+        "user_id", "event_type", F.unix_millis("ts").alias("ms"), "event_id"
+    )
+    w = Window.partitionBy("user_id").orderBy("ms", "event_id")
+    lagged = ev.select("event_type", F.lag("event_type").over(w).alias("prev"))
+    ed = (
+        lagged.filter(F.col("prev").isNotNull())
+        .groupBy(F.col("prev").alias("a"), F.col("event_type").alias("b"))
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+    outw = ed.groupBy("a").agg(F.sum("w").alias("ow"))
+    # the heavy edge build materializes ONCE via the checkpoint memo,
+    # lineage-truncated so the 5-iteration plan downstream re-analyzes
+    # a three-node scan instead of the whole window agg; coalesce(1)
+    # keeps ≤|types|² rows from paying 32-partition shuffle
+    # round-trips per iteration
+    p = memo_checkpoint(
+        ed.join(outw, "a")
+        .select(
+            "a",
+            "b",
+            (F.col("w").cast("double") / F.col("ow").cast("double")).alias("p"),
         )
-        w = Window.partitionBy("user_id").orderBy("ms", "event_id")
-        lagged = ev.select("event_type", F.lag("event_type").over(w).alias("prev"))
-        ed = (
-            lagged.filter(F.col("prev").isNotNull())
-            .groupBy(F.col("prev").alias("a"), F.col("event_type").alias("b"))
-            .agg(F.count(F.lit(1)).alias("w"))
-        )
-        outw = ed.groupBy("a").agg(F.sum("w").alias("ow"))
-        return (
-            ed.join(outw, "a")
-            .select(
-                "a",
-                "b",
-                (F.col("w").cast("double") / F.col("ow").cast("double")).alias("p"),
-            )
-            .coalesce(1)
-        )
-
-    def build_nodes() -> DataFrame:
-        return (
-            table(spark, sf_dir, "events")
-            .select(F.col("event_type").alias("node"))
-            .distinct()
-            .coalesce(1)
-        )
-
-    # the heavy edge build materializes ONCE via the keyed checkpoint
-    # memo (explicit key: fixture dirs are immutable, so sf_dir is the
-    # data fingerprint — no semanticHash analysis of the window plan
-    # per call), lineage-truncated so the 5-iteration plan downstream
-    # re-analyzes a three-node scan instead of the whole window agg;
-    # coalesce(1) keeps ≤|types|² rows from paying 32-partition
-    # shuffle round-trips per iteration
-    p = memo_checkpoint(build_edges, "pagerank_edges", f"pagerank|{sf_dir}")
-    nodes = memo_checkpoint(build_nodes, "pagerank_nodes", f"pagerank_nodes|{sf_dir}")
+        .coalesce(1),
+        "pagerank_edges",
+    )
+    nodes = memo_checkpoint(
+        ev.select(F.col("event_type").alias("node")).distinct().coalesce(1),
+        "pagerank_nodes",
+    )
     r = nodes.select("node", F.lit(1.0).alias("r"))
     for _ in range(_PR_ITERS):
         incoming = (

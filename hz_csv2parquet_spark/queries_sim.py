@@ -163,7 +163,7 @@ def _sql_embedding_near_pairs(
     """
 
 
-@query("embedding_near_pairs", sql=_sql_embedding_near_pairs())
+@query("embedding_near_pairs", sql=_sql_embedding_near_pairs(), since=17)
 def embedding_near_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs over a planted corpus
     (50 duplicated vectors): banded multi-table sign-LSH (4 tables ×
@@ -283,7 +283,7 @@ def _sql_ivf_topk(
     """
 
 
-@query("similarity_ivf_embeddings", sql=_sql_ivf_topk(nprobe=3))
+@query("similarity_ivf_embeddings", sql=_sql_ivf_topk(nprobe=3), since=17)
 def similarity_ivf_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with a trained quantizer (operators/similarity.py
     ivf_topk): centroids from deterministic Lloyd's k-means (2
@@ -330,7 +330,7 @@ def _sql_semantic_dedup(threshold: float = 0.95) -> str:
     """
 
 
-@query("semantic_dedup_embeddings", sql=_sql_semantic_dedup())
+@query("semantic_dedup_embeddings", sql=_sql_semantic_dedup(), since=17)
 def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) over a planted corpus (50
     duplicated vectors): k-means-cluster the embedding space, mark
@@ -687,7 +687,7 @@ def _recall_frame(brute: DataFrame, approx: DataFrame) -> DataFrame:
     sql=_recall_select(
         f"SELECT query_id, neighbor_id FROM ({_sql_ivf_topk(nprobe=3)}) ivf_t"
     ),
-    since=5,
+    since=17,
 )
 def ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of the trained-quantizer IVF index (8 cells, nprobe

@@ -774,7 +774,7 @@ def _sql_simhash_pairs(max_hamming: int = 3) -> str:
     """
 
 
-@query("dedup_simhash_documents", sql=_sql_simhash_pairs(), headline=True)
+@query("dedup_simhash_documents", sql=_sql_simhash_pairs(), headline=True, since=17)
 def dedup_simhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs over the planted corpus: 64-bit
     frequency-weighted signatures (two 32-bit words), 16-bit-chunk

@@ -641,7 +641,7 @@ def q14_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier JOIN rev ON s_suppkey = supplier_no, mx
     WHERE total_revenue = m
     """,
-    since=5,
+    since=17,
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 — top supplier(s) by quarterly revenue, keeping the
@@ -654,25 +654,17 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The supplier-grain revenue frame feeds both the max aggregate
     and the tie filter; each consumer re-runs the quarter's lineitem
-    scan + aggregation unmaterialized. Materializing it is
-    SCALE-CONDITIONAL (round 16, measured like skyline/copurchase: an
-    unconditional persist kept solo time flat at 0.73 s while jobs
-    went 8→9 and tasks 22→182 — the cached frame pins the full
-    shuffle partitioning AQE would coalesce): the local default
-    recomputes, ``spark.hz.materializeSharedFrames=true`` restores
-    the boundary where the re-run is a corpus pass."""
-    from .tables import memo_persist_at_scale
-
+    scan + aggregation. It is not persisted: round 16 measured a
+    persist at a flat 0.73 s solo while jobs went 8→9 and tasks
+    22→182 — the cached frame pins the full shuffle partitioning AQE
+    would coalesce."""
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
     )
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    per = memo_persist_at_scale(
-        li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-            exact_sum(rev).alias("total_revenue")
-        ),
-        "q15_revenue",
+    per = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
+        exact_sum(rev).alias("total_revenue")
     )
     mx = per.agg(F.max("total_revenue").alias("m"))
     s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -786,7 +778,7 @@ def scd2_snapshot_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored
     ) WHERE rn <= 20
     """,
-    since=5,
+    since=17,
 )
 def copurchase_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence — the pairwise stage of frequent-
@@ -800,25 +792,14 @@ def copurchase_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k. Confidence/lift are pure count ratios — deterministic
     doubles on both engines.
 
-    Round 15 measured memo-persisting the distinct basket-item frame
-    (five consumers) at 2.6 s vs 2.0 s un-materialized across six
-    interleaved solo samples — on local[32] the five chains run as
-    concurrent stages on idle cores, while the cache serializes
-    materialize-then-consume. At cluster scale the five-fold
-    recompute is the loser, so the decision is now SCALE-CONDITIONAL
-    (round 16, VERDICT item 6): ``memo_persist_at_scale`` keeps the
-    recompute form under the local default and restores the
-    materialization boundary under
-    ``spark.hz.materializeSharedFrames=true`` — identical results
-    either way (the gate moves a plan boundary, never semantics;
-    oracle green under both settings)."""
+    The distinct basket-item frame (five consumers) is not persisted:
+    round 15 measured a persist at 2.6 s vs 2.0 s un-materialized
+    across six interleaved solo samples — on local[32] the five
+    chains run as concurrent stages on idle cores, while the cache
+    serializes materialize-then-consume."""
     from .operators.topk import grouped_topk
-    from .tables import memo_persist_at_scale
 
-    items = memo_persist_at_scale(
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct(),
-        "copurchase_items",
-    )
+    items = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     n = items.select(F.countDistinct("l_orderkey").alias("n_orders"))
     supp = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c_item"))
     a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))

@@ -42,9 +42,9 @@ _EVENTS_NATIVE_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 )
 
-#: footer-probe memo keyed by resolved path (fixture files are
-#: immutable per sf_dir; test dirs get fresh tmp paths per test)
-_TS_NATIVE_CACHE: dict[str, bool] = {}
+#: footer-probe memo keyed by (path, mtime): a file rewritten at the
+#: same path gets a new mtime and is probed again
+_TS_NATIVE_CACHE: dict[tuple[str, int], bool] = {}
 
 
 def events_ts_is_native(path: str) -> bool:
@@ -53,7 +53,8 @@ def events_ts_is_native(path: str) -> bool:
     seconds). NANOS and raw INT64-epoch-nanos return False → callers
     take the explicit raw-long decode path. The probe reads ONE
     parquet footer (driver-side, metadata only) and memoizes."""
-    hit = _TS_NATIVE_CACHE.get(path)
+    key = (path, os.stat(path).st_mtime_ns)
+    hit = _TS_NATIVE_CACHE.get(key)
     if hit is not None:
         return hit
     import glob
@@ -86,7 +87,7 @@ def events_ts_is_native(path: str) -> bool:
                     native = phys.get("ts") == "INT96"
         except Exception:
             native = False
-    _TS_NATIVE_CACHE[path] = native
+    _TS_NATIVE_CACHE[key] = native
     return native
 
 
@@ -104,8 +105,8 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
-#: Session-lifetime schema cache for the immutable fixture tables,
-#: keyed by absolute path (round 16). A bare ``spark.read.parquet``
+#: Session-lifetime schema cache for the fixture tables, keyed by
+#: (path, mtime) (round 16). A bare ``spark.read.parquet``
 #: dispatches ONE footer-inference job per DataFrame BUILD — re-paid
 #: on every build, i.e. on every timed bench sample of every query
 #: (measured: build 1 job, schema'd build 0; schemas identical by
@@ -113,26 +114,26 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
 #: returned). This caches SCHEMA METADATA only — never rows, plans,
 #: or results — the same "the catalog knows the schema" model every
 #: metastore table and this engine's own txlog log-schema reads use;
-#: plans are byte-identical (same ReadSchema). Fixtures are
-#: immutable, so no invalidation; scratch/derived paths never route
-#: through :func:`table`.
-_SCHEMA_CACHE: dict[str, "object"] = {}
+#: plans are byte-identical (same ReadSchema). A table rewritten at
+#: the same path changes its mtime and so misses the cache.
+_SCHEMA_CACHE: dict[tuple[str, int], "object"] = {}
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Plain parquet scan → Catalyst gets full
     pushdown/pruning on anything layered on top. The footer-derived
-    schema is probed once per path and reused (see
+    schema is probed once per path and mtime, and reused (see
     ``_SCHEMA_CACHE``)."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return read_events(spark, path)
-    schema = _SCHEMA_CACHE.get(path)
+    key = (path, os.stat(path).st_mtime_ns)
+    schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[path] = schema
+        _SCHEMA_CACHE[key] = schema
     return spark.read.schema(schema).parquet(path)
 
 
@@ -183,19 +184,19 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(target) if n < target else df
 
 
-#: single-slot persisted-frame registry keyed by semantic plan hash.
+#: single-slot frame registry: slot name -> the frame that slot holds.
 #: One protocol everywhere (bench, driver verify, pytest): every call
 #: RELEASES the slot's previous frame and rebuilds — cross-call cache
 #: HITS were removed in round 6 (they were bench-only via an env flag,
 #: which meant timed runs served frames persisted during the untimed
 #: warm-up while no correctness check ever exercised the hit path —
 #: ADVICE r5). What remains is bookkeeping: a long-lived session holds
-#: at most one persisted frame per slot name and evicted slots never
-#: leak storage. Each slot records the frame so a slot bound to a
-#: stopped SparkContext (session restarted between calls — common
-#: across test sessions) is simply dropped, not unpersisted: its
-#: cached / checkpointed blocks died with the context.
-_MEMO: dict[str, tuple[str, DataFrame]] = {}
+#: at most one materialized frame per slot name and evicted slots never
+#: leak storage. A slot bound to a stopped SparkContext (session
+#: restarted between calls — common across test sessions) is simply
+#: dropped, not unpersisted: its cached / checkpointed blocks died
+#: with the context.
+_MEMO: dict[str, DataFrame] = {}
 
 #: release-failure counter (VERDICT r5 item 7: the bare exception
 #: guard was silent). Keyed by failure kind; inspected by tests and
@@ -237,9 +238,9 @@ def _release(df: DataFrame) -> None:
 
 
 def _evict(slot: str) -> None:
-    hit = _MEMO.pop(slot, None)
-    if hit is not None:
-        _release(hit[1])
+    old = _MEMO.pop(slot, None)
+    if old is not None:
+        _release(old)
 
 
 def memo_clear() -> None:
@@ -250,62 +251,30 @@ def memo_clear() -> None:
         _evict(slot)
 
 
-#: Session conf gating :func:`memo_persist_at_scale` — default OFF.
-#: Set ``spark.conf.set(SHARED_FRAME_CONF, "true")`` (or --conf) on a
-#: real cluster.
-SHARED_FRAME_CONF = "spark.hz.materializeSharedFrames"
-
-
-def memo_persist_at_scale(df: DataFrame, slot: str) -> DataFrame:
-    """Materialize a multi-consumer frame ONLY when
-    ``spark.hz.materializeSharedFrames=true`` — the scale-conditional
-    form of the round-15 copurchase/funnel adjudication (VERDICT r15
-    item 6). On local[32] the N consumer chains recompute as
-    CONCURRENT stages on idle cores while a persist serializes
-    materialize-then-consume (measured: copurchase 2.0 s recompute vs
-    2.6 s persisted across six interleaved samples), so the local
-    default recomputes. At cluster scale — where each recompute is a
-    full corpus scan + shuffle and executors aren't idle — the N-fold
-    recompute loses, and flipping the conf restores the
-    materialization boundary without touching query code (the durable
-    form is a parquet write of the same frame; persist is its
-    in-session stand-in). Results are identical either way — the gate
-    moves a plan boundary, never semantics."""
-    on = str(
-        df.sparkSession.conf.get(SHARED_FRAME_CONF, "false")
-    ).lower() == "true"
-    return memo_persist(df, slot) if on else df
-
-
 def memo_persist(df: DataFrame, slot: str) -> DataFrame:
-    """Persist ``df`` into the ``slot``, releasing the slot's previous
-    frame first. The semantic-hash key is kept as slot metadata (and
-    for test introspection), but every call re-persists and the
-    caller's own frame is returned — within one query the persisted
+    """Persist ``df`` into ``slot``, releasing the slot's previous
+    frame first, and return ``df``. Within one query the persisted
     frame is reused (that is what persist is for, e.g. minhash
     signatures feeding a band join); across calls the plan always
     re-executes."""
-    key = str(df.semanticHash())
     _evict(slot)
-    _MEMO[slot] = (key, df.persist())
+    _MEMO[slot] = df.persist()
     return df
 
 
-def memo_checkpoint(build, slot: str, key: str) -> DataFrame:
-    """Like memo_persist, but truncates lineage via
-    ``localCheckpoint`` and takes the frame as a THUNK plus an
-    explicit key. The thunk matters for plan-heavy artifacts like
-    SimHash signatures: the checkpointed result's plan is just the
-    materialized blocks, so downstream queries re-analyze a
-    three-node plan instead of the 65-expression aggregate (measured:
-    2.5 s → 0.5 s per simhash band-join query). The previous frame in
-    the slot is always released and the artifact rebuilt — the
-    lineage cut is a per-call optimization, not a cross-call cache.
+def memo_checkpoint(df: DataFrame, slot: str) -> DataFrame:
+    """Like :func:`memo_persist`, but returns ``df.localCheckpoint()``:
+    the eager checkpoint truncates lineage, so the returned frame's
+    plan is just the materialized blocks. That matters for plan-heavy
+    artifacts like SimHash signatures — downstream queries re-analyze
+    a three-node plan instead of the 65-expression aggregate
+    (measured: 2.5 s → 0.5 s per simhash band-join query). The lineage
+    cut is a per-call optimization, not a cross-call cache.
 
     localCheckpoint blocks are executor-local (lost on executor
     failure); at cluster scale the durable version of this artifact
     is a parquet write of the signature table — same design,
     different storage."""
     _evict(slot)
-    _MEMO[slot] = (key, build().localCheckpoint())
-    return _MEMO[slot][1]
+    _MEMO[slot] = df.localCheckpoint()
+    return _MEMO[slot]

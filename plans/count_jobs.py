@@ -16,6 +16,28 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def count_group(sc, group: str, fn) -> dict[str, int]:
+    """Run ``fn()`` inside the fresh job group ``group`` and return the
+    jobs it dispatched and their total tasks: {"jobs": N, "tasks": M}."""
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    ids = sorted(set(tracker.getJobIdsForGroup(group) or []))
+    tasks = 0
+    for jid in ids:
+        ji = tracker.getJobInfo(jid)
+        if ji is None:
+            continue
+        for sid in ji.stageIds:
+            si = tracker.getStageInfo(sid)
+            if si is not None:
+                tasks += si.numTasks
+    return {"jobs": len(ids), "tasks": tasks}
+
+
 def main() -> int:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -25,31 +47,16 @@ def main() -> int:
     from hz_csv2parquet_spark.tables import memo_clear
 
     spark = get_spark(app="hz_count_jobs")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+
+    def run(name: str) -> None:
+        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     out = {}
     for name in names:
-        q = REGISTRY[name]
         # warm-up so file listings/broadcasts don't add one-time jobs
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        run(name)
         memo_clear()
-        before_ids = set(tracker.getJobIdsForGroup(None) or [])
-        # a fresh job group scopes the count to THIS run
-        sc.setJobGroup(f"count:{name}", name)
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        sc.setJobGroup(None, None)
-        ids = sorted(set(tracker.getJobIdsForGroup(f"count:{name}") or []))
-        tasks = 0
-        for jid in ids:
-            ji = tracker.getJobInfo(jid)
-            if ji is None:
-                continue
-            for sid in ji.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is not None:
-                    tasks += si.numTasks
-        out[name] = {"jobs": len(ids), "tasks": tasks}
+        out[name] = count_group(spark.sparkContext, f"count:{name}", lambda: run(name))
         print(f"[jobs] {name}: {out[name]}", file=sys.stderr)
     print(json.dumps(out))
     return 0

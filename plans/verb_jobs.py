@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
-"""Per-verb job counts for the txlog DML verbs — the round-16 version
-of plans/count_jobs.py at verb grain. Each verb of a representative
-lifecycle runs inside its own job group; the printed JSON maps
-verb -> {jobs, tasks}. Deterministic structural evidence (wall-clock
-on this host is not).
+"""Per-verb job counts for the txlog DML verbs — plans/count_jobs.py
+at verb grain, sharing its ``count_group``. Each verb of a
+representative lifecycle runs inside its own job group; the printed
+JSON maps verb -> {jobs, tasks}. Deterministic structural evidence
+(wall-clock on this host is not).
 
 Usage: python plans/verb_jobs.py
 """
@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from count_jobs import count_group
     from pyspark.sql import functions as F
 
     from hz_csv2parquet_spark.session import get_spark
@@ -28,24 +29,9 @@ def main() -> int:
     from hz_csv2parquet_spark.tables import table
 
     spark = get_spark(app="hz_verb_jobs")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     def count(label: str, fn) -> None:
-        sc.setJobGroup(f"verb:{label}", label)
-        fn()
-        sc.setJobGroup(None, None)
-        ids = sorted(set(tracker.getJobIdsForGroup(f"verb:{label}") or []))
-        tasks = 0
-        for jid in ids:
-            ji = tracker.getJobInfo(jid)
-            if ji is None:
-                continue
-            for sid in ji.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is not None:
-                    tasks += si.numTasks
-        out[label] = {"jobs": len(ids), "tasks": tasks}
+        out[label] = count_group(spark.sparkContext, f"verb:{label}", fn)
         print(f"[verb] {label}: {out[label]}", file=sys.stderr)
 
     out: dict[str, dict] = {}

@@ -148,3 +148,22 @@ def test_events_ts_probe_classifies_int96_as_native(spark, tmp_path):
     assert events_ts_is_native(p) is True
     row = read_events(spark, p).collect()[0]
     assert row.ts.year == 2024
+
+
+def test_table_schema_follows_a_rewrite_at_the_same_path(spark, tmp_path):
+    """The schema cache is keyed on the file's mtime as well as its
+    path: a table rewritten in place with a new schema is read with
+    the new schema, not the cached one."""
+    import pyarrow as pa
+
+    from hz_csv2parquet_spark.tables import table
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": pa.array([1], pa.int64())}), path)
+    assert table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([2], pa.int64()), "r_name": ["x"]}), path
+    )
+    got = table(spark, str(tmp_path), "region")
+    assert got.columns == ["r_regionkey", "r_name"]
+    assert [tuple(r) for r in got.collect()] == [(2, "x")]

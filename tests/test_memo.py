@@ -11,7 +11,8 @@ the remaining bookkeeping contract:
 - a slot bound to a dead SparkContext is dropped WITHOUT unpersist
   (its blocks died with the context) and counts as no failure,
 - an unpersist that raises on a live context is counted + swallowed
-  (VERDICT r5 item 7 — the guard used to be a silent ``pass``).
+  (VERDICT r5 item 7 — the guard used to be a silent ``pass``),
+- memo_checkpoint returns a lineage-free frame (a LogicalRDD leaf).
 """
 
 from __future__ import annotations
@@ -87,26 +88,37 @@ def test_same_plan_twice_rebuilds_not_serves(spark):
     assert not _MEMO
 
 
-def test_checkpoint_thunk_always_rebuilds(spark):
+def test_checkpoint_always_rebuilds(spark):
+    """Two calls on one slot checkpoint the caller's frame each time:
+    two distinct frames, the second evicting the first."""
     _reset()
-    built = []
-
-    def build():
-        built.append(1)
-        return spark.range(10).withColumn("v", F.col("id") + 1)
-
-    a = memo_checkpoint(build, "t_ckpt", "k1")
-    b = memo_checkpoint(build, "t_ckpt", "k1")  # same key: still rebuilt
-    assert len(built) == 2
+    df = spark.range(10).withColumn("v", F.col("id") + 1)
+    a = memo_checkpoint(df, "t_ckpt")
+    b = memo_checkpoint(df, "t_ckpt")
     assert a is not b
+    assert _MEMO["t_ckpt"] is b
     assert b.count() == 10
+    memo_clear()
+
+
+def test_checkpoint_cuts_lineage(spark):
+    """The checkpointed frame's analyzed plan is a bare LogicalRDD scan
+    — pagerank's iteration and the simhash band join rely on that to
+    re-analyze a leaf instead of the plan that built it."""
+    _reset()
+    df = spark.range(10).groupBy((F.col("id") % 3).alias("k")).count()
+    out = memo_checkpoint(df, "t_ckpt")
+    plan = out._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "LogicalRDD", plan.toString()
+    assert plan.children().isEmpty()
+    assert sorted(out.collect()) == sorted(df.collect())
     memo_clear()
 
 
 def test_dead_context_slot_dropped_without_unpersist():
     _reset()
     dead = _FakeFrame(alive=False)
-    _MEMO["t_dead"] = ("k", dead)
+    _MEMO["t_dead"] = dead
     memo_clear()
     assert dead.unpersist_calls == 0
     assert not _MEMO
@@ -116,7 +128,7 @@ def test_dead_context_slot_dropped_without_unpersist():
 def test_live_context_slot_is_unpersisted_on_eviction():
     _reset()
     live = _FakeFrame(alive=True)
-    _MEMO["t_live"] = ("k", live)
+    _MEMO["t_live"] = live
     memo_clear()
     assert live.unpersist_calls == 1
     assert not MEMO_RELEASE_FAILURES
@@ -125,7 +137,7 @@ def test_live_context_slot_is_unpersisted_on_eviction():
 def test_unpersist_failure_is_counted_and_swallowed():
     _reset()
     bad = _FakeFrame(alive=True, unpersist_raises=True)
-    _MEMO["t_bad"] = ("k", bad)
+    _MEMO["t_bad"] = bad
     memo_clear()  # must not raise
     assert bad.unpersist_calls == 1
     assert MEMO_RELEASE_FAILURES.get("RuntimeError") == 1
@@ -142,30 +154,18 @@ def test_slot_alive_false_on_broken_session():
     assert tables._slot_alive(_Broken()) is False
 
 
-def test_memo_persist_at_scale_is_conf_gated_and_result_identical(spark, sf_dir):
-    """Round 16 (VERDICT r15 item 6): the copurchase/funnel shared
-    frames materialize ONLY under spark.hz.materializeSharedFrames —
-    the gate moves a plan boundary, never semantics, so both settings
-    must produce identical rows."""
+def test_shared_frame_queries_register_no_memo_slot(spark, sf_dir):
+    """The multi-consumer frames of these queries recompute rather
+    than persist (measured as the local optimum): building and
+    collecting each registers no memo slot."""
     from hz_csv2parquet_spark.queries import REGISTRY
-    from hz_csv2parquet_spark.tables import (
-        SHARED_FRAME_CONF,
-        _MEMO,
-        memo_clear,
-    )
 
-    for name in ("copurchase_part_pairs", "funnel_conversion_events"):
-        fn = REGISTRY[name].fn
-        spark.conf.unset(SHARED_FRAME_CONF)
+    for name in (
+        "copurchase_part_pairs",
+        "funnel_conversion_events",
+        "q15_top_supplier",
+        "skyline_orders",
+    ):
         memo_clear()
-        off = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        assert not _MEMO, "no frame may persist under the local default"
-        spark.conf.set(SHARED_FRAME_CONF, "true")
-        try:
-            memo_clear()
-            on = sorted(map(tuple, fn(spark, sf_dir).collect()))
-            assert _MEMO, "the scale setting must register the memo slot"
-        finally:
-            spark.conf.unset(SHARED_FRAME_CONF)
-            memo_clear()
-        assert off == on, name
+        REGISTRY[name].fn(spark, sf_dir).collect()
+        assert not _MEMO, (name, sorted(_MEMO))
