@@ -234,10 +234,6 @@ def _to_physical_df(df: DataFrame, mapping: dict | None) -> DataFrame:
     return _rename_df(df, _cm_map(mapping)) if mapping else df
 
 
-def _to_logical_df(df: DataFrame, mapping: dict | None) -> DataFrame:
-    return _rename_df(df, _cm_rev(mapping)) if mapping else df
-
-
 def _rekey_logical(d: dict | None, mapping: dict | None) -> dict:
     """Re-key a physical-keyed per-file dict (stats/partitionValues)
     to logical names so pruning compares against user predicates."""
@@ -605,16 +601,25 @@ def _cmp_bounds(bounds, op: str, v, exact: bool) -> bool:
     skipping on float(lo/hi) would silently miss matching rows), so
     a numeric literal against string RANGE stats never skips. An
     ``exact`` bound (a hive partition value: lo == hi == the exact
-    stringified value) IS safely numeric-coercible. Any remaining
-    type mismatch is conservatively no-skip."""
+    stringified value) IS safely coercible to the literal's type:
+    numbers parse as float, booleans match by name (``bool("false")``
+    is True), and other types a DSv2 filter pushes (Decimal, ...)
+    build from the string. Any remaining type mismatch is
+    conservatively no-skip."""
     lo, hi = bounds
-    if isinstance(v, (int, float)) and isinstance(lo, str):
-        if not exact:
-            return True
+    if exact and isinstance(lo, str) and not isinstance(v, str):
         try:
-            lo = hi = float(lo)
-        except ValueError:
+            if isinstance(v, bool):
+                lo = lo.lower() == "true"
+            elif isinstance(v, (int, float)):
+                lo = float(lo)
+            else:
+                lo = type(v)(lo)
+        except (TypeError, ValueError, ArithmeticError):
             return True
+        hi = lo
+    elif isinstance(v, (int, float)) and isinstance(lo, str):
+        return True
     if isinstance(v, str) and not isinstance(lo, str):
         return True  # string literal vs numeric stats: no proof
     try:
@@ -628,9 +633,62 @@ def _cmp_bounds(bounds, op: str, v, exact: bool) -> bool:
             return hi > v
         if op == ">=":
             return hi >= v
-    except TypeError:
+    except (TypeError, ArithmeticError):
         return True
     return True
+
+
+# ---- per-file skipping closures: ``f(stats, pv, nulls, rows) -> bool``
+# is False only on PROOF that no row of the file can match. The keys
+# of the four inputs are the names the closure was built with (the
+# DML path re-keys to logical names; the DSv2 reader builds with
+# physical ones). Built by :func:`_compile_can_match` from a parsed
+# DML predicate and by the hz_txlog batch reader from pushed filters.
+
+
+def _bounds_of(name: str, stats: dict, pv: dict):
+    st = stats.get(name)
+    if st is not None and st[0] is not None and st[1] is not None:
+        return (st[0], st[1]), False
+    v = pv.get(name)
+    if v is not None:
+        return (v, v), True  # exact hive partition value
+    return None, False
+
+
+def _cmp_fn(name: str, op: str, v):
+    def f(stats, pv, nulls=None, rows=None):
+        b, exact = _bounds_of(name, stats, pv)
+        return True if b is None else _cmp_bounds(b, op, v, exact)
+
+    return f
+
+
+def _in_fn(name: str, values):
+    alts = [_cmp_fn(name, "=", v) for v in values]
+    return lambda *a: any(alt(*a) for alt in alts)  # IN () matches nothing
+
+
+def _null_fn(name: str, want_null: bool):
+    def f(stats, pv, nulls=None, rows=None):
+        p = pv or {}
+        if want_null:
+            if p.get(name) is not None:
+                # exact non-null hive partition value: the column
+                # is a non-null constant in this file
+                return False
+            nc = (nulls or {}).get(name)
+            return True if nc is None else nc > 0
+        if name in p and p[name] is None:
+            # __HIVE_DEFAULT_PARTITION__: the column is NULL for
+            # every row of this file
+            return False
+        nc = (nulls or {}).get(name)
+        if nc is None or rows is None:
+            return True
+        return nc < rows  # all-NULL file can't satisfy IS NOT NULL
+
+    return f
 
 
 def _compile_can_match(node):
@@ -663,43 +721,6 @@ def _compile_can_match(node):
 
     TRUE = lambda stats, pv, nulls=None, rows=None: True  # noqa: E731
 
-    def bounds_of(name: str, stats: dict, pv: dict):
-        st = stats.get(name)
-        if st is not None and st[0] is not None and st[1] is not None:
-            return (st[0], st[1]), False
-        v = pv.get(name)
-        if v is not None:
-            return (v, v), True  # exact hive partition value
-        return None, False
-
-    def cmp_fn(name: str, op: str, v):
-        def f(stats, pv, nulls=None, rows=None):
-            b, exact = bounds_of(name, stats, pv)
-            return True if b is None else _cmp_bounds(b, op, v, exact)
-
-        return f
-
-    def null_fn(name: str, want_null: bool):
-        def f(stats, pv, nulls=None, rows=None):
-            p = pv or {}
-            if want_null:
-                if p.get(name) is not None:
-                    # exact non-null hive partition value: the column
-                    # is a non-null constant in this file
-                    return False
-                nc = (nulls or {}).get(name)
-                return True if nc is None else nc > 0
-            if name in p and p[name] is None:
-                # __HIVE_DEFAULT_PARTITION__: the column is NULL for
-                # every row of this file
-                return False
-            nc = (nulls or {}).get(name)
-            if nc is None or rows is None:
-                return True
-            return nc < rows  # all-NULL file can't satisfy IS NOT NULL
-
-        return f
-
     def walk(n):
         cls = n.getClass().getSimpleName()
         ch = n.children()
@@ -715,32 +736,31 @@ def _compile_can_match(node):
             and len(kids) == 1
             and kids[0].getClass().getSimpleName() == "UnresolvedAttribute"
         ):
-            return null_fn(kids[0].name(), cls == "IsNull")
+            return _null_fn(kids[0].name(), cls == "IsNull")
         if cls in _CMP_OPS and len(kids) == 2:
             lc = kids[0].getClass().getSimpleName()
             rc = kids[1].getClass().getSimpleName()
             if lc == "UnresolvedAttribute" and rc == "Literal":
                 v, ok = lit_value(kids[1])
-                return cmp_fn(kids[0].name(), _CMP_OPS[cls], v) if ok else TRUE
+                return _cmp_fn(kids[0].name(), _CMP_OPS[cls], v) if ok else TRUE
             if lc == "Literal" and rc == "UnresolvedAttribute":
                 v, ok = lit_value(kids[0])
                 return (
-                    cmp_fn(kids[1].name(), _CMP_MIRROR[_CMP_OPS[cls]], v)
+                    _cmp_fn(kids[1].name(), _CMP_MIRROR[_CMP_OPS[cls]], v)
                     if ok
                     else TRUE
                 )
             return TRUE
         if cls == "In" and kids and kids[0].getClass().getSimpleName() == "UnresolvedAttribute":
-            name = kids[0].name()
-            alts = []
+            values = []
             for k in kids[1:]:
                 if k.getClass().getSimpleName() != "Literal":
                     return TRUE
                 v, ok = lit_value(k)
                 if not ok:
                     return TRUE
-                alts.append(cmp_fn(name, "=", v))
-            return lambda *a: any(alt(*a) for alt in alts)
+                values.append(v)
+            return _in_fn(kids[0].name(), values)
         return TRUE  # NOT / functions / anything else
 
     return walk(node)
@@ -4175,7 +4195,7 @@ class TxTable:
         self, files: list[str], state: dict, pred_sql: str | None
     ) -> list[str]:
         """Driver-side file skipping shared by the DML detection
-        paths: log min/max/null stats (``_can_match_stats`` — the
+        paths: log min/max/null stats (``_compile_can_match`` — the
         Delta data-skipping step: a selective delete on a 100k-file
         table schedules zero scan tasks for provably-unmatchable
         files), then per-file bloom sidecars for equality/IN atoms.

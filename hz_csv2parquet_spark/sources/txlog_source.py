@@ -3,7 +3,12 @@ public Python Data Source V2 API, Spark 4.x) exposing transaction-log
 tables (sources/txlog.py) through the standard ``format()`` surface:
 
 - **Batch**: ``spark.read.format("hz_txlog").load(path)`` — the
-  log-governed snapshot; ``.option("asOf", v)`` time-travels.
+  log-governed snapshot; ``.option("asOf", v)`` time-travels. Pushed
+  filters drive log-stats file skipping (min/max, null counts and
+  exact partition values, by the same rule as TxTable's DML verbs).
+  Bloom-sidecar skipping belongs to the TxTable verbs: planning runs
+  in a Python worker with no SparkSession, and bloom probes hash
+  through one.
 - **Change feed** (batch and streaming):
   ``.option("readChangeFeed", "true")`` emits CDF rows (table columns
   + ``_change_type`` + ``_commit_version``). Appends plan straight
@@ -33,13 +38,13 @@ tables (sources/txlog.py) through the standard ``format()`` surface:
     rewrites; the row-accurate alternative is the batch change feed
     ``TxTable.changes``).
 
-The stream reader plans driver-side from the log only (no data I/O:
-partitions = one per added file, carrying path + rows from the add
-action) and reads executor-side via pyarrow as Arrow batches — the
-same columnar hand-off the built-in parquet source does, so a
-1000-file commit fans out across the cluster instead of bottlenecking
-on the driver. Rows-per-file from the log lets Spark see batch sizes
-without opening footers.
+Every reader plans from the log only, in a Python worker on the
+driver host (no data I/O: partitions = one per added file, carrying
+path + rows from the add action), and reads executor-side via pyarrow
+as Arrow batches — the same columnar hand-off the built-in parquet
+source does, so a 1000-file commit fans out across the cluster
+instead of bottlenecking on the driver. Rows-per-file from the log
+lets Spark see batch sizes without opening footers.
 
 Engine caveat: Spark 4.1 runs Python streaming sources under
 ``Trigger.AvailableNow`` by falling back to single-batch execution
@@ -66,20 +71,21 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
-from .txlog import _data_file, _version_file
+from .txlog import (
+    _CMP_OPS,
+    TxTable,
+    _cmp_fn,
+    _data_file,
+    _in_fn,
+    _norm_action,
+    _null_fn,
+    _version_file,
+)
 
 
 @dataclass
@@ -149,8 +155,6 @@ def _file_partitions(
 def _log_state(path: str, as_of: int | None = None) -> dict:
     """Replayed log state without a SparkSession — rides TxTable's
     checkpoint-accelerated replay (O(tail), not O(versions))."""
-    from .txlog import TxTable
-
     return TxTable(None, path)._replay_state(as_of=as_of)
 
 
@@ -316,130 +320,137 @@ def _cdf_schema(path: str, as_of: int | None = None) -> StructType:
     )
 
 
-def _split_in_place(
-    path: str, v: int, added: list[dict], prev: dict | None = None
-) -> tuple[list[dict], list[str]]:
-    """(genuinely new adds, paths re-added IN PLACE with a changed
-    action). An add whose path was already live at v−1 is NOT an
-    append: restore() rolls a deletion vector back by re-emitting the
-    add with no remove action and no dv (advisor r10 medium) — and a
-    reader classifying that by ``removed == []`` replays every row of
-    the file as a duplicate insert. Identical re-emits are dropped
-    outright (no content change). ``prev`` is the caller's
-    incrementally-tracked v−1 live state; without it, one
-    checkpoint-accelerated replay is paid per suspicious commit."""
-    if not added:
-        return added, []
-    if prev is None:
-        prev = _replay_adds(path, as_of=v - 1)
-
-    from .txlog import _norm_action
-
-    new, changed = [], []
-    for a in added:
-        if a["path"] not in prev:
-            new.append(a)
-        elif _norm_action(prev[a["path"]]) != _norm_action(a):
-            changed.append(a["path"])
-    return new, changed
+#: per-surface wording of the per-version planner's refusals
+#: (change_feed flag → text)
+_MISSING_VERSION = {
+    True: "vacuumed past the feed's start? begin from a retained version",
+    False: "vacuumed past the stream's checkpoint? restart with a fresh checkpoint",
+}
+_REWRITE_REFUSAL = {
+    True: "changes existing rows without change-data sidecars; a "
+    "row-accurate change feed needs the writer to run with "
+    "change_data=True (TxTable CDF property). Set skipChangeCommits=true "
+    "to ignore rewrite commits.",
+    False: "changes existing rows; a version-offset stream is append-only. "
+    "Set skipChangeCommits=true to ignore such commits, use "
+    "readChangeFeed=true on a change_data table, or consume "
+    "TxTable.changes() in batch for row-accurate updates.",
+}
 
 
-def _advance_live(live: dict, path: str, v: int) -> dict:
-    """Apply version ``v``'s add/remove actions to a live-state dict
-    IN FILE ORDER (the _replay_state contract) — the incremental step
-    that lets multi-version planners pay one replay total instead of
-    one per version."""
-    for action in json.load(open(_version_file(path, v))):
-        if "add" in action:
-            live[action["add"]["path"]] = action["add"]
-        elif "remove" in action:
-            live.pop(action["remove"]["path"], None)
-    return live
-
-
-def _cdf_version_partitions(
+def _version_partitions(
     path: str,
     v: int,
     cols: tuple,
     split_rows: int,
-    skip_change_commits: bool,
-    prev_adds: dict | None = None,
+    live: dict,
+    *,
+    change_feed: bool,
+    skip_change_commits: bool = False,
     physical: tuple = (),
+    check_meta=None,
 ) -> list[_FilePartition]:
-    """Plan ONE version of a change-feed read, from the log only:
+    """Plan ONE committed version from the log only — the one commit
+    classifier of the append stream, the CDF stream and the batch CDF
+    read — and advance ``live`` (the ``{path: add}`` state at v−1,
+    mutated in place, in file order: the _replay_state contract) past
+    it, so an N-version plan pays one replay and parses each commit
+    file once. ``check_meta(v, actions)`` sees the parsed actions
+    first (the stream's schema-anchor guard).
 
-    - commits carrying ``cdc`` sidecar actions → read the sidecars
-      (``_change_type`` is in the file; ``_commit_version`` rides the
-      partition as a constant);
-    - blind appends → read the added files, stamping
-      ``_change_type='insert'``;
-    - copy-on-write rewrites WITHOUT sidecars are not row-accurately
-      representable → raise with the fix (write with
-      ``change_data=True``), or skip under ``skipChangeCommits``;
+    - ``change_feed`` commits carrying ``cdc`` sidecar actions → read
+      the sidecars (``_change_type`` is in the file;
+      ``_commit_version`` rides the partition as a constant);
+    - blind appends → read the added files (a change feed stamps
+      ``_change_type='insert'`` and ``_commit_version``);
+    - copy-on-write rewrites, deletion-vector re-adds and in-place
+      re-adds (restore's vector rollback re-emits the add with NO
+      remove action) are not appends, and without sidecars not
+      row-accurately representable → raise, or skip under
+      ``skipChangeCommits``;
     - ``dataChange: false`` layout commits are invisible.
     """
-    f = _version_file(path, v)
-    if not os.path.exists(f):
+    try:
+        actions = json.load(open(_version_file(path, v)))
+    except FileNotFoundError:
         raise FileNotFoundError(
-            f"log version {v} missing at {path} — vacuumed past the "
-            "feed's start? begin from a retained version"
-        )
-    added, removed, cdcs = [], [], []
-    dv_commit = False
-    for action in json.load(open(f)):
+            f"log version {v} missing at {path} — {_MISSING_VERSION[change_feed]}"
+        ) from None
+    if check_meta is not None:
+        check_meta(v, actions)
+    added, cdcs = [], []
+    rewrite = False
+    for action in actions:
         if "add" in action and action["add"].get("dataChange", True):
-            if action["add"].get("dv"):
-                dv_commit = True
+            rewrite |= bool(action["add"].get("dv"))
             added.append(action["add"])
         elif "remove" in action and action["remove"].get("dataChange", True):
-            removed.append(action["remove"]["path"])
-        elif "cdc" in action:
-            cdcs.append((action["cdc"]["path"], int(action["cdc"].get("rows", 0))))
-    parts: list[_FilePartition] = []
+            rewrite = True
+        elif "cdc" in action and change_feed:
+            cdcs.append(action["cdc"])
+    if not (cdcs or rewrite):
+        # an add whose path is already live is NOT an append: drop
+        # identical re-emits, refuse changed ones (emitting the file
+        # would replay every row of it as a duplicate insert)
+        rewrite = any(
+            a["path"] in live and _norm_action(live[a["path"]]) != _norm_action(a)
+            for a in added
+        )
+        added = [a for a in added if a["path"] not in live]
+    for action in actions:
+        if "add" in action:
+            live[action["add"]["path"]] = action["add"]
+        elif "remove" in action:
+            live.pop(action["remove"]["path"], None)
     if cdcs:
-        ver_const = (("_commit_version", v),)
-        for p, rows in cdcs:
-            parts.extend(
-                _file_partitions(
-                    os.path.join(path, p), rows, cols, split_rows, ver_const,
-                    physical=physical,
-                )
-            )
-        return parts
-    in_place: list[str] = []
-    if not removed and not dv_commit:
-        # a commit that LOOKS like a blind append may still change
-        # rows in place (restore's vector rollback re-adds the file
-        # with no remove) — verify against the v-1 live state
-        added, in_place = _split_in_place(path, v, added, prev_adds)
-    if removed or dv_commit or in_place:
-        # copy-on-write rewrite, deletion-vector re-add, or in-place
-        # restore: none is row-accurately representable without
-        # sidecars (emitting the file would replay it wholesale)
+        files = [(os.path.join(path, c["path"]), c, (("_commit_version", v),)) for c in cdcs]
+    elif rewrite:
         if skip_change_commits:
             return []
-        raise ValueError(
-            f"version {v} of {path} changes existing rows without "
-            "change-data sidecars; a row-accurate change feed needs the "
-            "writer to run with change_data=True (TxTable CDF property). "
-            "Set skipChangeCommits=true to ignore rewrite commits."
+        raise ValueError(f"version {v} of {path} {_REWRITE_REFUSAL[change_feed]}")
+    else:
+        const = (("_change_type", "insert"), ("_commit_version", v)) if change_feed else ()
+        files = [
+            (_data_file(path, a["path"], a), a, const + _pv_constants(a, cols, physical))
+            for a in added
+        ]
+    return [
+        part
+        for f, action, constants in files
+        for part in _file_partitions(
+            f, int(action.get("rows", 0)), cols, split_rows, constants, physical=physical
         )
-    const = (("_change_type", "insert"), ("_commit_version", v))
-    for add in added:
-        parts.extend(
-            _file_partitions(
-                _data_file(path, add["path"], add),
-                int(add.get("rows", 0)),
-                cols,
-                split_rows,
-                const + _pv_constants(add, cols, physical),
-                physical=physical,
-            )
-        )
-    return parts
+    ]
+
+
+def _pushed_can_match(flt, phys: dict):
+    """One pushed DSv2 filter as the per-file ``can_match(stats, pv,
+    nulls, rows)`` closure TxTable's DML skipping builds
+    (``_compile_can_match``), keyed by the PHYSICAL column name the
+    log's stats and partition values use — so batch reads and DML
+    skip files by one rule. ``None`` for filters the log cannot
+    refute (nested columns, string predicates, NOT, ...)."""
+    attr = getattr(flt, "attribute", ())  # Not has a child instead
+    if len(attr) != 1:
+        return None
+    col = phys.get(attr[0], attr[0])
+    kind = type(flt).__name__
+    if kind in ("IsNull", "IsNotNull"):
+        return _null_fn(col, kind == "IsNull")
+    if kind in _CMP_OPS:
+        return _cmp_fn(col, _CMP_OPS[kind], flt.value)
+    if kind == "In":
+        return _in_fn(col, flt.value)
+    return None
 
 
 class _TxLogBatchReader(DataSourceReader):
+    """Snapshot (or ``asOf``) read planned from the log only, with
+    filter pushdown into log-stats file skipping. Defining
+    ``pushFilters`` requires ``spark.sql.python.filterPushdown.enabled``
+    (Spark refuses the reader otherwise), which
+    :func:`register_txlog_source` sets."""
+
     def __init__(self, path: str, as_of: int | None, split_rows: int = DEFAULT_SPLIT_ROWS):
         self.path = path
         self.as_of = as_of
@@ -447,22 +458,32 @@ class _TxLogBatchReader(DataSourceReader):
         state = _log_state(path, as_of)
         self.schema = StructType.fromJson(json.loads(state["schema"]))
         self._pairs = _mapping_pairs(state, self.schema)
-        self._pruning = []  # range filters usable for file skipping
+        self._pushed = []  # pushed conjuncts, for file skipping
+
+    def pushFilters(self, filters):
+        """Keep every pushed filter for FILE SKIPPING against the
+        log's min/max/null stats and exact partition values, and hand
+        ALL of them back for Spark to evaluate row-level — skipping is
+        a superset guarantee, so correctness never depends on it (the
+        native parquet source's contract between footer-stats
+        row-group skipping and post-scan filtering)."""
+        self._pushed = list(filters)
+        return filters
 
     def partitions(self) -> Sequence[InputPartition]:
         # plan from the log only: live files at as_of minus the files
-        # whose stats prove no pushed filter can match, one partition
-        # per surviving file (Spark schedules them across executors)
+        # whose stats prove some pushed conjunct can match no row, one
+        # partition per surviving file (Spark schedules them across
+        # executors)
         state = _replay_adds(self.path, self.as_of)
         cols = _schema_columns(self.schema)
         phys = dict(self._pairs)
-        admit_bloom = _bloom_gate(self.path, self._pruning, self.schema, phys)
+        checks = [c for c in (_pushed_can_match(f, phys) for f in self._pushed) if c]
         parts: list[_FilePartition] = []
         for p, add in state.items():
-            if not all(_stats_admit(add, f, phys) for f in self._pruning):
+            stats = (add.get("stats") or {}, add.get("partitionValues") or {})
+            if not all(c(*stats, add.get("nulls"), add.get("rows")) for c in checks):
                 continue
-            if admit_bloom is not None and not admit_bloom(add):
-                continue  # bloom proves the pushed equality can't match
             dv = add.get("dv")
             parts.extend(
                 _file_partitions(
@@ -483,209 +504,11 @@ class _TxLogBatchReader(DataSourceReader):
         return _read_file_as_arrow(partition)
 
 
-class _TxLogPruningBatchReader(_TxLogBatchReader):
-    """The batch reader with filter pushdown. Split into a subclass
-    because Spark REFUSES any reader that merely defines
-    ``pushFilters`` while ``spark.sql.python.filterPushdown.enabled``
-    is false — the DataSource picks this class only when the conf is
-    on (``register_txlog_source`` enables it)."""
-
-    def pushFilters(self, filters):
-        """Record every range-comparable top-level-column filter for
-        FILE SKIPPING against the log's min/max stats, and hand ALL
-        filters back for Spark to evaluate row-level — skipping is a
-        superset guarantee, so correctness never depends on it. This
-        is the same contract the native parquet source has between
-        footer-stats row-group skipping and post-scan filtering."""
-        for f in filters:
-            if (
-                isinstance(
-                    f,
-                    (
-                        EqualTo,
-                        GreaterThan,
-                        GreaterThanOrEqual,
-                        LessThan,
-                        LessThanOrEqual,
-                        In,
-                        # round 13: null-count skipping — Spark pushes
-                        # IsNotNull alongside almost every comparison,
-                        # and IS NULL probes are common on curation
-                        # tables; both gate on the logged null counts
-                        IsNull,
-                        IsNotNull,
-                    ),
-                )
-                and len(f.attribute) == 1
-            ):
-                self._pruning.append(f)
-        return filters
-
-
-def _bloom_gate(path: str, filters, schema: StructType, phys: dict):
-    """``admit(add) -> bool`` testing pushed EqualTo/In filters
-    against per-file bloom sidecars (see txlog.py ``index_bloom``),
-    or ``None`` when nothing is probe-able. Pushed filters are
-    top-level CONJUNCTS by the DSv2 contract, which is exactly the
-    soundness condition bloom skipping needs. Probe hashes go through
-    the live SparkSession (planning runs on the driver; no session —
-    e.g. a bare unit-test harness — means no bloom skipping, never a
-    wrong skip). Sidecars are read once per plan and only for files
-    that survived stats pruning and carry an index."""
-    eq = [f for f in filters if isinstance(f, (EqualTo, In)) and len(f.attribute) == 1]
-    if not eq:
-        return None
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-    except Exception:
-        return None
-    if spark is None:
-        return None
-    kinds = {}
-    for fld in schema.fields:
-        t = fld.dataType.simpleString()
-        kinds[fld.name] = (
-            "long"
-            if t in ("int", "bigint", "smallint", "tinyint")
-            else ("string" if t == "string" else None)
-        )
-    probes: list[tuple] = []
-    plan: list[tuple[str, list[int]]] = []
-    for f in eq:
-        col = f.attribute[0]
-        kind = kinds.get(col)
-        if kind is None:
-            continue
-        vals = list(f.value) if isinstance(f, In) else [f.value]
-        if not vals:
-            continue
-        if not all(
-            (isinstance(v, int) and not isinstance(v, bool))
-            if kind == "long"
-            else isinstance(v, str)
-            for v in vals
-        ):
-            continue
-        idxs = []
-        for v in vals:
-            idxs.append(len(probes))
-            probes.append((v, kind))
-        plan.append((phys.get(col, col), idxs))
-    if not plan:
-        return None
-    from .txlog import _bloom_contains, _bloom_probe_hashes
-
-    try:
-        hashes = _bloom_probe_hashes(spark, probes)
-    except Exception:
-        return None  # probe job failed: skipping is only an optimization
-    import base64
-
-    cache: dict[str, dict] = {}
-
-    def admit(add: dict) -> bool:
-        bl = add.get("bloom")
-        if not bl:
-            return True
-        try:
-            side = cache.get(bl["path"])
-            if side is None:
-                side = json.load(open(os.path.join(path, bl["path"])))
-                cache[bl["path"]] = side
-            m, k = int(side["m"]), int(side["k"])
-            indexed = set(side.get("indexed", []))
-            for pname, idxs in plan:
-                if pname not in indexed:
-                    continue
-                b64 = side["cols"].get(pname)
-                if b64 is None:
-                    return False  # indexed but all-null: provably absent
-                blob = base64.b64decode(b64)
-                if not any(
-                    _bloom_contains(blob, m, hashes[i][:k]) for i in idxs
-                ):
-                    return False
-        except Exception:
-            return True  # unreadable sidecar: cannot skip
-        return True
-
-    return admit
-
-
 def _replay_adds(path: str, as_of: int | None = None) -> dict[str, dict]:
     """Live ``{relative path: add action}`` at ``as_of`` — replayed
     from the log without Spark (add actions carry the min/max stats
     file skipping needs)."""
     return _log_state(path, as_of)["adds"]
-
-
-def _stats_admit(add: dict, flt, phys: dict | None = None) -> bool:
-    """True unless the file's [min, max] stats — or its exact hive
-    partition value, an implicit [v, v] stat — PROVE the filter can
-    match no row: the conservative data-skipping predicate, now doing
-    PARTITION PRUNING through the same gate. A file without stats for
-    the column (or with stats incomparable to the literal) always
-    admits. Stats/pv keys are PHYSICAL; ``phys`` translates the
-    filter's logical attribute under column mapping."""
-    col = flt.attribute[0]
-    if phys:
-        col = phys.get(col, col)
-    if isinstance(flt, (IsNull, IsNotNull)):
-        # null-count skipping (round 13, the Delta nullCount shape):
-        # IS NULL can't match a null-free file; IS NOT NULL can't
-        # match an all-NULL one. A hive partition value is exact: a
-        # non-null pv refutes IS NULL, the NULL sentinel (stored as
-        # None) refutes IS NOT NULL. A file without a logged null
-        # count (pre-round-13 log, stat-less column) always admits.
-        pvs = add.get("partitionValues") or {}
-        if col in pvs:
-            return (pvs[col] is None) == isinstance(flt, IsNull)
-        nc = (add.get("nulls") or {}).get(col)
-        rows = add.get("rows")
-        if nc is None or rows is None:
-            return True
-        return nc > 0 if isinstance(flt, IsNull) else nc < rows
-    st = add.get("stats", {}).get(col)
-    if st is None:
-        pv = add.get("partitionValues", {}).get(col)
-        if pv is None:
-            return True
-
-        def _coerce(sample):
-            # bool("false") is True — literal strings need the map
-            if isinstance(sample, bool):
-                return pv.lower() == "true"
-            return type(sample)(pv)
-
-        try:
-            if isinstance(flt, In):
-                if not flt.value:
-                    return False  # IN () matches nothing
-                v = _coerce(next(iter(flt.value)))
-            else:
-                v = _coerce(flt.value)
-            st = [v, v]
-        except (TypeError, ValueError):
-            return True
-    lo, hi = st
-    try:
-        if isinstance(flt, EqualTo):
-            return lo <= flt.value <= hi
-        if isinstance(flt, GreaterThan):
-            return hi > flt.value
-        if isinstance(flt, GreaterThanOrEqual):
-            return hi >= flt.value
-        if isinstance(flt, LessThan):
-            return lo < flt.value
-        if isinstance(flt, LessThanOrEqual):
-            return lo <= flt.value
-        if isinstance(flt, In):
-            return any(lo <= v <= hi for v in flt.value)
-    except TypeError:
-        return True  # incomparable literal type: cannot prove disjoint
-    return True
 
 
 class _TxLogChangesBatchReader(DataSourceReader):
@@ -698,7 +521,7 @@ class _TxLogChangesBatchReader(DataSourceReader):
     def __init__(self, path: str, start: int, end: int | None, split_rows: int):
         self.path = path
         self.start = start
-        top = _top_version(path)
+        top = TxTable(None, path).version()
         self.end = top if end is None else min(end, top)
         self.split_rows = split_rows
         self.schema = _cdf_schema(path, self.end)
@@ -711,18 +534,14 @@ class _TxLogChangesBatchReader(DataSourceReader):
         cols = _schema_columns(self.schema)
         parts: list[_FilePartition] = []
         # one replay at the feed start, then one commit file per step
-        # (round-11 review: the per-version v-1 replay made an
-        # N-version feed cost N checkpoint loads)
         live = _replay_adds(self.path, self.start - 1) if self.start > 0 else {}
         for v in range(self.start, self.end + 1):
             parts.extend(
-                _cdf_version_partitions(
-                    self.path, v, cols, self.split_rows,
-                    skip_change_commits=False, prev_adds=live,
-                    physical=self._pairs,
+                _version_partitions(
+                    self.path, v, cols, self.split_rows, live,
+                    change_feed=True, physical=self._pairs,
                 )
             )
-            live = _advance_live(live, self.path, v)
         return parts or [_FilePartition("", cols)]
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -746,23 +565,10 @@ def _version_at_or_after(path: str, ts: float) -> int:
     log metadata, O(tail) via the checkpoint timestamp index
     (TxTable.commit_timestamps — the same index batch timestampAsOf
     reads, so the two surfaces can never drift)."""
-    from .txlog import TxTable
-
-    cts = TxTable(None, path).commit_timestamps()
-    first = min((v for v, t in cts.items() if t >= ts), default=None)
-    return first if first is not None else _top_version(path) + 1
-
-
-def _top_version(path: str) -> int:
-    import re as _re
-
-    try:
-        names = os.listdir(os.path.join(path, "_txlog"))
-    except FileNotFoundError:
-        return -1
-    return max(
-        (int(n[:8]) for n in names if _re.match(r"^\d{8}\.json$", n)), default=-1
-    )
+    t = TxTable(None, path)
+    cts = t.commit_timestamps()
+    first = min((v for v, ts_ in cts.items() if ts_ >= ts), default=None)
+    return first if first is not None else t.version() + 1
 
 
 class _TxLogStreamReader(DataSourceStreamReader):
@@ -932,16 +738,7 @@ class _TxLogStreamReader(DataSourceStreamReader):
         return {"version": self.starting_version}
 
     def latestOffset(self) -> dict:
-        import re as _re
-
-        try:
-            names = os.listdir(os.path.join(self.path, "_txlog"))
-        except FileNotFoundError:
-            return {"version": -1}
-        top = max(
-            (int(n[:8]) for n in names if _re.match(r"^\d{8}\.json$", n)),
-            default=-1,
-        )
+        top = TxTable(None, self.path).version()
         if self.max_versions is not None and self._last_end is not None:
             top = min(top, self._last_end + self.max_versions)
         return {"version": top}
@@ -951,74 +748,19 @@ class _TxLogStreamReader(DataSourceStreamReader):
         cols = _schema_columns(self._schema)
         parts: list[_FilePartition] = []
         # one replay at the batch start, advanced commit-by-commit —
-        # never one replay per version (round-11 review finding)
+        # never one replay per version
         lo = start["version"]
         live = _replay_adds(self.path, lo) if lo >= 0 else {}
-        if self.read_change_feed:
-            for v in range(lo + 1, end["version"] + 1):
-                vf = _version_file(self.path, v)
-                if os.path.exists(vf):
-                    self._refuse_non_additive_meta(v, json.load(open(vf)))
-                parts.extend(
-                    _cdf_version_partitions(
-                        self.path, v, cols, self.split_rows,
-                        self.skip_change_commits, prev_adds=live,
-                        physical=self._pairs,
-                    )
-                )
-                live = _advance_live(live, self.path, v)
-            return parts
         for v in range(lo + 1, end["version"] + 1):
-            f = _version_file(self.path, v)
-            if not os.path.exists(f):
-                raise FileNotFoundError(
-                    f"log version {v} missing at {self.path} — vacuumed past "
-                    "the stream's checkpoint? restart with a fresh checkpoint"
+            parts.extend(
+                _version_partitions(
+                    self.path, v, cols, self.split_rows, live,
+                    change_feed=self.read_change_feed,
+                    skip_change_commits=self.skip_change_commits,
+                    physical=self._pairs,
+                    check_meta=self._refuse_non_additive_meta,
                 )
-            added, removed = [], []
-            dv_commit = False
-            actions = json.load(open(f))
-            self._refuse_non_additive_meta(v, actions)
-            for action in actions:
-                if "add" in action and action["add"].get("dataChange", True):
-                    if action["add"].get("dv"):
-                        dv_commit = True
-                    added.append(action["add"])
-                elif "remove" in action and action["remove"].get("dataChange", True):
-                    removed.append(action["remove"]["path"])
-            in_place: list[str] = []
-            if not removed and not dv_commit:
-                # restore's in-place vector rollback re-adds the file
-                # with NO remove action — it must not replay as a
-                # blind append of the whole file (advisor r10)
-                added, in_place = _split_in_place(self.path, v, added, live)
-            # advance live BEFORE any continue, or later versions
-            # would classify against a stale pre-state
-            live = _advance_live(live, self.path, v)
-            if removed or dv_commit or in_place:
-                # copy-on-write rewrite, a deletion-vector re-add, or
-                # an in-place restore (emitting any of them would
-                # replay whole files as inserts): not appends
-                if self.skip_change_commits:
-                    continue
-                raise ValueError(
-                    f"version {v} of {self.path} changes existing rows; a "
-                    "version-offset stream is append-only. Set "
-                    "skipChangeCommits=true to ignore such commits, use "
-                    "readChangeFeed=true on a change_data table, or consume "
-                    "TxTable.changes() in batch for row-accurate updates."
-                )
-            for add in added:
-                parts.extend(
-                    _file_partitions(
-                        _data_file(self.path, add["path"], add),
-                        int(add.get("rows", 0)),
-                        cols,
-                        self.split_rows,
-                        _pv_constants(add, cols, self._pairs),
-                        physical=self._pairs,
-                    )
-                )
+            )
         return parts
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -1067,8 +809,6 @@ class TxLogDataSource(DataSource):
         if as_of is not None and ts is not None:
             raise ValueError("pass asOf OR timestampAsOf, not both")
         if ts is not None:
-            from .txlog import TxTable
-
             return TxTable(None, self._path()).version_at(ts)
         return int(as_of) if as_of is not None else None
 
@@ -1099,22 +839,7 @@ class TxLogDataSource(DataSource):
                 int(ev) if ev is not None else None,
                 int(split) if split is not None else DEFAULT_SPLIT_ROWS,
             )
-        cls = _TxLogBatchReader
-        try:
-            from pyspark.sql import SparkSession
-
-            session = SparkSession.getActiveSession()
-            if (
-                session is not None
-                and str(
-                    session.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-                ).lower()
-                == "true"
-            ):
-                cls = _TxLogPruningBatchReader
-        except Exception:
-            cls = _TxLogBatchReader  # no session/conf access: no pushdown
-        return cls(
+        return _TxLogBatchReader(
             self._path(),
             int(as_of) if as_of is not None else None,
             int(split) if split is not None else DEFAULT_SPLIT_ROWS,
@@ -1132,14 +857,11 @@ class TxLogDataSource(DataSource):
 
 def register_txlog_source(spark) -> None:
     """Idempotent registration of the ``hz_txlog`` format. Also
-    enables Python data source filter pushdown so batch reads get
-    log-stats file skipping (without the conf, Spark rejects readers
-    that implement ``pushFilters`` — the DataSource falls back to the
-    non-pruning reader in that case)."""
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # conf locked down: reads still work, just without skipping
+    enables Python data source filter pushdown, which the batch
+    reader's log-stats file skipping needs (Spark refuses a reader
+    implementing ``pushFilters`` without the conf) — a session that
+    refuses the conf fails here, not at its first read."""
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(TxLogDataSource)
 
 
@@ -1182,8 +904,6 @@ class _StagedParquetWriteMixin:
         ``partitionBy`` option for a new table, the table's committed
         partitionColumns otherwise (a mismatching option raises —
         silent layout drift would break pruning expectations)."""
-        from .txlog import TxTable
-
         opt = [c for c in str(opts.get("partitionby", "")).split(",") if c]
         t = TxTable(None, self.path)
         existing = t.partition_columns() if t.version() >= 0 else None
@@ -1223,8 +943,6 @@ class _StagedParquetWriteMixin:
         under them, and commit() revalidates the assignment against
         the then-current log before committing. Without the option a
         widening write fails CLOSED at construction."""
-        from .txlog import TxTable
-
         self.mapping = ()
         self.generated = ()
         self.gen_schema_json = None
@@ -1641,8 +1359,6 @@ class _StagedParquetWriteMixin:
                     pass
 
     def _table(self):
-        from .txlog import TxTable
-
         # log-only operations: no SparkSession needed on this path
         return TxTable(None, self.path, stat_cols=self.stat_cols)
 

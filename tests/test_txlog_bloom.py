@@ -6,7 +6,10 @@ overlaps ``user_id = X`` after enough appends, and a GDPR point
 DELETE degrades to a full scan. With the index, the detection scan
 schedules tasks only for files that plausibly contain the key.
 Build and probe hash through the SAME JVM expression
-(``xxhash64(cast(v), i)``), so parity is by construction."""
+(``xxhash64(cast(v), i)``), so parity is by construction. Bloom
+skipping belongs to the TxTable verbs, which hold a session to hash
+probes; the sessionless ``hz_txlog`` reader serves bloom-indexed
+tables and skips by log stats only."""
 
 from __future__ import annotations
 
@@ -241,47 +244,3 @@ def test_or_predicates_never_bloom_skip(spark, tmp_path):
     left = {r.k for r in t.snapshot().collect()}
     assert 7 not in left and 9 not in left
     assert len(left) == 30
-
-
-def test_dsv2_pushdown_probes_bloom_sidecars(spark, tmp_path):
-    """The DSv2 batch planner probes bloom sidecars for pushed
-    EqualTo/In filters (conjuncts by the pushFilters contract):
-    interleaved key ranges defeat min/max stats, yet only the
-    carrier file plans a partition — and results stay exact because
-    Spark still evaluates the filter row-level."""
-    from pyspark.sql.datasource import EqualTo, In
-
-    from hz_csv2parquet_spark.sources.txlog_source import (
-        _TxLogPruningBatchReader as _Reader,
-    )
-
-    t = _mk_interleaved(spark, tmp_path, files=4, per=16)
-    t.index_bloom(["k", "user"])
-
-    r = _Reader(t.path, None)
-    assert len(r.partitions()) == 4  # all ranges overlap: stats useless
-    r2 = _Reader(t.path, None)
-    r2.pushFilters([EqualTo(("k",), 7)])
-    assert len(r2.partitions()) == 1  # k=7 lives in one file (7 % 4)
-    r3 = _Reader(t.path, None)
-    r3.pushFilters([In(("k",), (5, 9, 6))])
-    assert len(r3.partitions()) == 2  # {5,9} share a file; 6 adds one
-    r4 = _Reader(t.path, None)
-    r4.pushFilters([EqualTo(("user",), "u9")])
-    assert len(r4.partitions()) == 1  # string probe, same machinery
-    r5 = _Reader(t.path, None)
-    r5.pushFilters([EqualTo(("k",), 999_999)])
-    assert len(r5.partitions()) == 1  # absent everywhere → sentinel only
-    assert r5.partitions()[0].path == ""
-
-    # end to end through format(): exact under the skipping
-    from hz_csv2parquet_spark.sources.txlog_source import register_txlog_source
-
-    register_txlog_source(spark)
-    got = (
-        spark.read.format("hz_txlog")
-        .load(t.path)
-        .filter("k = 7")
-        .collect()
-    )
-    assert [(r_.k, r_.user) for r_ in got] == [(7, "u7")]

@@ -216,12 +216,9 @@ def test_clone_pruning_uses_cloned_stats(spark, tmp_path):
 
 
 def test_clone_dsv2_batch_and_stream_reads(spark, tmp_path):
-    from hz_csv2parquet_spark.sources.txlog_source import TxLogDataSource
+    from hz_csv2parquet_spark.sources.txlog_source import register_txlog_source
 
-    try:
-        spark.dataSource.register(TxLogDataSource)
-    except Exception:
-        pass  # already registered in this session
+    register_txlog_source(spark)
     src = _mk_src(spark, str(tmp_path / "src"))
     cl = src.clone(str(tmp_path / "cl"))
     got = spark.read.format("hz_txlog").load(str(tmp_path / "cl"))
