@@ -60,6 +60,7 @@ public-protocol shapes only.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 from collections.abc import Iterator, Sequence
@@ -429,8 +430,16 @@ def _pushed_can_match(flt, phys: dict):
     (``_compile_can_match``), keyed by the PHYSICAL column name the
     log's stats and partition values use — so batch reads and DML
     skip files by one rule. ``None`` for filters the log cannot
-    refute (nested columns, string predicates, NOT, ...)."""
-    attr = getattr(flt, "attribute", ())  # Not has a child instead
+    refute (nested columns, string predicates, most NOTs, ...)."""
+    if type(flt).__name__ == "Not":
+        # Spark pushes ``b = false`` and ``NOT b`` as
+        # Not(EqualTo(b, true)): on a boolean that is the equality
+        # with the other value (a NULL ``b`` satisfies neither)
+        eq = flt.child
+        if type(eq).__name__ != "EqualTo" or not isinstance(eq.value, bool):
+            return None
+        return _pushed_can_match(dataclasses.replace(eq, value=not eq.value), phys)
+    attr = getattr(flt, "attribute", ())
     if len(attr) != 1:
         return None
     col = phys.get(attr[0], attr[0])
@@ -449,15 +458,21 @@ class _TxLogBatchReader(DataSourceReader):
     filter pushdown into log-stats file skipping. Defining
     ``pushFilters`` requires ``spark.sql.python.filterPushdown.enabled``
     (Spark refuses the reader otherwise), which
-    :func:`register_txlog_source` sets."""
+    :func:`register_txlog_source` sets. The log is replayed once, in
+    :meth:`partitions`; the replayed state is not kept on the reader,
+    which Spark pickles into every task's read closure."""
 
-    def __init__(self, path: str, as_of: int | None, split_rows: int = DEFAULT_SPLIT_ROWS):
+    def __init__(
+        self,
+        path: str,
+        schema: StructType,
+        as_of: int | None,
+        split_rows: int = DEFAULT_SPLIT_ROWS,
+    ):
         self.path = path
+        self.schema = schema
         self.as_of = as_of
         self.split_rows = split_rows
-        state = _log_state(path, as_of)
-        self.schema = StructType.fromJson(json.loads(state["schema"]))
-        self._pairs = _mapping_pairs(state, self.schema)
         self._pushed = []  # pushed conjuncts, for file skipping
 
     def pushFilters(self, filters):
@@ -475,12 +490,13 @@ class _TxLogBatchReader(DataSourceReader):
         # whose stats prove some pushed conjunct can match no row, one
         # partition per surviving file (Spark schedules them across
         # executors)
-        state = _replay_adds(self.path, self.as_of)
+        state = _log_state(self.path, self.as_of)
+        pairs = _mapping_pairs(state, self.schema)
         cols = _schema_columns(self.schema)
-        phys = dict(self._pairs)
+        phys = dict(pairs)
         checks = [c for c in (_pushed_can_match(f, phys) for f in self._pushed) if c]
         parts: list[_FilePartition] = []
-        for p, add in state.items():
+        for p, add in state["adds"].items():
             stats = (add.get("stats") or {}, add.get("partitionValues") or {})
             if not all(c(*stats, add.get("nulls"), add.get("rows")) for c in checks):
                 continue
@@ -491,9 +507,9 @@ class _TxLogBatchReader(DataSourceReader):
                     int(add.get("rows", 0)),
                     cols,
                     self.split_rows,
-                    constants=_pv_constants(add, cols, self._pairs),
+                    constants=_pv_constants(add, cols, pairs),
                     dv=_data_file(self.path, dv["path"], dv) if dv else None,
-                    physical=self._pairs,
+                    physical=pairs,
                 )
             )
         return parts or [_FilePartition("", cols)]
@@ -504,13 +520,6 @@ class _TxLogBatchReader(DataSourceReader):
         return _read_file_as_arrow(partition)
 
 
-def _replay_adds(path: str, as_of: int | None = None) -> dict[str, dict]:
-    """Live ``{relative path: add action}`` at ``as_of`` — replayed
-    from the log without Spark (add actions carry the min/max stats
-    file skipping needs)."""
-    return _log_state(path, as_of)["adds"]
-
-
 class _TxLogChangesBatchReader(DataSourceReader):
     """Batch change-feed read: ``spark.read.format("hz_txlog")
     .option("readChangeFeed", "true").option("startingVersion", N)
@@ -518,13 +527,20 @@ class _TxLogChangesBatchReader(DataSourceReader):
     versions [N, M] as CDF rows, planned from the log only (the
     public Delta batch-CDF surface)."""
 
-    def __init__(self, path: str, start: int, end: int | None, split_rows: int):
+    def __init__(
+        self,
+        path: str,
+        schema: StructType,
+        start: int,
+        end: int | None,
+        split_rows: int,
+    ):
         self.path = path
+        self.schema = schema
         self.start = start
         top = TxTable(None, path).version()
         self.end = top if end is None else min(end, top)
         self.split_rows = split_rows
-        self.schema = _cdf_schema(path, self.end)
         # RANGE-HEAD mapping (the TxTable.changes contract): physical
         # names are version-invariant, so the head's logical names
         # apply to every generation in the range
@@ -534,7 +550,7 @@ class _TxLogChangesBatchReader(DataSourceReader):
         cols = _schema_columns(self.schema)
         parts: list[_FilePartition] = []
         # one replay at the feed start, then one commit file per step
-        live = _replay_adds(self.path, self.start - 1) if self.start > 0 else {}
+        live = _log_state(self.path, self.start - 1)["adds"] if self.start > 0 else {}
         for v in range(self.start, self.end + 1):
             parts.extend(
                 _version_partitions(
@@ -750,7 +766,7 @@ class _TxLogStreamReader(DataSourceStreamReader):
         # one replay at the batch start, advanced commit-by-commit —
         # never one replay per version
         lo = start["version"]
-        live = _replay_adds(self.path, lo) if lo >= 0 else {}
+        live = _log_state(self.path, lo)["adds"] if lo >= 0 else {}
         for v in range(lo + 1, end["version"] + 1):
             parts.extend(
                 _version_partitions(
@@ -835,12 +851,14 @@ class TxLogDataSource(DataSource):
             ev = self.options.get("endingversion")
             return _TxLogChangesBatchReader(
                 self._path(),
+                schema,
                 start,
                 int(ev) if ev is not None else None,
                 int(split) if split is not None else DEFAULT_SPLIT_ROWS,
             )
         return _TxLogBatchReader(
             self._path(),
+            schema,
             int(as_of) if as_of is not None else None,
             int(split) if split is not None else DEFAULT_SPLIT_ROWS,
         )

@@ -997,6 +997,33 @@ def test_rebase_loop_has_one_home():
         assert homes == expected and hits(tree) == sum(expected.values()), homes
 
 
+def test_dml_pipeline_pieces_have_one_home():
+    """Tooling guard: in txlog.py the partition-cardinality choice
+    (``_PV_UNION_MAX``) is read in one function, and the
+    deletion-vector writer ``write_vector`` is defined once — a
+    second partition-value attach or vector-staging path fails
+    here."""
+    import ast
+
+    from hz_csv2parquet_spark.sources import txlog
+
+    tree = ast.parse(open(txlog.__file__).read())
+    readers = {
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Name) and n.id == "_PV_UNION_MAX"
+    }
+    assert readers == {"_attach_pv"}, readers
+    writers = [
+        fn
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and fn.name == "write_vector"
+    ]
+    assert len(writers) == 1
+
+
 def test_changes_blind_append_is_pure_inserts(spark, tmp_path):
     t = _mk(spark, tmp_path, n=10, files=1)
     t.append(spark.createDataFrame([(100, 200), (101, 202)], "k long, v long"))
@@ -1488,8 +1515,8 @@ def test_restore_rolls_back_deletion_vectors(spark, tmp_path):
 
 
 def test_dv_delete_after_compaction_visible_to_streams(spark, tmp_path):
-    """_stage_dv copies the prior add action; a compaction product
-    carries dataChange=false, which must NOT leak onto the vector
+    """_stage_dv_detect copies the prior add action; a compaction
+    product carries dataChange=false, which must NOT leak onto the vector
     re-add — streams and feeds would silently skip a real delete."""
     t = TxTable(spark, str(tmp_path / "tbl"), stat_cols=["k"], deletion_vectors=True)
     t.create(
@@ -2363,6 +2390,39 @@ def test_merge_race_with_overlapping_append_still_conflicts(
     assert [(r.k, r.v) for r in rows] == [(5, -5)]  # exactly one row
 
 
+def test_merge_rebases_past_append_into_another_partition(
+    spark, tmp_path, monkeypatch
+):
+    """MERGE's rebase check reads an exact hive partition value as a
+    [v, v] bound, as ``pruned_files`` does: a merge keyed on (p, k)
+    that loses the version race to a blind append into another p
+    partition rebases at retries=0, although the appended file
+    carries no stats for p."""
+    schema = "p int, k long, v long"
+    t = TxTable(spark, str(tmp_path / "tbl"), stat_cols=["k"])
+    t.create(
+        spark.createDataFrame([(i % 2, i, 2 * i) for i in range(10)], schema),
+        partition_by=["p"],
+    )
+    other = TxTable(spark, t.path, stat_cols=["k"])
+    competing = spark.createDataFrame([(7, 5, -1)], schema)  # same k, p=7
+    real_commit = TxTable._commit
+    state = {"injected": False}
+
+    def racing_commit(self, actions, expected_version, operation=None):
+        if not state["injected"] and self is t and operation == "MERGE":
+            state["injected"] = True
+            real_commit(other, other._stage(competing, ["p"]), expected_version)
+        return real_commit(self, actions, expected_version, operation=operation)
+
+    monkeypatch.setattr(TxTable, "_commit", racing_commit)
+    ups = spark.createDataFrame([(1, 5, -5)], schema)
+    v = t.merge_upsert(ups, ["p", "k"])  # retries=0: rebase, not raise
+    assert v == t.version() == 2
+    got = {(r.p, r.k): r.v for r in t.snapshot().collect()}
+    assert got[(1, 5)] == -5 and got[(7, 5)] == -1 and len(got) == 11
+
+
 def test_auto_stats_default_records_footer_minmax(spark, tmp_path):
     """Round-11 auto-stats (the Delta dataSkippingNumIndexedCols
     shape): a table created WITHOUT stat_cols records footer min/max
@@ -2627,6 +2687,8 @@ def test_stats_can_match_is_conservative_and_sound(spark, tmp_path):
     assert can("name IN (50)", stats=num_str, p={})
     # hive pv is an EXACT value, so numeric coercion stays safe there
     assert not can("p = 4") and can("p = 3")
+    # boolean literals skip on an exact partition value, by name
+    assert not can("b = false", p={"b": "true"}) and can("b = true", p={"b": "true"})
     # round 13: null-count atoms — IS NULL skips null-free files,
     # IS NOT NULL skips all-NULL files; missing info always admits
     def can_n(sql, nulls=None, rows=None, stats=st, p=pv):
@@ -2741,13 +2803,19 @@ def test_update_where_change_feed_pre_and_postimage(spark, tmp_path):
     )
 
 
+@pytest.mark.parametrize("dv", [False, True], ids=["cow", "dv"])
 def test_update_rebases_past_blind_append_and_updates_its_rows(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, dv
 ):
     """UPDATE shares DELETE's conflict resolution: a race lost to a
     blind append extends the transaction over the interleaved file,
-    so its matching rows are updated too."""
-    t = _mk(spark, tmp_path, n=10, files=1)  # k 0..9, v = 2k
+    so its matching rows are updated too — on a deletion-vector table
+    by a vector on that file, not a rewrite."""
+    t = TxTable(spark, str(tmp_path / "tbl"), stat_cols=["k"], deletion_vectors=dv)
+    t.create(  # one file, k 0..9, v = 2k
+        spark.range(10).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+        .repartition(1)
+    )
     other = TxTable(spark, t.path, stat_cols=["k"])
     competing = spark.createDataFrame([(5, 1000), (300, -3)], "k long, v long")
     real_commit = TxTable._commit
@@ -2765,6 +2833,10 @@ def test_update_rebases_past_blind_append_and_updates_its_rows(
     vals = sorted(r.v for r in t.snapshot().filter("k = 5").collect())
     assert vals == [11, 1001]  # both copies updated (+1 each)
     assert t.snapshot().filter("k = 300").count() == 1
+    acts = json.load(open(_version_file(t.path, v)))
+    vectored = [a["add"] for a in acts if "add" in a and a["add"].get("dv")]
+    assert any("remove" in a for a in acts) == (not dv)
+    assert len(vectored) == (2 if dv else 0)  # the original and the interleaved file
 
 
 def test_update_where_can_move_rows_across_partitions(spark, tmp_path):

@@ -27,6 +27,16 @@ def _mk(spark, tmp_path, n=20, files=2):
     return t
 
 
+def _batch_reader(path: str, **options):
+    """The batch reader ``format("hz_txlog")`` plans with, built the
+    way Spark builds it: ``reader()`` gets the schema ``schema()``
+    returned."""
+    from hz_csv2parquet_spark.sources.txlog_source import TxLogDataSource
+
+    ds = TxLogDataSource({"path": path, **options})
+    return ds.reader(ds.schema())
+
+
 def test_batch_read_matches_snapshot(spark, tmp_path):
     t = _mk(spark, tmp_path, n=30, files=3)
     got = spark.read.format("hz_txlog").load(t.path)
@@ -259,9 +269,6 @@ def test_batch_reader_pushed_filters_skip_files(spark, tmp_path):
     row-level — skipping is a superset guarantee). Planning runs in
     a Python worker with no SparkSession, so the end-to-end reads
     through format() are what prove the pushdown runs."""
-    from hz_csv2parquet_spark.sources.txlog_source import (
-        _TxLogBatchReader as _Reader,
-    )
     from pyspark.sql.datasource import EqualTo, GreaterThan
 
     t = TxTable(spark, str(tmp_path / "tbl"), stat_cols=["k"])
@@ -274,13 +281,13 @@ def test_batch_reader_pushed_filters_skip_files(spark, tmp_path):
     t.create(df)  # 4 files over disjoint k ranges
 
     # unit level: the planned partition count shrinks under filters
-    r = _Reader(t.path, None)
+    r = _batch_reader(t.path)
     assert len(r.partitions()) == 4
-    r2 = _Reader(t.path, None)
+    r2 = _batch_reader(t.path)
     leftover = list(r2.pushFilters([EqualTo(("k",), 5)]))
     assert len(leftover) == 1  # everything handed back to Spark
     assert len(r2.partitions()) == 1
-    r3 = _Reader(t.path, None)
+    r3 = _batch_reader(t.path)
     r3.pushFilters([GreaterThan(("k",), 299)])
     assert len(r3.partitions()) == 1
 
@@ -325,6 +332,9 @@ def test_batch_reader_pushed_filters_skip_hive_partitions(spark, tmp_path):
         return got.rdd.getNumPartitions()
 
     assert plan("b") == 3  # pushed as b = true; "false" dirs skip
+    # both pushed as Not(b = true): the "true" dirs skip
+    assert plan("NOT b") == 3
+    assert plan("b = false") == 3
     assert plan("p = 1") == 2
     assert plan("p >= 1") == 4
     assert plan("p IN (0, 2)") == 4
@@ -342,8 +352,6 @@ def test_batch_reader_splits_large_files_on_row_groups(spark, tmp_path):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from hz_csv2parquet_spark.sources.txlog_source import _TxLogBatchReader
 
     tbl = tmp_path / "tbl"
     (tbl / "data-x").mkdir(parents=True)
@@ -363,12 +371,12 @@ def test_batch_reader_splits_large_files_on_row_groups(spark, tmp_path):
             fh,
         )
     # unit: 10 row groups chunked at >=25 rows -> 4 partitions
-    r = _TxLogBatchReader(str(tbl), None, split_rows=25)
+    r = _batch_reader(str(tbl), splitrows="25")
     parts = r.partitions()
     assert len(parts) == 4
     assert [p.row_groups for p in parts] == [(0, 1, 2), (3, 4, 5), (6, 7, 8), (9,)]
     # default threshold: one partition, whole file
-    assert len(_TxLogBatchReader(str(tbl), None).partitions()) == 1
+    assert len(_batch_reader(str(tbl)).partitions()) == 1
     # end to end: the split read is exact
     got = (
         spark.read.format("hz_txlog")
@@ -557,7 +565,7 @@ def test_version_planners_parse_each_commit_once(spark, tmp_path, monkeypatch):
     top = t.version()
     schema = t.snapshot().schema
     cdf = _cdf_schema(t.path)
-    batch = _TxLogChangesBatchReader(t.path, 0, None, DEFAULT_SPLIT_ROWS)
+    batch = _TxLogChangesBatchReader(t.path, cdf, 0, None, DEFAULT_SPLIT_ROWS)
     # readers are built first: their constructors replay the log
     planners = {
         "append stream": _TxLogStreamReader(
@@ -580,6 +588,48 @@ def test_version_planners_parse_each_commit_once(spark, tmp_path, monkeypatch):
         parts = plan({"version": -1}, {"version": top})
         assert parts, name
         assert opens == {f"{v:08d}.json": 1 for v in range(top + 1)}, name
+
+
+def test_batch_read_planning_replays_the_log_once_per_step(
+    spark, tmp_path, monkeypatch
+):
+    """Driver-side planning as Spark runs it — ``schema()`` →
+    ``reader(schema)`` → ``pushFilters`` → ``partitions()`` — opens
+    each ``_txlog/<v>.json`` twice for a batch read (``schema()`` and
+    ``partitions()``; the reader takes its schema from ``reader()``)
+    and three times for a batch CDF read (plus the reader's
+    range-head column mapping)."""
+    import builtins
+    import collections
+    import os as _os
+
+    from pyspark.sql.datasource import GreaterThan
+
+    from hz_csv2parquet_spark.sources.txlog_source import TxLogDataSource
+
+    t = _mk_cdf(spark, tmp_path)  # v0 create, v1 merge, v2 delete
+    t.append(spark.createDataFrame([(7, 14)], "k long, v long"))  # v3
+    top = t.version()
+    opens: collections.Counter = collections.Counter()
+    real_open = builtins.open
+
+    def counting_open(f, *a, **kw):
+        if isinstance(f, str) and _os.path.basename(_os.path.dirname(f)) == "_txlog":
+            opens[_os.path.basename(f)] += 1
+        return real_open(f, *a, **kw)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    for options, want in (
+        ({}, 2),
+        ({"readchangefeed": "true", "startingversion": "0"}, 3),
+    ):
+        opens.clear()
+        ds = TxLogDataSource({"path": t.path, **options})
+        reader = ds.reader(ds.schema())
+        if not options:
+            reader.pushFilters([GreaterThan(("k",), 0)])
+        assert reader.partitions()
+        assert opens == {f"{v:08d}.json": want for v in range(top + 1)}, options
 
 
 def test_write_overwrite_conflicts_on_interleaved_commit(spark, tmp_path):
@@ -763,9 +813,6 @@ def test_partitioned_dsv2_read_stream_and_partition_pruning(spark, tmp_path):
     executor-side constants (batch AND streaming), and pushFilters
     prunes files on exact partition values through the same
     log-stats skipping rule."""
-    from hz_csv2parquet_spark.sources.txlog_source import (
-        _TxLogBatchReader as _Reader,
-    )
     from pyspark.sql.datasource import EqualTo
 
     t = TxTable(spark, str(tmp_path / "tbl"), stat_cols=["k"])
@@ -781,9 +828,9 @@ def test_partitioned_dsv2_read_stream_and_partition_pruning(spark, tmp_path):
         (i, i % 3, 2 * i) for i in range(12)
     }
     # partition pruning: EqualTo on p plans only the p=1 files
-    r = _Reader(t.path, None)
+    r = _batch_reader(t.path)
     n_all = len(r.partitions())
-    r2 = _Reader(t.path, None)
+    r2 = _batch_reader(t.path)
     r2.pushFilters([EqualTo(("p",), 1)])
     n_pruned = len(r2.partitions())
     assert 0 < n_pruned < n_all
@@ -1241,9 +1288,6 @@ def test_null_count_skipping_is_null_and_is_not_null(spark, tmp_path):
     superset guarantee: results are exact either way."""
     from pyspark.sql.datasource import IsNotNull, IsNull
 
-    from hz_csv2parquet_spark.sources.txlog_source import (
-        _TxLogBatchReader as _Reader,
-    )
 
     t = TxTable(spark, str(tmp_path / "tbl"), stat_cols=["v"])
     mk = lambda sql: spark.sql(sql).coalesce(1)
@@ -1263,12 +1307,12 @@ def test_null_count_skipping_is_null_and_is_not_null(spark, tmp_path):
         (10, 10),
     ]
 
-    r = _Reader(t.path, None)
+    r = _batch_reader(t.path)
     assert len(r.partitions()) == 3
-    r2 = _Reader(t.path, None)
+    r2 = _batch_reader(t.path)
     r2.pushFilters([IsNull(("v",))])
     assert len(r2.partitions()) == 2  # null-free file skipped
-    r3 = _Reader(t.path, None)
+    r3 = _batch_reader(t.path)
     r3.pushFilters([IsNotNull(("v",))])
     assert len(r3.partitions()) == 2  # all-NULL file skipped
 
