@@ -216,7 +216,7 @@ def cmd_table(args: argparse.Namespace) -> None:
     import json as jsonmod
     import logging
 
-    from .sources.txlog import DEFAULT_VACUUM_RETENTION_S, TxTable, _version_file
+    from .sources.txlog import DEFAULT_VACUUM_RETENTION_S, TxTable
 
     # verb-specific required options — argparse keeps them optional
     # across verbs, so validate up front instead of crashing inside
@@ -297,10 +297,9 @@ def cmd_table(args: argparse.Namespace) -> None:
         )
     elif args.action == "history":
         for v in range(t.version() + 1):
-            actions = jsonmod.load(open(_version_file(args.table, v)))
             kinds = {}
             op = ""
-            for a in actions:
+            for a in t._read_commit(v):
                 k = next(iter(a))
                 if k == "commitInfo":
                     op = a["commitInfo"].get("operation", "")

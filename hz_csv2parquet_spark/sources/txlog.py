@@ -353,8 +353,46 @@ def _norm_action(a: dict) -> dict:
     """An add action stripped of ``dataChange`` — provenance (append
     vs maintenance), not content: two adds differing only by it
     describe the same file state. THE normalization every in-place /
-    restore comparison uses (three call sites; keep them agreeing)."""
+    restore / staleness comparison uses (the commit classifier,
+    restore, the rebase read-set check and compact's staleness
+    check; keep them agreeing)."""
     return {k: v for k, v in a.items() if k != "dataChange"}
+
+
+def _classify_commit(
+    actions: list[dict], live: dict[str, dict]
+) -> tuple[dict, dict, dict, list]:
+    """One commit's data changes against the adds ``live`` before it
+    — the one classifier of the change feed and the ``hz_txlog``
+    planners. Returns ``(added, removed, in_place, cdcs)``:
+
+    - ``added``: ``{path: add}`` for data-changing adds that are new
+      or differ from their live action (an add re-emitted unchanged
+      changes no content);
+    - ``removed``: ``{path: live add or None}`` for data-changing
+      removes;
+    - ``in_place``: ``{path: live add}`` for added paths that were
+      already live and are not removed — the file changed under its
+      own path, with no remove action (a deletion vector grown,
+      rolled back or dropped);
+    - ``cdcs``: the commit's ``cdc`` actions.
+
+    ``dataChange: false`` actions (layout maintenance) land in no
+    bucket."""
+    added: dict[str, dict] = {}
+    removed: dict[str, dict | None] = {}
+    cdcs: list[dict] = []
+    for action in actions:
+        if "add" in action and action["add"].get("dataChange", True):
+            a = action["add"]
+            if a["path"] not in live or _norm_action(live[a["path"]]) != _norm_action(a):
+                added[a["path"]] = a
+        elif "remove" in action and action["remove"].get("dataChange", True):
+            removed[action["remove"]["path"]] = live.get(action["remove"]["path"])
+        elif "cdc" in action:
+            cdcs.append(action["cdc"])
+    in_place = {p: live[p] for p in added if p in live and p not in removed}
+    return added, removed, in_place, cdcs
 
 
 def _log_dir(table_path: str) -> str:
@@ -969,7 +1007,7 @@ class TxTable:
             prev = expected_version
             while prev >= 0:
                 try:
-                    prior = json.load(open(_version_file(self.path, prev)))
+                    prior = self._read_commit(prev)
                 except (OSError, ValueError):
                     break  # vacuumed/unreadable log head: clock wins
                 stamp = next(
@@ -1167,145 +1205,151 @@ class TxTable:
             return envelope
         return json.load(open(_checkpoint_file(self.path, v)))
 
-    def _replay_state(self, as_of: int | None = None) -> dict:
-        """Fully replayed log state at ``as_of`` (default: latest):
-        ``{"adds": {path: add_action}, "schema": ddl|None,
-        "txns": {appId: {batchId, ...}}}``. Starts from the newest
-        checkpoint ≤ target and parses only the tail commits — the
-        O(tail) contract tests/test_txlog.py pins via
-        ``log_reads``."""
-        top = self.version()
-        if top < 0:
-            raise FileNotFoundError(f"no transaction log at {self.path}")
-        hi = top if as_of is None else as_of
-        adds: dict[str, dict] = {}
-        schema: str | None = None
-        pcols: list[str] = []
-        props: dict = {}
-        constraints: dict = {}
-        generated: dict = {}
-        identity: dict = {}
-        features: set[str] = set()
-        wfeatures: set[str] = set()
-        txns: dict[str, set] = {}
-        mapping: dict | None = None
-        cts: dict[int, float] = {}
-        cts_complete = True
-        start = 0
+    def _read_commit(self, v: int) -> list[dict]:
+        """The actions of commit ``v`` in file order — the one parser
+        of ``_txlog/<v>.json``; counts ``log_reads``. Raises
+        FileNotFoundError when the file is missing; each caller
+        decides whether a missing commit is an error or a gap."""
+        try:
+            with open(_version_file(self.path, v)) as fh:
+                actions = json.load(fh)
+        except FileNotFoundError:
+            raise FileNotFoundError(f"missing log version {v} at {self.path}") from None
+        self.log_reads += 1
+        return actions
+
+    def _seed_state(self, hi: int, envelope_only: bool = False) -> tuple[dict, int]:
+        """The replay's starting point for a fold that ends at ``hi``:
+        the state of the newest checkpoint ≤ ``hi`` and the first
+        version left to fold after it, or the empty state and 0 when
+        no checkpoint loads. ``envelope_only`` reads the checkpoint's
+        footer metadata, no add rows (a pure metadata walk never pays
+        a full checkpoint scan), and passes over a checkpoint without
+        the (version -> commitInfo wall-clock) index, so a timestamp
+        walk never yields a partial index."""
         ckpts = [c for c in self._checkpoint_versions() if c <= hi]
         if ckpts:
+            load = self._load_checkpoint_envelope if envelope_only else self._load_checkpoint
             try:
-                snap = self._load_checkpoint(ckpts[-1])
-                adds = {a["path"]: a for a in snap["adds"]}
-                schema = snap["schema"]
-                pcols = snap.get("partitionColumns", [])
-                props = snap.get("properties", {})
-                constraints = snap.get("constraints", {})
-                generated = snap.get("generatedColumns", {})
-                identity = snap.get("identityColumns", {})
-                features = set(snap.get("readerFeatures", []))
-                wfeatures = set(snap.get("writerFeatures", []))
-                mapping = snap.get("columnMapping")
-                txns = {app: set(ids) for app, ids in snap["txns"].items()}
-                start = snap["version"] + 1
-                # (version -> commitInfo wall-clock) index: absent on
-                # checkpoints written before round 12 — the index is
-                # then PARTIAL (covers only the tail) and must not be
-                # re-persisted as if complete
-                if "commitTimestamps" in snap:
-                    cts = {
-                        int(k): float(t)
-                        for k, t in snap["commitTimestamps"].items()
+                snap = load(ckpts[-1])
+                # the index is absent on checkpoints written before
+                # round 12: a replay seeded from one carries a
+                # tail-only index, never re-persisted as complete
+                complete = "commitTimestamps" in snap
+                if complete or not envelope_only:
+                    state = {
+                        "adds": {
+                            a["path"]: a for a in ([] if envelope_only else snap["adds"])
+                        },
+                        "schema": snap["schema"],
+                        "partitionColumns": snap.get("partitionColumns", []),
+                        "properties": snap.get("properties", {}),
+                        "constraints": snap.get("constraints", {}),
+                        "generated": snap.get("generatedColumns", {}),
+                        "identity": snap.get("identityColumns", {}),
+                        "readerFeatures": set(snap.get("readerFeatures", [])),
+                        "writerFeatures": set(snap.get("writerFeatures", [])),
+                        "columnMapping": snap.get("columnMapping"),
+                        "txns": {app: set(ids) for app, ids in snap["txns"].items()},
+                        "commitTs": {
+                            int(k): float(t)
+                            for k, t in snap.get("commitTimestamps", {}).items()
+                        },
+                        "commitTsComplete": complete,
                     }
-                else:
-                    cts_complete = False
+                    return state, snap["version"] + 1
             except (OSError, ValueError, KeyError):
-                adds, schema, pcols, start = {}, None, [], 0  # full replay
-                props, constraints, features, txns = {}, {}, set(), {}
-                generated, identity, wfeatures = {}, {}, set()
-                mapping = None
-                cts, cts_complete = {}, True
-        for v in range(start, hi + 1):
-            f = _version_file(self.path, v)
-            if not os.path.exists(f):
-                raise FileNotFoundError(f"missing log version {v} at {self.path}")
-            self.log_reads += 1
-            for action in json.load(open(f)):
-                if "add" in action:
-                    adds[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    adds.pop(action["remove"]["path"], None)
-                elif "meta" in action:
-                    # meta keys are independent: a feature/property
-                    # upgrade commit carries no schema and must not
-                    # clobber the committed one
-                    m = action["meta"]
-                    if "schema" in m:
-                        schema = m["schema"]
-                    if "partitionColumns" in m:
-                        pcols = m["partitionColumns"]
-                    if "properties" in m:
-                        props.update(m["properties"])
-                    if "constraints" in m:
-                        # None value = DROP CONSTRAINT
-                        for cname, expr in m["constraints"].items():
-                            if expr is None:
-                                constraints.pop(cname, None)
-                            else:
-                                constraints[cname] = expr
-                    if "generatedColumns" in m:
-                        # None value = column dropped / generation
-                        # removed (the constraints merge rule)
-                        for gname, gexpr in m["generatedColumns"].items():
-                            if gexpr is None:
-                                generated.pop(gname, None)
-                            else:
-                                generated[gname] = gexpr
-                    if "identityColumns" in m:
-                        # whole-spec replace per column; None = column
-                        # dropped / identity retired (the constraints
-                        # merge rule). hwm advances ride these metas.
-                        for iname, ispec in m["identityColumns"].items():
-                            if ispec is None:
-                                identity.pop(iname, None)
-                            else:
-                                identity[iname] = ispec
-                    if "readerFeatures" in m:
-                        features.update(m["readerFeatures"])
-                    if "writerFeatures" in m:
-                        wfeatures.update(m["writerFeatures"])
-                    if "columnMapping" in m:
-                        # whole-value replace (RESTORE commits None
-                        # to roll an upgrade back)
-                        mapping = m["columnMapping"]
-                elif "txn" in action:
-                    txns.setdefault(action["txn"]["appId"], set()).add(
-                        action["txn"]["batchId"]
-                    )
-                elif "commitInfo" in action:
-                    cts[v] = float(action["commitInfo"].get("timestamp", 0))
-        unknown = features - SUPPORTED_READER_FEATURES
+                pass  # unreadable checkpoint: full replay
+        return {
+            "adds": {},
+            "schema": None,
+            "partitionColumns": [],
+            "properties": {},
+            "constraints": {},
+            "generated": {},
+            "identity": {},
+            "readerFeatures": set(),
+            "writerFeatures": set(),
+            "columnMapping": None,
+            "txns": {},
+            "commitTs": {},
+            "commitTsComplete": True,
+        }, 0
+
+    @staticmethod
+    def _apply_commit(state: dict, v: int, actions: list[dict]) -> None:
+        """Fold commit ``v``'s actions into ``state`` in FILE ORDER —
+        the one fold every log walk advances: a commit spelling
+        "replace X" as [remove X, add X'] leaves X' live."""
+        adds = state["adds"]
+        for action in actions:
+            if "add" in action:
+                adds[action["add"]["path"]] = action["add"]
+            elif "remove" in action:
+                adds.pop(action["remove"]["path"], None)
+            elif "meta" in action:
+                # meta keys are independent: a feature/property
+                # upgrade commit carries no schema and must not
+                # clobber the committed one
+                m = action["meta"]
+                for key in ("schema", "partitionColumns", "columnMapping"):
+                    # whole-value replace (RESTORE commits a None
+                    # columnMapping to roll an upgrade back)
+                    if key in m:
+                        state[key] = m[key]
+                if "properties" in m:
+                    state["properties"].update(m["properties"])
+                # per-name merges; a None value drops the name (DROP
+                # CONSTRAINT, a dropped column, a retired generation
+                # or identity). Identity hwm advances ride these metas.
+                for key, into in (
+                    ("constraints", "constraints"),
+                    ("generatedColumns", "generated"),
+                    ("identityColumns", "identity"),
+                ):
+                    for name, val in m.get(key, {}).items():
+                        if val is None:
+                            state[into].pop(name, None)
+                        else:
+                            state[into][name] = val
+                state["readerFeatures"].update(m.get("readerFeatures", ()))
+                state["writerFeatures"].update(m.get("writerFeatures", ()))
+            elif "txn" in action:
+                state["txns"].setdefault(action["txn"]["appId"], set()).add(
+                    action["txn"]["batchId"]
+                )
+            elif "commitInfo" in action:
+                state["commitTs"][v] = float(action["commitInfo"].get("timestamp", 0))
+
+    def _check_reader_features(self, state: dict) -> None:
+        """Refuse a state whose table needs a reader feature this
+        reader does not implement."""
+        unknown = state["readerFeatures"] - SUPPORTED_READER_FEATURES
         if unknown:
             raise TableFeatureError(
                 f"table {self.path} requires reader features {sorted(unknown)} "
                 "this reader does not implement — upgrade the reader; "
                 f"supported: {sorted(SUPPORTED_READER_FEATURES)}"
             )
-        return {
-            "adds": adds,
-            "schema": schema,
-            "partitionColumns": pcols,
-            "properties": props,
-            "constraints": constraints,
-            "generated": generated,
-            "identity": identity,
-            "readerFeatures": features,
-            "writerFeatures": wfeatures,
-            "columnMapping": mapping,
-            "txns": txns,
-            "commitTs": cts,
-            "commitTsComplete": cts_complete,
-        }
+
+    def _replay_state(self, as_of: int | None = None) -> dict:
+        """Fully replayed log state at ``as_of`` (default: latest):
+        ``{"adds": {path: add_action}, "schema": ddl|None,
+        "txns": {appId: {batchId, ...}}, ...}`` — the
+        :meth:`_seed_state` of the newest checkpoint ≤ target, then
+        :meth:`_apply_commit` over each tail commit, read once by
+        :meth:`_read_commit` (the O(tail) contract tests/test_txlog.py
+        pins via ``log_reads``). Raises on a missing commit and on a
+        reader feature this reader does not implement."""
+        top = self.version()
+        if top < 0:
+            raise FileNotFoundError(f"no transaction log at {self.path}")
+        hi = top if as_of is None else as_of
+        state, start = self._seed_state(hi)
+        for v in range(start, hi + 1):
+            self._apply_commit(state, v, self._read_commit(v))
+        self._check_reader_features(state)
+        return state
 
     def _replay(self, as_of: int | None = None) -> tuple[list[str], str | None]:
         """(live relative file paths in add order, last schema DDL)."""
@@ -2979,40 +3023,20 @@ class TxTable:
 
     def commit_timestamps(self) -> dict[int, float]:
         """(version -> commitInfo wall-clock) for every timestamped
-        commit — resolved from the newest parquet checkpoint's
-        COMPLETE index plus only the post-checkpoint tail (O(tail),
-        not O(versions) JSON opens); a pre-round-12 checkpoint
-        without the index falls back to the full scan, never a
-        partial answer. Shared by batch ``timestampAsOf``
-        (:meth:`version_at`) and the streaming ``startingTimestamp``
-        resolution (txlog_source), so the two surfaces read the same
-        index."""
+        commit — the replay's fold, seeded from the newest
+        checkpoint's envelope (its COMPLETE index, no add rows), over
+        only the post-checkpoint tail: O(tail), not O(versions) JSON
+        opens. A checkpoint without the index seeds nothing, so the
+        walk starts at version 0 — never a partial answer. A missing
+        commit inside the walk raises. Shared by batch
+        ``timestampAsOf`` (:meth:`version_at`) and the streaming
+        ``startingTimestamp`` resolution (txlog_source), so the two
+        surfaces read the same index."""
         top = self.version()
-        cts: dict[int, float] = {}
-        start = 0
-        ckpts = [c for c in self._checkpoint_versions() if c <= top]
-        if ckpts:
-            try:
-                # envelope-only read: this is a pure metadata question
-                snap = self._load_checkpoint_envelope(ckpts[-1])
-                if "commitTimestamps" in snap:
-                    cts = {
-                        int(k): float(t)
-                        for k, t in snap["commitTimestamps"].items()
-                    }
-                    start = snap["version"] + 1
-            except (OSError, ValueError, KeyError):
-                cts, start = {}, 0  # unreadable checkpoint: full scan
+        state, start = self._seed_state(top, envelope_only=True)
         for v in range(start, top + 1):
-            f = _version_file(self.path, v)
-            if not os.path.exists(f):
-                continue  # vacuumed log head
-            self.log_reads += 1
-            for action in json.load(open(f)):
-                if "commitInfo" in action:
-                    cts[v] = float(action["commitInfo"].get("timestamp", 0))
-                    break
-        return cts
+            self._apply_commit(state, v, self._read_commit(v))
+        return state["commitTs"]
 
     def detail(self) -> dict:
         """DESCRIBE DETAIL payload (Delta's table-metadata one-row
@@ -3032,7 +3056,9 @@ class TxTable:
                 size += os.path.getsize(f)
             except OSError:
                 pass  # FSCK territory — detail() reports, never raises
-        cts = self.commit_timestamps()
+        # the replay's own index, unless its checkpoint seeded a
+        # tail-only one
+        cts = state["commitTs"] if state["commitTsComplete"] else self.commit_timestamps()
         return {
             "format": "hz_txlog",
             "location": self.path,
@@ -3083,8 +3109,7 @@ class TxTable:
         v = self.version()
         while v >= 0 and (limit is None or len(rows) < limit):
             try:
-                actions = json.load(open(_version_file(self.path, v)))
-                self.log_reads += 1
+                actions = self._read_commit(v)
             except (OSError, ValueError):
                 v -= 1
                 continue  # vacuumed log head
@@ -5092,14 +5117,10 @@ class TxTable:
             # hwm — safe (ids are never re-issued; some are skipped).
             family_marks: dict[tuple[int, int], list] = {}
             for v in range(version + 1, base + 1):
-                vf = _version_file(self.path, v)
-                if not os.path.exists(vf):
-                    continue  # log trimmed past a checkpoint: best effort
                 try:
-                    with open(vf) as fh:
-                        acts = [a for ln in fh for a in json.loads(ln)]
+                    acts = self._read_commit(v)
                 except (OSError, ValueError):
-                    continue
+                    continue  # log trimmed past a checkpoint: best effort
                 for a in acts:
                     m = a.get("meta") if isinstance(a, dict) else None
                     for ispec in (m or {}).get("identityColumns", {}).values():
@@ -5220,10 +5241,14 @@ class TxTable:
         diff on BOTH sides: old rows under the v−1 vector state, new
         rows under the committed one. Rows the commit masked surface
         as deletes, rows it unmasked (a vector rollback) as inserts,
-        and an action re-emitted unchanged contributes nothing. The
-        pre-commit state is tracked INCREMENTALLY along the walk (one
-        replay at ``from_version``, then one commit file per step) —
-        not one full replay per version.
+        and an action re-emitted unchanged contributes nothing.
+
+        One log walk: one replay at ``from_version``, then one commit
+        file per step, each classified (:func:`_classify_commit`)
+        against the adds live before it and folded into the state
+        (:meth:`_apply_commit`). The walk ends at the range head,
+        whose schema and column mapping name every generation's
+        columns, so the feeds are built after it.
 
         Commits whose actions carry ``dataChange: false``
         (compaction/layout maintenance) are skipped outright — they
@@ -5231,89 +5256,54 @@ class TxTable:
         the change feed shares time travel's retention contract."""
         from pyspark.sql.types import StructType
 
-        top = self.version()
-        hi = top if to_version is None else to_version
-        state = self._replay_state(as_of=hi)
+        hi = self.version() if to_version is None else to_version
+        state = self._replay_state(as_of=from_version)
+        steps = []
+        for v in range(from_version + 1, hi + 1):
+            actions = self._read_commit(v)
+            steps.append((v, _classify_commit(actions, state["adds"])))
+            self._apply_commit(state, v, actions)
+        self._check_reader_features(state)
         schema = StructType.fromJson(json.loads(state["schema"]))
-        out_schema = StructType.fromJson(json.loads(state["schema"])).add(
-            "_change_type", "string"
-        ).add("_commit_version", "long")
         cols = [f.name for f in schema.fields]
-        # pre-commit live state, maintained incrementally as the walk
-        # applies each commit's actions (dataChange=false included:
-        # maintenance changes the live SET even with equal content)
-        live: dict[str, dict] = (
-            dict(self._replay_state(as_of=from_version)["adds"])
-            if from_version >= 0
-            else {}
-        )
+        mapping = state.get("columnMapping")
 
-        def read_side(paths: list[str], adds: dict[str, dict]) -> DataFrame:
-            # pv/dv-aware read (partition columns reattach; positions
-            # already dead at this state never enter the diff), then
-            # align every generation to the as-of schema (null-fill
-            # columns a pre-evolution file lacks) so the content diff
-            # compares identical shapes. The RANGE-HEAD mapping names
-            # every generation: physical names never change, so the
-            # head's logical names apply to pre-rename files too.
-            df = self._read_files(
-                paths, adds, state["schema"], mapping=state.get("columnMapping")
-            )
+        def aligned(df: DataFrame, *extra: str) -> DataFrame:
+            # align every generation to the range-head schema
+            # (null-fill columns a pre-evolution file lacks) so the
+            # content diff compares identical shapes
             return df.select(
                 *[
                     F.col(c) if c in df.columns else F.lit(None).cast(schema[c].dataType).alias(c)
                     for c in cols
-                ]
+                ],
+                *extra,
             )
 
+        def read_side(adds: dict[str, dict | None]) -> DataFrame:
+            # pv/dv-aware read (partition columns reattach; positions
+            # already dead at this state never enter the diff). The
+            # RANGE-HEAD mapping names every generation: physical
+            # names never change, so the head's logical names apply
+            # to pre-rename files too.
+            files = [_data_file(self.path, p, a) for p, a in adds.items()]
+            known = {p: a for p, a in adds.items() if a is not None}
+            return aligned(self._read_files(files, known, state["schema"], mapping=mapping))
+
         feeds: list[DataFrame] = []
-        for v in range(from_version + 1, hi + 1):
-            f = _version_file(self.path, v)
-            if not os.path.exists(f):
-                raise FileNotFoundError(f"missing log version {v} at {self.path}")
-            added, removed, cdcs = [], [], []
-            added_adds: dict[str, dict] = {}
-            ordered_ops: list[tuple[str, object]] = []
-            for action in json.load(open(f)):
-                if "add" in action:
-                    ordered_ops.append(("add", action["add"]))
-                elif "remove" in action:
-                    ordered_ops.append(("remove", action["remove"]["path"]))
-                if "add" in action and action["add"].get("dataChange", True):
-                    rel = action["add"]["path"]
-                    if rel in live and _norm_action(live[rel]) == _norm_action(action["add"]):
-                        continue  # re-emitted unchanged: no content change
-                    added.append(_data_file(self.path, rel, action["add"]))
-                    added_adds[rel] = action["add"]
-                elif "remove" in action and action["remove"].get("dataChange", True):
-                    rrel = action["remove"]["path"]
-                    removed.append(_data_file(self.path, rrel, live.get(rrel)))
-                elif "cdc" in action:
-                    cdcs.append(os.path.join(self.path, action["cdc"]["path"]))
-            # in-place changes: added paths live at v-1 with a
-            # DIFFERENT action (vector grown / rolled back / dropped)
-            # — their pre-state rows join the removed side of the diff
-            in_place = [
-                rel for rel in added_adds
-                if rel in live
-                and _data_file(self.path, rel, live.get(rel)) not in removed
-            ]
-            pre_adds = dict(live)  # v-1 state for the removed side
-            # advance the live state BEFORE any early-continue — in
-            # FILE ORDER, exactly as _replay_state applies actions: a
-            # commit spelling "replace X" as [remove X, add X'] must
-            # leave X' live, not drop it (add-then-remove batching
-            # would misclassify every later commit touching X)
-            for kind, payload in ordered_ops:
-                if kind == "add":
-                    live[payload["path"]] = payload
-                else:
-                    live.pop(payload, None)
+        for v, (added, removed, in_place, cdcs) in steps:
+
+            def tag(df: DataFrame, kind: str) -> DataFrame:
+                return df.withColumn("_change_type", F.lit(kind)).withColumn(
+                    "_commit_version", F.lit(v).cast("long")
+                )
+
             if cdcs:
                 # the commit staged its own change set (change_data
                 # table): serve it directly — no content diff, no
                 # dependence on the superseded data files
-                for p in cdcs:
+                paths = [os.path.join(self.path, c["path"]) for c in cdcs]
+                for p in paths:
                     if not os.path.exists(p):
                         raise FileNotFoundError(
                             f"change feed for version {v} needs sidecar {p}, "
@@ -5326,52 +5316,34 @@ class TxTable:
                 # no footer-inference job
                 cdf = _scan_to_logical(
                     self.spark.read.schema(
-                        _physical_read_schema(
-                            state["schema"], state.get("columnMapping"), {}
-                        ).add("_change_type", "string")
-                    ).parquet(*cdcs),
-                    state.get("columnMapping"),
+                        _physical_read_schema(state["schema"], mapping, {}).add(
+                            "_change_type", "string"
+                        )
+                    ).parquet(*paths),
+                    mapping,
                     keep_extra=("_change_type",),
                 )
                 feeds.append(
-                    cdf.select(
-                        *[
-                            F.col(c) if c in cdf.columns
-                            else F.lit(None).cast(schema[c].dataType).alias(c)
-                            for c in cols
-                        ],
-                        "_change_type",
-                    ).withColumn("_commit_version", F.lit(v).cast("long"))
+                    aligned(cdf, "_change_type").withColumn(
+                        "_commit_version", F.lit(v).cast("long")
+                    )
                 )
                 continue
-            if not added and not removed:
-                continue
-
-            def tag(df: DataFrame, kind: str) -> DataFrame:
-                return df.withColumn("_change_type", F.lit(kind)).withColumn(
-                    "_commit_version", F.lit(v).cast("long")
-                )
-
-            old_side = removed + [
-                _data_file(self.path, rel, pre_adds.get(rel)) for rel in in_place
-            ]
+            # the old side: removed files plus in-place changes (added
+            # paths live at v-1 with a DIFFERENT action) under their
+            # v-1 actions
+            old = {**removed, **in_place}
             # retention check covers the dv sidecars the diff reads,
             # not just data files: the in-place old side needs the
             # SUPERSEDED vector, which vacuum may have reclaimed
-            needed_dvs = [
-                _data_file(self.path, a["dv"]["path"], a["dv"])
-                for a in added_adds.values()
-                if a.get("dv")
+            needed = [
+                _data_file(self.path, p, a) for p, a in (*added.items(), *removed.items())
             ] + [
-                _data_file(
-                    self.path,
-                    pre_adds[_rel_key(p)]["dv"]["path"],
-                    pre_adds[_rel_key(p)]["dv"],
-                )
-                for p in old_side
-                if (pre_adds.get(_rel_key(p)) or {}).get("dv")
+                _data_file(self.path, a["dv"]["path"], a["dv"])
+                for a in (*added.values(), *old.values())
+                if (a or {}).get("dv")
             ]
-            for p in added + removed + needed_dvs:
+            for p in needed:
                 if not os.path.exists(p):
                     raise FileNotFoundError(
                         f"change feed for version {v} needs {p}, which vacuum "
@@ -5379,17 +5351,19 @@ class TxTable:
                         "retention contract; consume feeds inside the vacuum "
                         "retention window"
                     )
-            if added and not old_side:  # blind append: no diff needed
-                feeds.append(tag(read_side(added, added_adds), "insert"))
-            elif old_side and not added:  # pure delete commit
-                feeds.append(tag(read_side(old_side, pre_adds), "delete"))
-            else:
-                a = read_side(added, added_adds)
-                r = read_side(old_side, pre_adds)
+            if added and not old:  # blind append: no diff needed
+                feeds.append(tag(read_side(added), "insert"))
+            elif old and not added:  # pure delete commit
+                feeds.append(tag(read_side(old), "delete"))
+            elif added:
+                a = read_side(added)
+                r = read_side(old)
                 feeds.append(tag(a.exceptAll(r), "insert"))
                 feeds.append(tag(r.exceptAll(a), "delete"))
         if not feeds:
-            return self.spark.createDataFrame([], out_schema)
+            return self.spark.createDataFrame(
+                [], schema.add("_change_type", "string").add("_commit_version", "long")
+            )
         out = feeds[0]
         for df in feeds[1:]:
             out = out.unionByName(df)

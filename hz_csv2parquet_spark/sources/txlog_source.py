@@ -40,10 +40,16 @@ tables (sources/txlog.py) through the standard ``format()`` surface:
 
 Every reader plans from the log only, in a Python worker on the
 driver host (no data I/O: partitions = one per added file, carrying
-path + rows from the add action), and reads executor-side via pyarrow
-as Arrow batches — the same columnar hand-off the built-in parquet
-source does, so a 1000-file commit fans out across the cluster
-instead of bottlenecking on the driver. Rows-per-file from the log
+path + rows from the add action). A snapshot read plans from one
+replay at its version. The streams and the batch change feed walk
+their version range once (``_log_walk``): one replay at the range
+start, then each commit file read once (``TxTable._read_commit``),
+classified against the adds live before it (``_classify_commit``)
+and folded (``TxTable._apply_commit``), as ``TxTable.changes`` does.
+Reads run executor-side via pyarrow as Arrow batches — the same
+columnar hand-off the built-in parquet source does, so a 1000-file
+commit fans out across the cluster instead of bottlenecking on the
+driver. Rows-per-file from the log
 lets Spark see batch sizes without opening footers.
 
 Engine caveat: Spark 4.1 runs Python streaming sources under
@@ -80,12 +86,11 @@ from pyspark.sql.types import StructType
 from .txlog import (
     _CMP_OPS,
     TxTable,
+    _classify_commit,
     _cmp_fn,
     _data_file,
     _in_fn,
-    _norm_action,
     _null_fn,
-    _version_file,
 )
 
 
@@ -339,81 +344,74 @@ _REWRITE_REFUSAL = {
 }
 
 
+def _log_walk(path: str, lo: int, hi: int, change_feed: bool) -> Iterator:
+    """The planners' one log walk over versions ``(lo, hi]``: one
+    replay at ``lo``, then each commit file read once, classified
+    (:func:`_classify_commit`) against the adds live before it and
+    folded into the state (:meth:`TxTable._apply_commit`). Yields
+    ``(v, actions, classified, state)``, ``state`` folded through
+    ``v`` — after the last step it is the range head's state."""
+    if hi <= lo:
+        return
+    t = TxTable(None, path)
+    state = t._replay_state(lo)
+    for v in range(lo + 1, hi + 1):
+        try:
+            actions = t._read_commit(v)
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"log version {v} missing at {path} — {_MISSING_VERSION[change_feed]}"
+            ) from None
+        classified = _classify_commit(actions, state["adds"])
+        t._apply_commit(state, v, actions)
+        yield v, actions, classified, state
+
+
 def _version_partitions(
     path: str,
     v: int,
+    actions: list,
+    classified: tuple,
     cols: tuple,
     split_rows: int,
-    live: dict,
     *,
     change_feed: bool,
     skip_change_commits: bool = False,
     physical: tuple = (),
-    check_meta=None,
 ) -> list[_FilePartition]:
-    """Plan ONE committed version from the log only — the one commit
-    classifier of the append stream, the CDF stream and the batch CDF
-    read — and advance ``live`` (the ``{path: add}`` state at v−1,
-    mutated in place, in file order: the _replay_state contract) past
-    it, so an N-version plan pays one replay and parses each commit
-    file once. ``check_meta(v, actions)`` sees the parsed actions
-    first (the stream's schema-anchor guard).
+    """Plan ONE committed version from its classified actions — the
+    one planner of the append stream, the CDF stream and the batch
+    CDF read, fed by :func:`_log_walk`:
 
     - ``change_feed`` commits carrying ``cdc`` sidecar actions → read
       the sidecars (``_change_type`` is in the file;
       ``_commit_version`` rides the partition as a constant);
     - blind appends → read the added files (a change feed stamps
-      ``_change_type='insert'`` and ``_commit_version``);
-    - copy-on-write rewrites, deletion-vector re-adds and in-place
-      re-adds (restore's vector rollback re-emits the add with NO
-      remove action) are not appends, and without sidecars not
-      row-accurately representable → raise, or skip under
+      ``_change_type='insert'`` and ``_commit_version``); an add
+      re-emitted unchanged is no append and plans nothing;
+    - copy-on-write rewrites, any add carrying a deletion vector, and
+      in-place re-adds (restore's vector rollback re-emits the add
+      with NO remove action) are not appends, and without sidecars
+      not row-accurately representable → raise, or skip under
       ``skipChangeCommits``;
     - ``dataChange: false`` layout commits are invisible.
     """
-    try:
-        actions = json.load(open(_version_file(path, v)))
-    except FileNotFoundError:
-        raise FileNotFoundError(
-            f"log version {v} missing at {path} — {_MISSING_VERSION[change_feed]}"
-        ) from None
-    if check_meta is not None:
-        check_meta(v, actions)
-    added, cdcs = [], []
-    rewrite = False
-    for action in actions:
-        if "add" in action and action["add"].get("dataChange", True):
-            rewrite |= bool(action["add"].get("dv"))
-            added.append(action["add"])
-        elif "remove" in action and action["remove"].get("dataChange", True):
-            rewrite = True
-        elif "cdc" in action and change_feed:
-            cdcs.append(action["cdc"])
-    if not (cdcs or rewrite):
-        # an add whose path is already live is NOT an append: drop
-        # identical re-emits, refuse changed ones (emitting the file
-        # would replay every row of it as a duplicate insert)
-        rewrite = any(
-            a["path"] in live and _norm_action(live[a["path"]]) != _norm_action(a)
-            for a in added
-        )
-        added = [a for a in added if a["path"] not in live]
-    for action in actions:
-        if "add" in action:
-            live[action["add"]["path"]] = action["add"]
-        elif "remove" in action:
-            live.pop(action["remove"]["path"], None)
-    if cdcs:
+    added, removed, in_place, cdcs = classified
+    if change_feed and cdcs:
         files = [(os.path.join(path, c["path"]), c, (("_commit_version", v),)) for c in cdcs]
-    elif rewrite:
+    elif removed or in_place or any(
+        a["add"].get("dv") and a["add"].get("dataChange", True)
+        for a in actions
+        if "add" in a
+    ):
         if skip_change_commits:
             return []
         raise ValueError(f"version {v} of {path} {_REWRITE_REFUSAL[change_feed]}")
     else:
         const = (("_change_type", "insert"), ("_commit_version", v)) if change_feed else ()
         files = [
-            (_data_file(path, a["path"], a), a, const + _pv_constants(a, cols, physical))
-            for a in added
+            (_data_file(path, p, a), a, const + _pv_constants(a, cols, physical))
+            for p, a in added.items()
         ]
     return [
         part
@@ -541,23 +539,23 @@ class _TxLogChangesBatchReader(DataSourceReader):
         top = TxTable(None, path).version()
         self.end = top if end is None else min(end, top)
         self.split_rows = split_rows
-        # RANGE-HEAD mapping (the TxTable.changes contract): physical
-        # names are version-invariant, so the head's logical names
-        # apply to every generation in the range
-        self._pairs = _mapping_pairs(_log_state(path, self.end), self.schema)
 
     def partitions(self) -> Sequence[InputPartition]:
         cols = _schema_columns(self.schema)
-        parts: list[_FilePartition] = []
-        # one replay at the feed start, then one commit file per step
-        live = _log_state(self.path, self.start - 1)["adds"] if self.start > 0 else {}
-        for v in range(self.start, self.end + 1):
-            parts.extend(
-                _version_partitions(
-                    self.path, v, cols, self.split_rows, live,
-                    change_feed=True, physical=self._pairs,
-                )
+        # classify the whole range first: its reads take the
+        # RANGE-HEAD mapping (the TxTable.changes contract) — physical
+        # names are version-invariant, so the head's logical names
+        # apply to every generation in the range
+        steps = list(_log_walk(self.path, self.start - 1, self.end, change_feed=True))
+        pairs = _mapping_pairs(steps[-1][3], self.schema) if steps else ()
+        parts = [
+            part
+            for v, actions, classified, _ in steps
+            for part in _version_partitions(
+                self.path, v, actions, classified, cols, self.split_rows,
+                change_feed=True, physical=pairs,
             )
+        ]
         return parts or [_FilePartition("", cols)]
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -660,7 +658,7 @@ class _TxLogStreamReader(DataSourceStreamReader):
             self.path, "_txlog", f".stream-anchor-{self.stream_id}.json"
         )
 
-    def _refuse_non_additive_meta(self, v: int, actions: list) -> None:
+    def _refuse_non_additive_meta(self, v: int, actions: list, mapping: dict | None) -> None:
         """Fail the stream on a mid-stream NON-ADDITIVE schema /
         columnMapping change (Delta's stream contract): a DROP of a
         served column — including drop + re-add of the same logical
@@ -718,13 +716,12 @@ class _TxLogStreamReader(DataSourceStreamReader):
                 else:
                     # mapped table: logical names may legally rename,
                     # so compare by PHYSICAL name — via the commit's
-                    # own mapping when it carries one, else the
-                    # mapping replayed at this version (physicals are
-                    # version-invariant; one O(tail) replay per
-                    # schema-carrying meta commit, a rare event)
+                    # own mapping when it carries one, else
+                    # ``mapping``, the walk's folded mapping at this
+                    # version (physicals are version-invariant)
                     mp2 = m.get("columnMapping")
                     if mp2 is None:
-                        mp2 = _log_state(self.path, v).get("columnMapping")
+                        mp2 = mapping
                     phys2 = dict((mp2 or {}).get("physical") or {})
                     new = {
                         phys2.get(f.name, f.name): f.dataType.simpleString()
@@ -763,18 +760,15 @@ class _TxLogStreamReader(DataSourceStreamReader):
         self._last_end = end["version"]  # rate-limit anchor for the next trigger
         cols = _schema_columns(self._schema)
         parts: list[_FilePartition] = []
-        # one replay at the batch start, advanced commit-by-commit —
-        # never one replay per version
-        lo = start["version"]
-        live = _log_state(self.path, lo)["adds"] if lo >= 0 else {}
-        for v in range(lo + 1, end["version"] + 1):
+        walk = _log_walk(self.path, start["version"], end["version"], self.read_change_feed)
+        for v, actions, classified, state in walk:
+            self._refuse_non_additive_meta(v, actions, state.get("columnMapping"))
             parts.extend(
                 _version_partitions(
-                    self.path, v, cols, self.split_rows, live,
+                    self.path, v, actions, classified, cols, self.split_rows,
                     change_feed=self.read_change_feed,
                     skip_change_commits=self.skip_change_commits,
                     physical=self._pairs,
-                    check_meta=self._refuse_non_additive_meta,
                 )
             )
         return parts

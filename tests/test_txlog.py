@@ -997,6 +997,46 @@ def test_rebase_loop_has_one_home():
         assert homes == expected and hits(tree) == sum(expected.values()), homes
 
 
+def test_commit_files_have_one_reader():
+    """Tooling guard: in the txlog modules and the CLI, only
+    ``TxTable._commit`` (which writes a commit file) and
+    ``TxTable._read_commit`` (which parses one) name
+    ``_version_file``, and no module imports it — a second
+    commit-file parser fails here."""
+    import ast
+
+    from hz_csv2parquet_spark import cli
+    from hz_csv2parquet_spark.sources import txlog, txlog_source
+
+    def hits(node) -> int:
+        return sum(
+            isinstance(n, ast.Name) and n.id == "_version_file" for n in ast.walk(node)
+        )
+
+    homes: dict[str, int] = {}
+    for mod in (txlog, txlog_source, cli):
+        tree = ast.parse(open(mod.__file__).read())
+        imported = {
+            a.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            for a in n.names
+        }
+        assert "_version_file" not in imported, mod.__name__
+        defs = [(n.name, n) for n in tree.body if isinstance(n, ast.FunctionDef)] + [
+            (f"{c.name}.{fn.name}", fn)
+            for c in tree.body
+            if isinstance(c, ast.ClassDef)
+            for fn in c.body
+            if isinstance(fn, ast.FunctionDef)
+        ]
+        found = {name: hits(fn) for name, fn in defs if hits(fn)}
+        # every use sits inside a listed function
+        assert sum(found.values()) == hits(tree), mod.__name__
+        homes.update(found)
+    assert set(homes) == {"TxTable._commit", "TxTable._read_commit"}, homes
+
+
 def test_dml_pipeline_pieces_have_one_home():
     """Tooling guard: in txlog.py the partition-cardinality choice
     (``_PV_UNION_MAX``) is read in one function, and the
@@ -3170,6 +3210,52 @@ def test_version_at_scans_only_the_post_checkpoint_tail(
     assert fresh.version_at(9999) == 119
     with pytest.raises(ValueError):
         fresh.version_at(999)
+
+
+def test_checkpoint_without_timestamp_index_gives_no_partial_index(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint without the (version -> commitInfo timestamp)
+    index — a legacy ``.ckpt.json``, or a checkpoint seeded from one —
+    never yields a partial index: a fresh handle walks the whole log
+    for its timestamps, and the next checkpoint does not persist the
+    tail-only index its replay carries as if it were complete."""
+    from hz_csv2parquet_spark.sources import txlog as _mod
+
+    clock = {"t": 1000.0}
+    monkeypatch.setattr(_mod.time, "time", lambda: clock["t"])
+    t = TxTable(spark, str(tmp_path / "tbl"), checkpoint_interval=4)
+    t.create(spark.createDataFrame([(1, 1)], "k long, v long"))
+
+    def tick(upto: int) -> None:
+        while t.version() < upto:
+            clock["t"] = 1000.0 + t.version() + 1
+            t._rebase_commit([], operation="TEST-TICK")
+
+    tick(4)  # parquet checkpoint at v3
+    head = t.version()
+    state = t._replay_state()
+    payload = {
+        "version": head,
+        "adds": list(state["adds"].values()),
+        "schema": state["schema"],
+        "partitionColumns": state["partitionColumns"],
+        "properties": state["properties"],
+        "readerFeatures": sorted(state["readerFeatures"]),
+        "txns": {app: sorted(ids) for app, ids in state["txns"].items()},
+    }
+    for f in glob.glob(os.path.join(t.path, "_txlog", "*.ckpt.parquet")):
+        os.remove(f)
+    with open(os.path.join(t.path, "_txlog", f"{head:08d}.ckpt.json"), "w") as fh:
+        json.dump(payload, fh)
+    fresh = TxTable(spark, t.path)
+    assert sorted(fresh.commit_timestamps()) == list(range(head + 1))
+    assert fresh.version_at(1002.5) == 2  # before the checkpoint
+    tick(7)  # next checkpoint at v7, its replay seeded from v4
+    assert "commitTimestamps" not in t._load_checkpoint_envelope(7)
+    again = TxTable(spark, t.path)
+    assert sorted(again.commit_timestamps()) == list(range(8))
+    assert again.version_at(1001.0) == 1
 
 #: (expression, passing row, violating row) — the pinned sink-
 #: compatibility matrix: every blessed CHECK form executes through

@@ -545,10 +545,11 @@ def test_cdf_read_does_not_need_superseded_files(spark, tmp_path):
 
 
 def test_version_planners_parse_each_commit_once(spark, tmp_path, monkeypatch):
-    """The append stream, the CDF stream and the batch CDF reader
-    classify commits through one per-version planner, which parses
-    each ``_txlog/<v>.json`` once per plan and advances its live
-    state from the same parse."""
+    """The append stream, the CDF stream, the batch CDF reader and
+    ``TxTable.changes`` walk the log the same way: one replay at the
+    range start, then each ``_txlog/<v>.json`` parsed once, classified
+    and folded from the same parse — so each commit opens once per
+    plan."""
     import builtins
     import collections
     import os as _os
@@ -573,6 +574,7 @@ def test_version_planners_parse_each_commit_once(spark, tmp_path, monkeypatch):
         ).partitions,
         "cdf stream": _TxLogStreamReader(t.path, cdf, {"readChangeFeed": "true"}).partitions,
         "batch cdf": lambda _start, _end: batch.partitions(),
+        "changes()": lambda _s, _e: t.changes(0),
     }
     opens: collections.Counter = collections.Counter()
     real_open = builtins.open
@@ -595,10 +597,11 @@ def test_batch_read_planning_replays_the_log_once_per_step(
 ):
     """Driver-side planning as Spark runs it — ``schema()`` →
     ``reader(schema)`` → ``pushFilters`` → ``partitions()`` — opens
-    each ``_txlog/<v>.json`` twice for a batch read (``schema()`` and
-    ``partitions()``; the reader takes its schema from ``reader()``)
-    and three times for a batch CDF read (plus the reader's
-    range-head column mapping)."""
+    each ``_txlog/<v>.json`` twice, for a batch read and for a batch
+    CDF read alike: once in ``schema()`` and once in ``partitions()``.
+    The reader takes its schema from ``reader()``, and the CDF
+    reader's range-head column mapping comes from the state its
+    ``partitions()`` walk folds, not from another replay."""
     import builtins
     import collections
     import os as _os
@@ -621,7 +624,7 @@ def test_batch_read_planning_replays_the_log_once_per_step(
     monkeypatch.setattr(builtins, "open", counting_open)
     for options, want in (
         ({}, 2),
-        ({"readchangefeed": "true", "startingversion": "0"}, 3),
+        ({"readchangefeed": "true", "startingversion": "0"}, 2),
     ):
         opens.clear()
         ds = TxLogDataSource({"path": t.path, **options})
