@@ -25,10 +25,6 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: metadata struct carried alongside every payload
-META_SCHEMA = "struct<modality:string,format:string,n_bytes:bigint>"
-
-
 def attach_payload_metadata(df: DataFrame, payload_col: str, modality: str, fmt: str) -> DataFrame:
     """Add the typed metadata struct for an opaque binary column."""
     return df.withColumn(
@@ -170,19 +166,6 @@ def pil_decode(payload: bytes) -> dict[str, Any]:  # pragma: no cover — PIL ab
 _JPEG_MAGIC = b"\xff\xd8"
 
 
-def jpeg_decode(payload: bytes) -> dict[str, Any]:
-    """REAL stdlib+numpy baseline-JPEG decoder (operators/jpeg.py):
-    SOF0, 8-bit, grayscale or YCbCr with up-to-2x2 sampling, restart
-    markers — decodes the libjpeg-produced sample images shipped with
-    the Spark distribution (pinned in tests/test_multimodal.py).
-    Outside the baseline subset (progressive SOF2, arithmetic coding)
-    it raises, which ``decode_payloads`` maps to the corrupt-row
-    convention. Closes VERDICT r12 item 5 (the last stubbed codec)."""
-    from .jpeg import jpeg_decode as _impl
-
-    return _impl(payload)
-
-
 def auto_decode(payload: bytes) -> dict[str, Any]:
     """Best-available decoder: PIL for any image format when
     importable; the stdlib PNG-subset / baseline-JPEG decoders for
@@ -199,6 +182,8 @@ def auto_decode(payload: bytes) -> dict[str, Any]:
         try:
             return pil_decode(payload)
         except ImportError:
+            from .jpeg import jpeg_decode
+
             return jpeg_decode(payload)
     return fake_decode(payload)
 

@@ -1,10 +1,10 @@
-"""Extended relational surface: as-of join, rollup, exact quantiles.
+"""Extended relational surface: as-of join, exact quantiles.
 
 Operators the reference lacks entirely but an analytics engine is
 expected to carry. Each is oracle-checked: DuckDB has a native ASOF
 JOIN (which pins our union–carry-forward construction against an
-independent implementation), plus ROLLUP and interpolating
-``quantile_cont`` matching Spark's ``rollup``/``percentile``.
+independent implementation), plus interpolating ``quantile_cont``
+matching Spark's ``percentile``.
 """
 
 from __future__ import annotations
@@ -59,24 +59,6 @@ def asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         payload_cols=["last_click_id", "last_click_value"],
     )
     return out.select("event_id", "user_id", "tms", "last_click_id", "last_click_value")
-
-
-# RETIRED (round 14, the r13-verdict cadence re-plan): ROLLUP is
-# grouping-sets sugar over the same physical operator (one Expand +
-# one hash aggregate) that ``grouping_sets_revenue`` (green r13)
-# oracle-gates in general form, with the same GROUPING()/grouping_id
-# and exact-decimal-sum shape — the identical argument that retired
-# ``cube_order_stats`` in round 11. The function stays (undecorated)
-# for test reuse and the record.
-def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical aggregates via ROLLUP: (flag, status), per-flag
-    subtotals, and the grand total in one pass — Spark plans a single
-    expand + hash aggregate, no multiple scans."""
-    return (
-        table(spark, sf_dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(exact_sum("l_extendedprice").alias("revenue"), F.count(F.lit(1)).alias("n"))
-    )
 
 
 @query(
@@ -444,42 +426,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED (round 14, the r13-verdict cadence re-plan): the numeric
-# RANGE-frame window over epoch-ms partitioned by user is exactly the
-# frame shape ``rolling_7d_active_users`` oracle-gates (in this
-# round's mandatory window — it was the named RANGE-frame carrier for
-# the round-13 ``running_total_orders`` retirement too); hour-grain
-# event bucketing is gated by ``hourly_peaks_events`` (green r13) and
-# the streaming sliding-window row. The function stays (undecorated)
-# for test reuse and the record.
-def rolling_hourly_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time RANGE-frame window: per user, how many of their
-    events fall in the trailing hour (inclusive). Numeric range frame
-    over epoch-ms — identical semantics in both engines (interval
-    frames are dialect traps; integer frames are not). Partitioned by
-    high-cardinality user_id: scale-safe."""
-    from pyspark.sql import Window
-
-    ev = table(spark, sf_dir, "events").select(
-        "user_id", "event_id", (F.unix_micros(F.col("ts")) / 1000).cast("long").alias("tms")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("tms")
-        .rangeBetween(-3600000, Window.currentRow)
-    )
-    return ev.withColumn("n_trailing_hour", F.count(F.lit(1)).over(w).cast("long"))
-
-
-# RETIRED (round 11): cube_order_stats. CUBE is grouping-sets sugar
-# over the same physical operator (Expand + one hash aggregate) that
-# grouping_sets_revenue exercises in general form and rollup_revenue
-# exercises hierarchically, with the same GROUPING()/grouping_id
-# oracle shape — three driver slots for one plan shape broke the
-# 170-query verify-cadence arithmetic (tests/test_registry_order.py).
-# tests/test_extra.py keeps a pytest-level cube pin.
-
-
 @query(
     "q17_small_quantity_revenue",
     sql="""
@@ -518,63 +464,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_sum("l_extendedprice").alias("total_price"),
         )
     )
-
-
-# RETIRED (round 14, forward smoothing for the r16 window): the
-# aggregate-then-full-outer-join + coalesce/zero-fill shape is
-# driver-gated by ``corpus_diff_documents`` (same full-outer physical
-# operator at high-cardinality doc_id grain with a richer four-state
-# finish; r15-mandatory) and by ``streaming_attribution_outer`` (the
-# watermark-bounded stream-stream full outer). The function stays
-# (undecorated) for test reuse and the record.
-def full_outer_nation_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-outer join surface: per-nation customer vs rich-supplier
-    presence, zero-filled on either missing side. Pre-aggregated
-    before the join, so the outer join touches ≤ |nations| rows per
-    side — the aggregate-then-join order is the scale move."""
-    c = (
-        table(spark, sf_dir, "customer")
-        .filter(F.col("c_acctbal") > 9800)
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-    s = (
-        table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") > 5000)
-        .groupBy(F.col("s_nationkey").alias("s_nationkey"))
-        .agg(F.count(F.lit(1)).alias("n_suppliers"))
-    )
-    j = c.join(s, c.nationkey == s.s_nationkey, "full_outer")
-    return j.select(
-        F.coalesce(c.nationkey, s.s_nationkey).alias("nationkey"),
-        F.coalesce("n_customers", F.lit(0)).cast("long").alias("n_customers"),
-        F.coalesce("n_suppliers", F.lit(0)).cast("long").alias("n_suppliers"),
-    )
-
-
-# RETIRED (round 13, the r12-verdict cadence re-plan): INTERSECT
-# compiles to the same distinct + left-semi physical shape that
-# ``set_except_nations`` (distinct + left-anti, same two tables, same
-# thresholds family) and ``semi_anti_customers`` keep driver-gated;
-# this row added no operator the catalog doesn't already verify. The
-# function stays (undecorated) for test reuse and the record.
-def intersect_active_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT surface (the set op next to set_except_nations):
-    nations with both a high-balance customer and a high-balance
-    supplier (thresholds keep the result non-empty at every
-    fixture SF — no vacuous oracle). Distinct semantics, single
-    shuffle per side."""
-    c = (
-        table(spark, sf_dir, "customer")
-        .filter(F.col("c_acctbal") > 8000)
-        .select(F.col("c_nationkey").alias("nationkey"))
-    )
-    s = (
-        table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") > 5000)
-        .select(F.col("s_nationkey").alias("nationkey"))
-    )
-    return c.intersect(s)
 
 
 @query(

@@ -386,35 +386,6 @@ def debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 
-# RETIRED (round 13, the r12-verdict cadence re-plan): the ordered
-# partitioned window is driver-gated by ``window_rank_per_group``,
-# running window state over an explicit frame by
-# ``rolling_7d_active_users`` (RANGE frame — the harder tie
-# semantics), and the cents-integer exact-sum idiom by
-# ``q1_pricing_summary`` (a frozen bench floor). A ROWS-framed
-# cumulative sum adds no machinery those rows don't already verify.
-# The function stays (undecorated) for test reuse and the record.
-def running_total_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative order revenue per customer in order-date order —
-    the running-balance window everybody's billing pipeline runs.
-    Cents-integer sums are exact; explicit ROWS framing (not the
-    RANGE default) pins identical tie semantics on both engines.
-    Partitioned on high-cardinality o_custkey: per-partition window
-    state is one customer's orders."""
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .over(w)
-        .alias("cum_cents"),
-    )
-
-
 # ---------------------------------------------------------------------
 # E102: bigram language-model quality score
 # ---------------------------------------------------------------------
@@ -1318,42 +1289,6 @@ def interval_coverage_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_islands"),
         F.sum(F.col("island_end") - F.col("island_start")).cast("long").alias("covered_ms"),
-    )
-
-
-# RETIRED (round 14, the r13-verdict cadence re-plan): a diagnostic
-# report whose machinery is fully gated elsewhere — generator unpivot
-# + map-side-combined two-level counts by ``column_stats_lineitem``
-# (green r13) and ``distinct_users_per_type`` (green r13), and the
-# salting remedy it measures for by ``skew_salted_event_counts``
-# (green r12). The function stays (undecorated) for test reuse and
-# the record.
-def skew_report_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnostic — for every candidate join key of the
-    fact table: distinct-value count, total rows, the hottest key's
-    row count, and its share. This is the report an engineer reads
-    BEFORE choosing broadcast/salting/AQE-skew settings for a 100 TB
-    join — the measurement half of the skew_salted_event_counts
-    remedy. One scan: the key columns unpivot through a generator, so
-    adding keys widens a struct array, not the number of passes; both
-    aggregations are map-side combined."""
-    li = table(spark, sf_dir, "lineitem")
-    kv = li.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(k).alias("key_name"), F.col(k).alias("key_val"))
-                    for k in ("l_orderkey", "l_partkey", "l_suppkey")
-                ]
-            )
-        ).alias("kv")
-    ).select("kv.key_name", "kv.key_val")
-    per_key = kv.groupBy("key_name", "key_val").agg(F.count(F.lit(1)).alias("c"))
-    return per_key.groupBy("key_name").agg(
-        F.count(F.lit(1)).alias("ndv"),
-        F.sum("c").cast("long").alias("n_rows"),
-        F.max("c").cast("long").alias("max_key_rows"),
-        (F.max("c").cast("double") / F.sum("c").cast("double")).alias("top_share"),
     )
 
 

@@ -1,13 +1,13 @@
-"""Multimodal-plumbing query: the Arrow-batched Python path under the
+"""Multimodal-plumbing queries: the Arrow-batched Python path under the
 hash gate.
 
 The corpus is synthesized from ``documents`` (UTF-8 payload bytes —
 the fixtures carry no real media), but the execution path is the real
-one: binary column + metadata struct → ``mapInPandas`` feature
-extraction (numpy over raw bytes). Because the fixture text is pure
-ASCII, the byte statistics have an exact SQL mirror (codepoint = byte
-value, integer sums are order-independent) — so this checks the
-Python/Arrow path itself against DuckDB, not just JVM expressions.
+one: binary column → ``mapInPandas`` decode / resize / frame work
+(numpy over raw bytes). Because the fixture text is pure ASCII, byte
+arithmetic has an exact SQL mirror (codepoint = byte value, integer
+sums are order-independent) — so this checks the Python/Arrow path
+itself against DuckDB, not just JVM expressions.
 """
 
 from __future__ import annotations
@@ -15,40 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.multimodal import attach_payload_metadata, byte_features
 from .queries import query
 from .tables import table
-
-
-# RETIRED (round 14, the r13-verdict cadence re-plan): the
-# mapInPandas/Arrow payload path this row hash-checked is now
-# driver-gated end-to-end by the STRONGER decode rows —
-# ``multimodal_decode_shapes`` (real PNG/JPEG codec, green r13) and
-# ``multimodal_phash_dedup``/``multimodal_resize_thumbnails`` (green
-# r13) run the same attach_payload_metadata → Arrow-batched UDF
-# plumbing plus an actual decode; the numpy byte stats stay pinned in
-# tests/test_multimodal.py (values + multi-partition distribution) on
-# this undecorated function.
-def multimodal_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload feature extraction through the real
-    mapInPandas/Arrow path: documents text encoded to bytes, typed
-    metadata attached, numpy byte stats per payload. The integer byte
-    sum makes the mean bit-stable, so the Python path hash-matches
-    the SQL mirror exactly."""
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    d = attach_payload_metadata(d, "payload", modality="image", fmt="fake/utf8")
-    feats = byte_features(d, "doc_id", "payload")
-    # mean recomputed JVM-side from the exact integer sum (numpy's
-    # float division is identical for sum/n; keep the contract explicit)
-    return feats.select(
-        "doc_id",
-        "n_bytes",
-        "byte_sum",
-        (F.col("byte_sum").cast("double") / F.col("n_bytes").cast("double")).alias("mean_byte"),
-        "max_byte",
-    )
 
 
 @query(

@@ -568,51 +568,6 @@ def quality_percentile_filter_documents(spark: SparkSession, sf_dir: str) -> Dat
 # =====================================================================
 
 
-# RETIRED (round 13, the r12-verdict cadence re-plan): a fixed-rule
-# bucket histogram with a window over the bucket rows. The bucketed
-# groupBy-histogram is the SURVEY §2 binned_agg core (driver-green
-# every round, incl. r12); the log-bucket + cumulative-over-buckets
-# shape on the documents table is driver-gated by
-# ``vocab_zipf_histogram`` (same length(bin(n))-1 idiom, same
-# aggregate-sized window). The function stays (undecorated) for test
-# reuse and the record.
-def length_histogram_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-count histogram in power-of-two buckets (⌊log₂ n⌋ via
-    the transcendental-free ``length(bin(n)) − 1`` idiom, E66) with
-    cumulative document mass — the length CDF a sequence-packing or
-    context-window planner reads before choosing chunk sizes. Scale
-    shape: the corpus reduces to ≤ ~30 bucket rows FIRST (map-side
-    combinable hash agg); the cumulative window and total-broadcast
-    run on that aggregate-sized frame — a global window, but over
-    buckets, never rows."""
-    d = spread(table(spark, sf_dir, "documents")).select(
-        T.token_count("text").alias("n_tokens")
-    )
-    b = d.groupBy(
-        (F.length(F.bin(F.greatest(F.col("n_tokens"), F.lit(1)))) - 1)
-        .cast("int")
-        .alias("bucket")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-    )
-    n = b.agg(F.sum("n_docs").alias("all_docs"))
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        b.crossJoin(F.broadcast(n))
-        .select(
-            "bucket",
-            "n_docs",
-            "total_tokens",
-            F.sum("n_docs").over(w).cast("long").alias("cum_docs"),
-            (
-                F.sum("n_docs").over(w).cast("double")
-                / F.col("all_docs").cast("double")
-            ).alias("cum_frac"),
-        )
-    )
-
-
 @query(
     "udaf_grouped_agg_chars",
     sql="""

@@ -459,80 +459,6 @@ def global_shuffle_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MIX_SEED = 11
-_MIX_WEIGHTS = {"src0": 2.5, "src1": 0.25, "src2": 1.5, "src3": 0.0}
-_MIX_DEFAULT = 1.0
-
-
-# RETIRED (round 14, the r13-verdict cadence re-plan): the
-# deterministic content-hash gate that decides every copy is the
-# machinery ``sample_stratified_documents`` and
-# ``train_val_test_split_documents`` oracle-gate (both in this
-# round's mandatory window); the ⌊w⌋-copies + fractional-copy explode
-# is a narrow generate pinned in tests/test_sampling.py
-# ``test_mixture_resample_copy_counts`` on operators/sampling.py
-# ``mixture_resample``, which stays. The function stays (undecorated)
-# for test reuse and the record.
-def mixture_resample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted mixture resampling with replacement — per-source
-    epoch weights made physical (src0×2.5, src1×0.25, src2×1.5,
-    src3 dropped, everything else ×1): ⌊w⌋ guaranteed copies plus a
-    content-hash-gated fractional copy. The corpus-mixing pass of
-    every LLM data recipe, deterministic under retry/AQE/engine.
-    Narrow plan: hash → explode, no shuffle
-    (operators/sampling.py)."""
-    from .operators.sampling import mixture_resample
-
-    out = mixture_resample(
-        table(spark, sf_dir, "documents").select("doc_id", "source"),
-        "doc_id",
-        "source",
-        _MIX_WEIGHTS,
-        seed=_MIX_SEED,
-        default=_MIX_DEFAULT,
-    )
-    return out.select("doc_id", "source", F.col("copy_id").cast("long").alias("copy_id"))
-
-
-# RETIRED (round 13, the r12-verdict cadence re-plan): build a
-# document-frequency table (shuffle on token), integer-threshold it,
-# broadcast it back onto the token stream, aggregate per doc_id —
-# machinery driver-gated by ``vocab_oov_rate_documents`` (same plan,
-# opposite threshold direction; in this round's mandatory window) and
-# ``keywords_per_document``. The function stays (undecorated) for
-# test reuse and the record.
-def rare_token_quality_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-relative quality scoring: per document, how many of its
-    distinct tokens are corpus-RARE (document frequency < 30% of
-    docs — the integer form 10·df < 3·N keeps the comparison exact).
-    High rare-fraction flags gibberish/noise the way an LM-perplexity
-    filter would, but transcendental-free (ln() is not bit-identical
-    across engines; integer counts and one IEEE division are). The
-    doc-frequency table is vocabulary-sized — broadcast to the token
-    stream (no corpus shuffle); per-doc aggregation keys on doc_id."""
-    from .tables import spread
-
-    d = spread(table(spark, sf_dir, "documents")).select(
-        "doc_id", T.tokens("text").alias("__t")
-    )
-    tok = d.select("doc_id", F.explode(F.array_distinct("__t")).alias("token"))
-    dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("dfq"))
-    n = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    rare = (F.lit(10) * F.col("dfq") < F.lit(3) * F.col("n_docs")).cast("long")
-    return (
-        tok.join(F.broadcast(dfreq), "token")
-        .crossJoin(F.broadcast(n))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.sum(rare).alias("n_rare"),
-            (
-                F.sum(rare).cast("double") / F.count(F.lit(1)).cast("double")
-            ).alias("rare_frac"),
-        )
-    )
-
-
 # =====================================================================
 # deduplication
 # =====================================================================
@@ -942,33 +868,6 @@ def grouped_lang_stats_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED (round 13, the r12-verdict cadence re-plan): the two-phase
-# salted grouped_topk operator this row gated (operators/topk.py) is
-# driver-gated by ``top_k_orders``; per-source capping as a sampling
-# policy is carried by the driver-gated stratified / weighted /
-# mixture sampling rows. The function stays (undecorated) for test
-# reuse and the record.
-def quota_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain quota capping: keep the 10 longest documents per
-    source — the per-domain cap every curation pipeline applies so no
-    single crawl host dominates the corpus. Two-phase salted top-k
-    (operators/topk.py), so a hot domain with millions of docs never
-    sorts inside one task; the oracle stays the plain window SQL."""
-    from .operators.topk import grouped_topk
-    from .tables import spread
-
-    d = spread(table(spark, sf_dir, "documents")).select(
-        "doc_id", "source", T.token_count("text").alias("n_tokens")
-    )
-    return grouped_topk(
-        d,
-        ["source"],
-        [F.col("n_tokens").desc(), F.col("doc_id")],
-        10,
-        salt_col=F.col("doc_id"),
-    ).select("doc_id", "source", "n_tokens", "rn")
-
-
 # =====================================================================
 # vocabulary coverage / OOV rate (E83)
 # =====================================================================
@@ -1049,74 +948,6 @@ def vocab_oov_rate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 # pairwise source similarity via per-source MinHash signatures (E90)
 # =====================================================================
-
-
-# RETIRED (round 14, forward smoothing for the r16 window): the
-# 32-bit shingle hashing and the (a·h+b) mod p permutation family are
-# driver-gated by the headline ``dedup_minhash_documents`` (whose
-# oracle replays shingles, the coefficient family, and the per-doc
-# minima every round it runs); the per-source reduction is one
-# associative MIN to |sources| rows and the |sources|² compare is a
-# tiny-frame finish; exact-Jaccard truth stays with
-# ``ngram_jaccard_pairs`` (this round's window). The function stays
-# (undecorated) for test reuse and the record.
-def source_similarity_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise corpus-slice similarity: one MinHash signature PER
-    SOURCE (component i = min of the i-th permutation over the union
-    of the source's doc shingles — min is associative, so the
-    per-source signature is just ``MIN`` over per-doc minima), then
-    estimated shingle-Jaccard between sources = fraction of agreeing
-    components. The dataset-overlap dashboard a corpus curator checks
-    before mixing sources. Scale shape: per-doc signatures are a
-    narrow projection (shared machinery with E2); the per-source
-    reduction is a map-side-combinable MIN to |sources| rows; the
-    pairwise compare is |sources|² on a tiny frame. The corpus never
-    self-joins."""
-    from .operators.dedup import (
-        MINHASH_P,
-        _mh_coeffs,
-        shingle_hashes32,
-        shingle_set,
-    )
-
-    from .tables import spread
-
-    num_hashes = 16
-    d = spread(table(spark, sf_dir, "documents")).select(
-        "source", shingle_hashes32(shingle_set("text", 3)).alias("__h32")
-    )
-
-    # one-arg closure per family member: a two-parameter lambda would
-    # make F.transform pass the ARRAY INDEX as the second argument,
-    # silently replacing the coefficient selector
-    def _family(i: int):
-        a, b = _mh_coeffs(i)
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    per_doc = d.select(
-        "source",
-        *[
-            F.array_min(F.transform("__h32", _family(i))).alias(f"m{i}")
-            for i in range(num_hashes)
-        ],
-    )
-    sig = per_doc.groupBy("source").agg(
-        *[F.min(f"m{i}").alias(f"m{i}") for i in range(num_hashes)]
-    )
-    a, b = sig.alias("a"), sig.alias("b")
-    agree = sum(
-        F.when(F.col(f"a.m{i}") == F.col(f"b.m{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    )
-    return (
-        a.join(F.broadcast(b), F.col("a.source") < F.col("b.source"))
-        .select(
-            F.col("a.source").alias("source_a"),
-            F.col("b.source").alias("source_b"),
-            agree.cast("long").alias("n_agree"),
-            (agree.cast("double") / F.lit(float(num_hashes))).alias("sim_est"),
-        )
-    )
 
 
 @query(
@@ -1337,52 +1168,6 @@ def collocations_by_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         20,
         salt_col=F.abs(F.hash("w1", "w2")),
     ).select("w1", "w2", "c_ab", "lift", "rn")
-
-
-# RETIRED (round 13, the r12-verdict cadence re-plan):
-# pure-expression per-document scoring from deterministic regex/count
-# inputs is driver-gated by ``text_stats_documents`` and
-# ``text_quality_by_lang`` (same normalize -> count -> one-double
-# formula family, same table); no shuffle, no operator of its own.
-# The Flesch-Kincaid arithmetic stays pinned on this undecorated
-# function in the pytest suite and the record.
-def readability_scores_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch–Kincaid grade-level readability per document — the
-    classic filter corpora apply to bucket text by complexity. All
-    three inputs are deterministic integer counts (whitespace words,
-    sentence-ending punctuation runs clamped to ≥1, vowel-group
-    syllable approximation clamped to ≥1 per word), so the one double
-    formula evaluates bit-identically on both engines (literals via
-    the CAST-string route, same operation order).
-
-    Purely narrow — one projection over the scan, no shuffle; the
-    counts are regex work inside whole-stage codegen."""
-    nt = T.normalize_text("text")
-    toks = F.split(nt, " ")
-    syll = F.aggregate(
-        F.transform(
-            toks,
-            lambda w: F.greatest(F.size(F.regexp_extract_all(w, F.lit("[aeiou]+"), 0)), F.lit(1)),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.size(toks).cast("long").alias("n_words"),
-        F.greatest(F.size(F.regexp_extract_all(nt, F.lit("[.!?]+"), 0)), F.lit(1))
-        .cast("long")
-        .alias("n_sentences"),
-        syll.cast("long").alias("n_syllables"),
-    )
-    w, s, y = [F.col(c).cast("double") for c in ("n_words", "n_sentences", "n_syllables")]
-    return d.select(
-        "doc_id",
-        "n_words",
-        "n_sentences",
-        "n_syllables",
-        (F.lit(0.39) * (w / s) + F.lit(11.8) * (y / w) - F.lit(15.59)).alias("fk_grade"),
-    )
 
 
 # E123 (minhash_banding_eval, precision/recall of the LSH candidate

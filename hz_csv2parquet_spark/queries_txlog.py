@@ -25,8 +25,6 @@ footer-stat registration and log JSON — O(files), not O(rows).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,45 +40,6 @@ def _orders_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
-    )
-
-
-# RETIRED (round 12, late — the catalog-slack pairing for E177
-# txlog_identity_merge_events below, the same pattern as the E175/
-# E176 retirements): the plain snapshot read this row gated is the
-# TERMINAL STEP of every other txlog driver row — time_travel reads
-# as_of=0 AND builds through the same create+append replay,
-# merge_read / dv_delete_read / restore_read / reorg_purge /
-# update_rename_cdf all finish in ``t.snapshot()`` aggregates, and
-# E177 itself snapshot-reads twice (as_of and head) through the
-# checkpointed replay branch. Retiring the standalone row loses no
-# unique machinery; the function stays (undecorated) for
-# tests/test_txlog.py-style reuse and for the record.
-def txlog_snapshot_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-commit build (create even keys, blind-append odd keys),
-    then aggregate through the replayed snapshot. A hash match proves
-    the log's live-file reconstruction (adds across versions, schema
-    meta, checkpoint replay path) loses/duplicates nothing vs the
-    plain fixture. checkpoint_interval=1 forces the checkpointed
-    replay branch, not just the full-log fallback."""
-    oc = _orders_cents(spark, sf_dir)
-    t = TxTable(
-        spark,
-        scratch_dir("hz_txq_snap_"),
-        stat_cols=["o_orderkey"],
-        checkpoint_interval=1,
-    )
-    t.create(oc.filter(F.col("o_orderkey") % 2 == 0))
-    t.append(oc.filter(F.col("o_orderkey") % 2 == 1))
-    return (
-        t.snapshot()
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("price_cents").alias("cents_sum"),
-            F.min("o_orderkey").alias("min_key"),
-            F.max("o_orderkey").alias("max_key"),
-        )
     )
 
 
@@ -520,61 +479,6 @@ def txlog_dv_delete_read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("src").alias("n_src"),
         )
     )
-
-
-# RETIRED (round 14, the r13-verdict cadence re-plan): each leg is
-# driver-gated by a greener txlog row — dv masking + sidecar staging
-# by ``txlog_dv_delete_read_events`` (in this round's mandatory
-# window), cdc-sidecar change feeds by ``txlog_update_rename_cdf_
-# events`` and ``txlog_cdf_stream_events`` (the latter in this
-# round's window), hive partitioning by ``txlog_generated_partition_
-# events``. The two-generation interactions this row uniquely staged
-# (vector UNION on shared files, partition-column delete resolution,
-# dv+cdf+partition vacuum) are pinned in tests/test_txlog.py
-# (test_partitioned_dv_delete, test_delete_rebase_extends_cdc_and_dv_
-# for_interleaved_files, test_vacuum_interaction_on_partitioned_dv_
-# cdf_table). Also the catalog's 3rd-most-expensive row (8.1 s at
-# sf0.1 — a 5-commit lifecycle build). The function stays
-# (undecorated) for test reuse and the record.
-def txlog_dv_cdf_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E168 (VERDICT r10 #6): deletion vectors + change-data feed +
-    hive partitioning COMBINED — the shape every real GDPR-erasure
-    table runs. Create events partitioned by event_type on a
-    ``deletion_vectors=True, change_data=True`` table (v0), DELETE
-    every fifth event (v1: one position sidecar per touched file in
-    every partition, cdc sidecars in the same commit — zero data
-    files rewritten), then DELETE with a predicate ON THE PARTITION
-    COLUMN (v2: detection must resolve partition values from the
-    log, and the new vectors must UNION with v1's on shared files,
-    emitting only the not-yet-masked rows to the feed). Returns the
-    raw ``changes()`` feed; the oracle states both change sets
-    declaratively — a hash match proves the dv masking, the cdc
-    sidecar staging, and the partition-value reconstruction agree
-    row-for-row across two interacting delete generations.
-
-    Scale: deletes cost O(deleted positions) sidecar bytes; the feed
-    reads only cdc sidecars, never data files; partition values ride
-    the log (reference: this is beyond hz_csv2parquet's single-shot
-    pandas model entirely — cited for the §2 'beyond' ledger)."""
-    ev = table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    t = TxTable(
-        spark,
-        scratch_dir("hz_txq_dvcdfp_"),
-        stat_cols=["event_id"],
-        deletion_vectors=True,
-        change_data=True,
-    )
-    t.create(
-        ev.repartitionByRange(2, "event_id").sortWithinPartitions("event_id"),
-        partition_by=["event_type"],
-    )
-    t.delete_where("event_id % 5 = 0")
-    t.delete_where("event_type = 'click' AND event_id % 3 = 0")
-    return t.changes(0)
 
 
 @query(

@@ -2255,15 +2255,18 @@ class TxTable:
         protocol's rule: a blind append reads nothing, so nothing it
         read can have changed) — so a lost version race is resolved
         here by REBASING: stage once, then re-commit against the fresh
-        head until the O_EXCL create wins. Callers never see
-        :class:`CommitConflictError` from an append; operations that
-        *read* the snapshot (merge, compact) still surface it, because
-        their staged rewrite may be stale.
+        head until the O_EXCL create wins. An append does read the
+        table's CHECK constraints and generated columns, so a racing
+        commit that changed either raises :class:`CommitConflictError`
+        (Delta's rule: a metadata change conflicts with every
+        concurrent write); operations that *read* the snapshot (merge,
+        compact) surface it too, because their staged rewrite may be
+        stale.
 
-        The rebase is :meth:`_rebase_commit` with nothing to
-        revalidate: bounded (64 attempts, jittered backoff growing to
-        ~50 ms) rather than spin-forever; past the cap the conflict
-        surfaces and the caller owns the policy."""
+        The rebase is :meth:`_rebase_commit`: bounded (64 attempts,
+        jittered backoff growing to ~50 ms) rather than spin-forever;
+        past the cap the conflict surfaces and the caller owns the
+        policy."""
         base_v = self.version()
         state = self._replay_state(as_of=base_v)
         self._check_writer_features(state)
@@ -2280,7 +2283,47 @@ class TxTable:
         adds = self._stage(
             df, state["partitionColumns"], mapping=state.get("columnMapping")
         )
-        return self._rebase_commit(adds, operation="APPEND")
+        return self._rebase_commit(
+            adds,
+            operation="APPEND",
+            base=base_v,
+            revalidate=self._enforced_meta_unchanged(state),
+        )
+
+    def _enforced_meta_unchanged(self, state: dict):
+        """Rebase check for a write that enforced ``state``'s CHECK
+        constraints and generated columns: a head where either moved
+        conflicts, since the staged rows were never checked against
+        it; otherwise the adds rebase unchanged."""
+
+        def revalidate(actions: list[dict], head: dict) -> list[dict]:
+            if any(head.get(k) != state.get(k) for k in ("constraints", "generated")):
+                raise CommitConflictError(
+                    "a concurrent commit changed the constraints or generated "
+                    f"columns of {self.path} this write enforced"
+                )
+            return actions
+
+        return revalidate
+
+    def _validated_files_unchanged(self, state: dict, operation: str):
+        """Rebase check for a constraint verb that validated exactly
+        the files live at ``state``: any head whose live files differ
+        (a new append included) or whose meta moved conflicts, since
+        its rows were never checked against the new constraint."""
+
+        def revalidate(actions: list[dict], head: dict) -> list[dict]:
+            if (
+                not self._read_set_intact(state, head)
+                or head["adds"].keys() != state["adds"].keys()
+            ):
+                raise CommitConflictError(
+                    f"a concurrent commit changed the files this {operation} "
+                    "validated"
+                )
+            return actions
+
+        return revalidate
 
     _REBASE_ATTEMPTS = 64
 
@@ -2393,7 +2436,8 @@ class TxTable:
         from pyspark.errors import AnalysisException
         from pyspark.sql.types import StructType
 
-        state = self._replay_state()
+        base = self.version()
+        state = self._replay_state(as_of=base)
         self._check_writer_features(state)
         if name in state.get("constraints", {}):
             raise ValueError(f"constraint {name!r} already exists")
@@ -2439,12 +2483,16 @@ class TxTable:
         return self._rebase_commit(
             [{"meta": {"constraints": {name: expr}}}],
             operation="ADD-CONSTRAINT",
+            base=base,
+            revalidate=self._validated_files_unchanged(state, "ADD-CONSTRAINT"),
         )
 
     def drop_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT (None value in the meta action
         removes it on replay)."""
-        if name not in self._replay_state().get("constraints", {}):
+        state = self._replay_state()
+        self._check_writer_features(state)
+        if name not in state.get("constraints", {}):
             raise ValueError(f"no such constraint: {name!r}")
         return self._rebase_commit(
             [{"meta": {"constraints": {name: None}}}],
@@ -2468,7 +2516,8 @@ class TxTable:
         table this verb is pure driver-side log arithmetic."""
         from pyspark.sql.types import StructType
 
-        state = self._replay_state()
+        base = self.version()
+        state = self._replay_state(as_of=base)
         self._check_writer_features(state)
         schema = StructType.fromJson(json.loads(state["schema"]))
         if col not in {f.name for f in schema.fields}:
@@ -2512,12 +2561,16 @@ class TxTable:
         return self._rebase_commit(
             [{"meta": {"constraints": {name: f"{col} IS NOT NULL"}}}],
             operation="SET-NOT-NULL",
+            base=base,
+            revalidate=self._validated_files_unchanged(state, "SET-NOT-NULL"),
         )
 
     def drop_not_null(self, col: str) -> int:
         """ALTER TABLE ... ALTER COLUMN <col> DROP NOT NULL."""
         name = f"nn_{col}"
-        if name not in self._replay_state().get("constraints", {}):
+        state = self._replay_state()
+        self._check_writer_features(state)
+        if name not in state.get("constraints", {}):
             raise ValueError(f"column {col!r} has no NOT NULL constraint")
         return self._rebase_commit(
             [{"meta": {"constraints": {name: None}}}],
@@ -2724,7 +2777,11 @@ class TxTable:
         # a twin winning the race makes this a None no-op; the staged
         # files are vacuum-able orphans
         return self._rebase_commit(
-            actions, "STREAMING-APPEND", base=base_v, txn=(app_id, batch_id)
+            actions,
+            "STREAMING-APPEND",
+            base=base_v,
+            txn=(app_id, batch_id),
+            revalidate=self._enforced_meta_unchanged(state),
         )
 
     def foreach_batch_writer(self, app_id: str):

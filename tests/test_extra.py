@@ -171,7 +171,7 @@ def test_checksum_is_sensitive_to_single_value_changes(spark, sf_dir, tmp_path):
 def test_cube_matches_duckdb(spark, sf_dir):
     """CUBE stays covered at pytest level after its driver-catalog
     retirement (round 11: grouping-sets sugar over the same Expand +
-    hash-agg plan as grouping_sets_revenue / rollup_revenue)."""
+    hash-agg plan as grouping_sets_revenue)."""
     from hz_csv2parquet_spark.tables import table
     from tests.oracle_utils import compare, duck_con
 

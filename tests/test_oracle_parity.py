@@ -1,6 +1,6 @@
 """Every catalog query vs its DuckDB oracle — the driver's t2 gate,
-run locally at sf0.001 (set HZ_ORACLE_SF_DIR=/root/testdata/sf0.01
-for the full-size check)."""
+run locally at sf0.001 (point HZ_PARITY_SF_DIR at the sf0.01 fixture
+directory for the full-size check)."""
 
 from __future__ import annotations
 

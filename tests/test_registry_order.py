@@ -14,6 +14,8 @@ When a new round's CORRECTNESS file lands, every check recomputes."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import random
 import subprocess
@@ -310,3 +312,38 @@ def test_history_is_read_on_call_not_at_import():
         [sys.executable, "-c", probe], cwd=REPO, capture_output=True, text=True, check=True
     ).stdout.split()
     assert out[0] == "0" and int(out[1]) > 0, out
+
+
+def _test_imports() -> set[tuple[str, str]]:
+    """``(module, name)`` for every ``from <module> import <name>`` in ``tests/``."""
+    found = set()
+    for path in glob.glob(os.path.join(REPO, "tests", "*.py")):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                found |= {(node.module, alias.name) for alias in node.names}
+    return found
+
+
+def test_every_query_function_is_registered_or_imported_by_a_test():
+    """A public top-level ``(spark, sf_dir)`` function in a query module is
+    either a registered query or a retired one that a test still imports;
+    a retired function nothing imports is dead code and goes. Private
+    ``_`` helpers with the same signature are left to their callers."""
+    registered = {(q.fn.__module__, q.fn.__name__) for q in REGISTRY.values()}
+    reachable = registered | _test_imports()
+    unreachable = []
+    for path in sorted(glob.glob(os.path.join(REPO, "hz_csv2parquet_spark", "queries*.py"))):
+        module = "hz_csv2parquet_spark." + os.path.basename(path)[: -len(".py")]
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        for node in tree.body:
+            if (
+                isinstance(node, ast.FunctionDef)
+                and not node.name.startswith("_")
+                and [a.arg for a in node.args.args] == ["spark", "sf_dir"]
+                and (module, node.name) not in reachable
+            ):
+                unreachable.append(f"{module}.{node.name}")
+    assert not unreachable, f"query functions nothing registers or imports: {unreachable}"

@@ -168,6 +168,8 @@ def test_generated_column_itself_renames_and_drops(spark, tmp_path):
 def test_writer_feature_gate_blocks_unaware_writers(spark, tmp_path):
     t = TxTable(spark, str(tmp_path / "t"))
     t.create(_frame(spark))
+    t.add_constraint("pos", "event_id >= 0")
+    t.set_not_null("event_id")
     t._commit(
         [{"meta": {"writerFeatures": ["futureWriterFeature"]}}],
         t.version(),
@@ -181,6 +183,8 @@ def test_writer_feature_gate_blocks_unaware_writers(spark, tmp_path):
         lambda: fresh.compact(),
         lambda: fresh.set_properties(changeDataFeed=True),
         lambda: fresh.rename_column("value", "v2"),
+        lambda: fresh.drop_constraint("pos"),
+        lambda: fresh.drop_not_null("event_id"),
     ):
         with pytest.raises(TableFeatureError, match="writer features"):
             verb()

@@ -1457,6 +1457,60 @@ def test_merge_schema_write_conflicts_with_racing_evolve_schema(
     assert t.snapshot().count() == 5
 
 
+_CONSTRAINT_VERBS = {
+    "add_constraint": (lambda t: t.add_constraint("pos", "v > 0"), "pos", -5),
+    "set_not_null": (lambda t: t.set_not_null("v"), "nn_v", None),
+}
+
+
+def _positive_table(spark, tmp_path):
+    t = TxTable(spark, str(tmp_path / "tbl"))
+    t.create(spark.createDataFrame([(1, 1), (2, 2)], "k long, v long"))
+    return t
+
+
+@pytest.mark.parametrize("verb", sorted(_CONSTRAINT_VERBS))
+def test_constraint_verb_racing_a_violating_append_conflicts(
+    spark, tmp_path, monkeypatch, verb
+):
+    """A violating append wins the version a constraint verb was about
+    to take: the verb validated the files live before the append, so
+    it must conflict instead of landing over a row it never checked."""
+    from hz_csv2parquet_spark.sources.txlog import CommitConflictError
+
+    add, name, bad_v = _CONSTRAINT_VERBS[verb]
+    t = _positive_table(spark, tmp_path)
+    bad = spark.createDataFrame([(3, bad_v)], "k long, v long")
+    fired = _racing_commit(monkeypatch, lambda: TxTable(spark, t.path).append(bad))
+    with pytest.raises(CommitConflictError, match="validated"):
+        add(t)
+    assert fired["n"] == 1
+    assert name not in t.constraints()
+    assert t.snapshot().count() == 3
+
+
+@pytest.mark.parametrize("write", ["append", "append_batch"])
+def test_append_racing_a_constraint_conflicts(spark, tmp_path, monkeypatch, write):
+    """A constraint wins the version a violating append was about to
+    take: the append enforced the constraints it replayed, so it must
+    conflict instead of landing a row the new constraint forbids."""
+    from hz_csv2parquet_spark.sources.txlog import CommitConflictError
+
+    t = _positive_table(spark, tmp_path)
+    bad = spark.createDataFrame([(3, -5)], "k long, v long")
+    fired = _racing_commit(
+        monkeypatch, lambda: TxTable(spark, t.path).add_constraint("pos", "v > 0")
+    )
+    with pytest.raises(CommitConflictError, match="enforced"):
+        if write == "append":
+            t.append(bad)
+        else:
+            t.append_batch(bad, "job", 0)
+    assert fired["n"] == 1
+    assert t.constraints() == {"pos": "v > 0"}
+    assert t.snapshot().filter("v <= 0").count() == 0
+
+
 def test_txlog_source_planning_is_sessionless():
     """Tooling guard: Spark 4.1 calls ``DataSource.reader()`` and
     plans partitions in a Python worker with no SparkSession, so a
